@@ -12,7 +12,11 @@ compression").
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+
+from probe_spark.index.xxhash import spark_bucket
 
 _MASK = np.uint64(0x7F)
 _CONT = np.uint64(0x80)
@@ -355,117 +359,216 @@ def decode_postings(docs_bin: bytes, dl_bin: bytes):
     return doc_ids, dls
 
 
-def raw_doc_ids(
-    index_path: str,
-    n_buckets: int,
-    terms: list[str],
-    max_df: int = 5_000_000,
-) -> "np.ndarray | None":
-    """Driver-side decode of the raw-word posting lists for ``terms``:
-    sorted unique doc_ids, or None when the caller must use the
-    distributed path instead (index not POSIX-visible, or the lists
-    exceed ``max_df`` — at 10^12-doc scale an excluded hot word's raw
-    postings don't fit on the driver).
+class IndexChangedError(RuntimeError):
+    """A postings file was rewritten, replaced or removed after a
+    :class:`PostingsDirectory` cached its footer (``vacuum``, ``merge``,
+    ``compact`` or a rebuild ran under a live searcher)."""
 
-    A term's raw postings are a few KB-MB of varint bytes in one bucket
-    directory; reading them with pyarrow costs milliseconds, versus
-    ~1.5s of job scheduling + Python-worker overhead for the equivalent
-    two-task Spark job.  Row-group pruning on the term column mirrors
-    the pruning the Spark plan gets from the bucket+term filter.
-    """
-    import os
 
-    index_path = index_path.removeprefix("file://")
-    base = os.path.join(index_path, "postings", "kind=raw")
-    if not os.path.isdir(base):
-        return None
-    import pyarrow.dataset as ds
+def _identity(st: os.stat_result) -> tuple[int, int, int]:
+    return (st.st_size, st.st_mtime_ns, st.st_ino)
 
-    from probe_spark.index.xxhash import spark_bucket
 
-    buckets: dict[int, list[str]] = {}
-    for t in terms:
-        buckets.setdefault(spark_bucket(t, n_buckets), []).append(t)
-    parts: list[np.ndarray] = []
-    total = 0
-    for bucket, bterms in sorted(buckets.items()):
-        d = os.path.join(base, f"bucket={bucket}")
-        if not os.path.isdir(d):
-            continue
-        files = [
-            os.path.join(d, fn)
-            for fn in sorted(os.listdir(d))
-            if fn.endswith(".parquet")
-        ]
-        if not files:
-            continue
-        dataset = ds.dataset(files, format="parquet")
-        # cheap cardinality gate before decoding any bytes
-        meta = dataset.to_table(
-            columns=["df_seg"], filter=ds.field("term").isin(bterms)
+class _PostingsFile:
+    """One postings parquet file: its identity when the footer was parsed,
+    the footer, and each row group's ``term`` (min, max) — None when the
+    row group carries no usable statistics, so it is always read."""
+
+    __slots__ = ("path", "identity", "metadata", "ranges")
+
+    def __init__(self, path: str):
+        import pyarrow.parquet as pq
+
+        self.path = path
+        with open(path, "rb", buffering=0) as fh:
+            self.identity = _identity(os.fstat(fh.fileno()))
+            md = pq.ParquetFile(fh).metadata
+        self.metadata = md
+        ci = next(
+            i for i in range(md.num_columns)
+            if md.schema.column(i).path == "term"
         )
-        total += sum(meta["df_seg"].to_pylist())
-        if total > max_df:
+        self.ranges: list[tuple[str, str] | None] = []
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(ci).statistics
+            ok = (
+                st is not None
+                and st.has_min_max
+                and isinstance(st.min, str)
+                and isinstance(st.max, str)
+            )
+            self.ranges.append((st.min, st.max) if ok else None)
+
+    def read(self, terms: list[str], columns: list[str]):
+        """``columns`` of the rows whose term is in ``terms``, in row order,
+        reading only the row groups whose statistics admit one of them
+        (None when none does).  The handle's identity is re-checked
+        against the cached footer's before any byte is read."""
+        groups = [
+            g for g, r in enumerate(self.ranges)
+            if r is None or any(r[0] <= t <= r[1] for t in terms)
+        ]
+        if not groups:
             return None
-        table = dataset.to_table(
-            columns=["docs_bin"], filter=ds.field("term").isin(bterms)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        try:
+            fh = open(self.path, "rb", buffering=0)
+        except FileNotFoundError:
+            raise self._changed() from None
+        with fh:
+            if _identity(os.fstat(fh.fileno())) != self.identity:
+                raise self._changed()
+            table = pq.ParquetFile(fh, metadata=self.metadata).read_row_groups(
+                groups,
+                columns=columns if "term" in columns else ["term", *columns],
+                use_threads=False,
+            )
+        col = table.column("term")
+        if len(terms) == 1:
+            mask = pc.equal(col, terms[0])
+        else:
+            mask = pc.is_in(col, value_set=pa.array(terms, col.type))
+        return table.filter(mask).select(columns)
+
+    def _changed(self) -> IndexChangedError:
+        return IndexChangedError(
+            f"postings file {self.path} changed under the searcher; "
+            "open a new searcher (or refresh the engine) on the index"
         )
-        for buf in table["docs_bin"].to_pylist():
-            ids, _ = decode_postings(buf, b"")
-            parts.append(ids)
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    return np.unique(np.concatenate(parts))
 
 
-def local_tok_segments(
-    index_path: str,
-    n_buckets: int,
-    terms: list[str],
-    columns: list[str],
-):
-    """Driver-side pyarrow read of token-postings segment rows for
-    ``terms`` — the metadata plane of a POSIX-visible index.
+class PostingsDirectory:
+    """Term directory over an index's ``postings/kind=*/bucket=*`` files —
+    the one driver-side reader of segment rows (``LocalSearcher``'s
+    postings fetch, the engine's raw-word repair ids and its token-segment
+    metadata plane).
 
-    Same rationale as :func:`raw_doc_ids`: a query's per-term metadata
-    (df_seg, block maxima, segment addresses) is KB-MB of columnar data
-    inside the term's single hash-bucket directory; reading it with
-    pyarrow costs milliseconds where the equivalent two-task Spark
-    collect pays ~0.3s of job scheduling — per COLD query.  The engine
-    falls back to the Spark collect when this returns None (index not
-    POSIX-visible), so the distributed path remains the at-scale shape
-    for object stores.
-
-    Returns a list of pyarrow-backed dict rows (name-indexable like Spark
-    Rows), or None.
+    Each bucket directory is listed once, on first use, and each file's
+    footer is parsed once with its row-group ``term`` statistics.  A term
+    lookup then opens only the files of the term's hash bucket, reads only
+    the row groups whose min/max admit the term (the pruning the Spark
+    plan gets from the bucket + term filter) and selects the term's rows
+    with an equality mask — no dataset discovery and no footer parse per
+    lookup.  The listing is a snapshot: files added later are not seen,
+    and a cached file rewritten or removed since raises
+    :class:`IndexChangedError` instead of yielding rows.
     """
-    import os
 
-    index_path = index_path.removeprefix("file://")
-    base = os.path.join(index_path, "postings", "kind=tok")
-    if not os.path.isdir(base):
-        return None
-    import pyarrow.dataset as ds
+    def __init__(self, index_path: str, n_buckets: int):
+        self.root = os.path.join(index_path.removeprefix("file://"), "postings")
+        self.n_buckets = n_buckets
+        self._buckets: dict[tuple[str, int], list[_PostingsFile]] = {}
 
-    from probe_spark.index.xxhash import spark_bucket
+    def has_kind(self, kind: str) -> bool:
+        """True iff ``kind``'s postings are POSIX-visible here."""
+        return os.path.isdir(os.path.join(self.root, f"kind={kind}"))
 
-    buckets: dict[int, list[str]] = {}
-    for t in terms:
-        buckets.setdefault(spark_bucket(t, n_buckets), []).append(t)
-    rows: list[dict] = []
-    for bucket, bterms in sorted(buckets.items()):
-        d = os.path.join(base, f"bucket={bucket}")
-        if not os.path.isdir(d):
-            continue
-        files = [
-            os.path.join(d, fn)
-            for fn in sorted(os.listdir(d))
-            if fn.endswith(".parquet")
-        ]
-        if not files:
-            continue
-        table = ds.dataset(files, format="parquet").to_table(
-            columns=columns, filter=ds.field("term").isin(bterms)
+    def _files(self, kind: str, bucket: int) -> list[_PostingsFile]:
+        # threads sharing an engine may race a bucket's first listing:
+        # each stores a complete list, so the race costs a re-listing only
+        files = self._buckets.get((kind, bucket))
+        if files is None:
+            d = os.path.join(self.root, f"kind={kind}", f"bucket={bucket}")
+            names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+            files = [
+                _PostingsFile(os.path.join(d, fn))
+                for fn in names
+                if fn.endswith(".parquet")
+            ]
+            self._buckets[(kind, bucket)] = files
+        return files
+
+    def segments(self, kind: str, terms: list[str], columns: list[str]) -> list:
+        """Segment rows of ``terms`` as one pyarrow table per file holding
+        any: buckets ascending, then file name, then row order."""
+        by_bucket: dict[int, list[str]] = {}
+        for t in terms:
+            by_bucket.setdefault(spark_bucket(t, self.n_buckets), []).append(t)
+        out = []
+        for bucket, bterms in sorted(by_bucket.items()):
+            for f in self._files(kind, bucket):
+                table = f.read(bterms, columns)
+                if table is not None and table.num_rows:
+                    out.append(table)
+        return out
+
+    def postings(self, kind: str, term: str) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_ids, dls) of one term, its segments decoded and
+        concatenated in ``min_doc`` order."""
+        parts: list[tuple[int, np.ndarray, np.ndarray]] = []
+        for t in self.segments(kind, [term], ["min_doc", "docs_bin", "dl_bin"]):
+            for lo, db, lb in zip(
+                t.column("min_doc").to_pylist(),
+                t.column("docs_bin").to_pylist(),
+                t.column("dl_bin").to_pylist(),
+            ):
+                parts.append((lo, *decode_postings(db, lb)))
+        if not parts:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+        parts.sort(key=lambda p: p[0])
+        ids = np.concatenate([p[1] for p in parts])
+        dls = np.concatenate([p[2] for p in parts])
+        # narrow to int32 when every id fits (ids are doc-sorted, so the
+        # last element is the max): the per-query concat + unique +
+        # searchsorted over these arrays is memory-bandwidth-bound at
+        # multi-M-doc corpora — half-width ids move half the bytes.
+        # Values are unchanged (exact int conversion; scores stay
+        # float64), so rank-identity is unaffected.
+        if ids.size and ids[-1] < 2**31 and ids[0] >= -(2**31):
+            ids = ids.astype(np.int32)
+            dls = dls.astype(np.int32)
+        return ids, dls
+
+    def raw_doc_ids(
+        self, terms: list[str], max_df: int = 5_000_000
+    ) -> "np.ndarray | None":
+        """Driver-side decode of the raw-word posting lists for ``terms``:
+        sorted unique doc_ids, or None when the caller must use the
+        distributed path instead (index not POSIX-visible, or the lists
+        exceed ``max_df`` — at 10^12-doc scale an excluded hot word's raw
+        postings don't fit on the driver).
+
+        A term's raw postings are a few KB-MB of varint bytes in one
+        bucket directory; reading them here costs milliseconds, versus
+        ~1.5s of job scheduling + Python-worker overhead for the
+        equivalent two-task Spark job."""
+        if not self.has_kind("raw"):
+            return None
+        # cheap cardinality gate before reading any posting bytes
+        df = sum(
+            sum(t.column("df_seg").to_pylist())
+            for t in self.segments("raw", terms, ["df_seg"])
         )
-        rows.extend(table.to_pylist())
-    return rows
+        if df > max_df:
+            return None
+        parts = [
+            decode_postings(buf, b"")[0]
+            for t in self.segments("raw", terms, ["docs_bin"])
+            for buf in t.column("docs_bin").to_pylist()
+        ]
+        if not parts:
+            return np.empty(0, dtype=np.int64)
+        return np.unique(np.concatenate(parts))
+
+    def tok_segments(self, terms: list[str], columns: list[str]):
+        """Token-postings segment rows for ``terms`` — the metadata plane
+        of a POSIX-visible index.
+
+        A query's per-term metadata (df_seg, block maxima, segment
+        addresses) is KB-MB of columnar data inside the term's single
+        hash-bucket directory; reading it here costs milliseconds where
+        the equivalent two-task Spark collect pays ~0.3s of job
+        scheduling — per COLD query.  The engine falls back to the Spark
+        collect when this returns None (index not POSIX-visible), so the
+        distributed path remains the at-scale shape for object stores.
+
+        Returns a list of dict rows (name-indexable like Spark Rows), or
+        None."""
+        if not self.has_kind("tok"):
+            return None
+        return [
+            r for t in self.segments("tok", terms, columns) for r in t.to_pylist()
+        ]

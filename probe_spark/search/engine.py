@@ -83,7 +83,7 @@ from pyspark.sql.types import (
 
 from probe_spark.functions import tokenizer as tok
 from probe_spark.functions.porter2 import stem
-from probe_spark.index.codec import local_tok_segments, raw_doc_ids
+from probe_spark.index.codec import PostingsDirectory
 from probe_spark.index.xxhash import spark_bucket
 from probe_spark.query import ast
 from probe_spark.query.parser import ParseError, parse_query
@@ -501,6 +501,9 @@ class SearchEngine:
         # kind is a partition directory -> these filters prune at the source
         self.postings = segments.filter(F.col("kind") == "tok")
         self.raw_postings = segments.filter(F.col("kind") == "raw")
+        # driver-side reader of the same segment files (POSIX-visible
+        # indexes only); refresh() replaces it with a fresh listing
+        self.postings_dir = PostingsDirectory(index_path, self.n_buckets)
 
     def refresh(self) -> None:
         """Reload stats, docs, and segment listings — for long-lived query
@@ -554,14 +557,12 @@ class SearchEngine:
         parquet column scan, no posting decode), memoized per engine.
 
         POSIX-visible indexes resolve this driver-side with pyarrow
-        (``codec.local_tok_segments`` — milliseconds); otherwise one
+        (``PostingsDirectory.tok_segments`` — milliseconds); otherwise one
         pruned Spark aggregate (~0.3s of scheduling, paid once per cold
         term)."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            local = local_tok_segments(
-                self.index_path, self.n_buckets, missing, ["term", "df_seg"]
-            )
+            local = self.postings_dir.tok_segments(missing, ["term", "df_seg"])
             if local is not None:
                 found: dict[str, int] = {}
                 for r in local:
@@ -741,8 +742,8 @@ class SearchEngine:
         if miss:
             # POSIX-visible index: pyarrow metadata read, no Spark job
             # (same driver-local metadata plane as _term_dfs)
-            meta_rows = local_tok_segments(
-                self.index_path, self.n_buckets, miss,
+            meta_rows = self.postings_dir.tok_segments(
+                miss,
                 [
                     "term", "salt", "seg_seq", "df_seg", "min_doc",
                     "max_doc", "block_last_doc", "block_min_dl",
@@ -1094,7 +1095,7 @@ class SearchEngine:
         import numpy as np  # noqa: PLC0415
 
         bundle: "tuple | None" = None
-        ids = raw_doc_ids(self.index_path, self.n_buckets, affecting)
+        ids = self.postings_dir.raw_doc_ids(affecting)
         if ids is not None and ids.size == 0:
             bundle = (ids, {}, ids, {}, 0, None)
         elif (
@@ -1818,6 +1819,8 @@ class SearchEngine:
         query_terms = ast.extract_query_terms(expr)
         if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
             return empty
+        if k is not None and k <= 0:
+            return empty  # no rows asked for (WAND's k-th score has no k)
 
         # classify: keywords of exact/excluded terms use special resolution
         special_kws = special_keywords(expr)
@@ -2069,7 +2072,7 @@ class SearchEngine:
             # (ms) beats the equivalent two-task Spark job (~1.5s of
             # scheduling + worker overhead); raw_doc_ids returns None past
             # the cap or off-POSIX and we fall back to distributed decode.
-            ids = raw_doc_ids(self.index_path, self.n_buckets, affecting)
+            ids = self.postings_dir.raw_doc_ids(affecting)
             if ids is not None and ids.size == 0:
                 # no whole-raw-word occurrence anywhere: registering the
                 # special terms changes no doc's tokenization — skip the

@@ -5,9 +5,10 @@ through Spark jobs — correct at any scale, but each job costs ~0.3-1s of
 scheduling, so point-query p95 is seconds.  The reference (a single-node
 in-process engine, result1.txt:5 "Search completed in 34ms") is the
 latency bar for SMALL corpora, and this module is the apples-to-apples
-answer: a query front-end that reads the SAME segment files with pyarrow
-directly (bucket-dir pruning + parquet row-group pruning on term, exactly
-like the Spark plan), decodes with the SAME varint codec, and scores with
+answer: a query front-end that reads the SAME segment files through a
+cached postings term directory (``codec.PostingsDirectory``: bucket-dir
+pruning + row-group pruning on the footer's term statistics, the pruning
+the Spark plan gets), decodes with the SAME varint codec, and scores with
 numpy using the SAME parser/AST semantics — no Spark session involved.
 
 Deployment story at 10^12-turn scale: the index layout is bucket-
@@ -35,7 +36,7 @@ import os
 import numpy as np
 
 from probe_spark.functions import tokenizer as tok
-from probe_spark.index.xxhash import spark_bucket
+from probe_spark.index.codec import PostingsDirectory
 from probe_spark.query import ast
 from probe_spark.query.parser import ParseError, parse_query
 from probe_spark.search.engine import (
@@ -69,7 +70,12 @@ class LocalSearcher:
 
     Caches decoded postings per term (FIFO-bounded at 512 entries so a
     long-lived service over a hot vocabulary stays within ~512MB of
-    decoded arrays) and memoizes term df from segment metadata.
+    decoded arrays) and memoizes term df from segment metadata.  A cache
+    miss reads through one ``codec.PostingsDirectory``: each postings
+    bucket directory is listed and each file's footer parsed once per
+    searcher, so the searcher serves the postings files it first saw —
+    rewriting one under it (``vacuum``, ``merge``, a rebuild) raises
+    ``codec.IndexChangedError`` on the next miss that touches it.
     """
 
     def __init__(self, index_path: str):
@@ -88,6 +94,7 @@ class LocalSearcher:
         # entries; 512 terms x ~1MB is the intended ceiling)
         self._postings_cache: dict[tuple[str, str], tuple] = {}
         self._postings_cache_cap = 512
+        self._postings_dir = PostingsDirectory(self.index_path, self.n_buckets)
         self._repair_cache: dict[frozenset, tuple] = {}
         self._docs_ds = None
         # winner-metadata plane: fragment range map (footer stats) + LRU of
@@ -115,55 +122,14 @@ class LocalSearcher:
         self._tomb = t
 
     # -- index access --------------------------------------------------------
-    def _bucket_files(self, kind: str, bucket: int) -> list[str]:
-        d = os.path.join(self.index_path, "postings", f"kind={kind}", f"bucket={bucket}")
-        if not os.path.isdir(d):
-            return []
-        return [
-            os.path.join(d, fn)
-            for fn in sorted(os.listdir(d))
-            if fn.endswith(".parquet")
-        ]
-
     def _postings(self, kind: str, term: str) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, dls) for one term, concatenated over its segments in
-        doc order.  Parquet row groups whose term stats exclude the term are
-        skipped (same pruning the Spark plan gets from the bucket filter +
-        row-group stats)."""
+        """(doc_ids, dls) for one term through the FIFO decoded-postings
+        cache; a miss reads the term's segments through the postings
+        term directory (``codec.PostingsDirectory.postings``)."""
         key = (kind, term)
         if key in self._postings_cache:
             return self._postings_cache[key]
-        import pyarrow.dataset as ds
-
-        from probe_spark.index.codec import decode_postings
-
-        files = self._bucket_files(kind, spark_bucket(term, self.n_buckets))
-        parts: list[tuple[int, np.ndarray, np.ndarray]] = []
-        if files:
-            dataset = ds.dataset(files, format="parquet")
-            table = dataset.to_table(
-                columns=["min_doc", "docs_bin", "dl_bin"],
-                filter=ds.field("term") == term,
-            )
-            for row in table.to_pylist():
-                ids, dls = decode_postings(row["docs_bin"], row["dl_bin"])
-                parts.append((row["min_doc"], ids, dls))
-        parts.sort(key=lambda p: p[0])
-        if parts:
-            ids = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            # narrow to int32 when every id fits (ids are doc-sorted, so
-            # the last element is the max): the per-query concat + unique
-            # + searchsorted over these arrays is memory-bandwidth-bound
-            # at multi-M-doc corpora — half-width ids move half the bytes.
-            # Values are unchanged (exact int conversion; scores stay
-            # float64), so rank-identity is unaffected.
-            if ids.size and ids[-1] < 2**31 and ids[0] >= -(2**31):
-                ids = ids.astype(np.int32)
-                dls = dls.astype(np.int32)
-        else:
-            ids = np.empty(0, dtype=np.int64)
-            dls = np.empty(0, dtype=np.int64)
+        ids, dls = self._postings_dir.postings(kind, term)
         while len(self._postings_cache) >= self._postings_cache_cap:
             self._postings_cache.pop(next(iter(self._postings_cache)))
         self._postings_cache[key] = (ids, dls)
@@ -342,15 +308,24 @@ class LocalSearcher:
         float64 array over the doc-id space, each term's postings
         scatter-add idf*tf_norm — no candidate union, no presence masks,
         no per-term where() allocations.  Bit-identical to the generic
-        path: the parser folds OR chains left-associative and
-        ast.walk_terms yields terms in-order, so accumulating term
-        contributions in walk order reproduces the recursion's exact
-        float addition sequence (((s1+s2)+s3)+...), and 0.0+x == x.
-        Eligibility mirrors engine._wand_eligible (single-keyword
-        optional terms only) plus no tombstones/specials; returns None
-        when doc ids are too sparse for a dense array (fallback)."""
+        path on left-spine OR trees (every Or's right child a Term — how
+        the parser folds an unparenthesised chain): ast.walk_terms yields
+        terms in-order, so accumulating term contributions in walk order
+        reproduces the recursion's exact float addition sequence
+        (((s1+s2)+s3)+...), and 0.0+x == x.  Any other tree, such as
+        "a OR (b OR c)" (generic sum s_a+(s_b+s_c), which can differ in
+        the last ulp), returns None (fallback), as do doc ids too sparse
+        for a dense array.  Eligibility otherwise mirrors
+        engine._wand_eligible (single-keyword optional terms only) plus
+        no tombstones/specials; search() answers k <= 0 before any
+        route, so k >= 1 here."""
         from probe_spark.query import ast as _ast
 
+        e = expr
+        while isinstance(e, _ast.Or):
+            if not isinstance(e.right, _ast.Term):
+                return None  # not a left-spine OR chain
+            e = e.left
         if len(per_term) < 2:
             # single term: the posting list IS the candidate set and the
             # generic path's identity shortcut beats a doc-space-sized
@@ -523,6 +498,8 @@ class LocalSearcher:
         query_terms = ast.extract_query_terms(expr)
         if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
             return []
+        if k is not None and k <= 0:
+            return []  # no rows asked for, on every route (as the engine)
 
         special_kws: set[str] = set()
         for t in ast.walk_terms(expr):
@@ -977,7 +954,8 @@ class LocalSearcher:
         each winner to its fragment via footer stats and keeps an LRU of
         DECOMPRESSED fragment tables (the doc-store cache every serving
         stack has): a warm replica answers winner lookups from memory
-        with two searchsorted calls."""
+        with two vectorized searchsorted calls and one row take per
+        fragment."""
         fm = self._docs_file_map()
         if fm is None:
             import pyarrow.dataset as ds
@@ -988,19 +966,16 @@ class LocalSearcher:
             )
             return {r["doc_id"]: r for r in table.to_pylist()}
         paths, lo, hi = fm
+        d = np.asarray(doc_ids, dtype=np.int64)
+        frag = np.searchsorted(lo, d, side="right") - 1
+        # ids in no fragment's range (deleted/stale) are skipped
+        known = (frag >= 0) & (d <= hi[np.maximum(frag, 0)])
         out: dict = {}
-        misses: list[int] = []
-        for d in doc_ids:
-            i = int(np.searchsorted(lo, d, side="right")) - 1
-            if i < 0 or d > hi[i]:
-                continue  # id not in any fragment (deleted/stale) — skip
+        for i in np.unique(frag[known]).tolist():
             ent = self._meta_frag_cache.get(i)
             if ent is None:
-                misses.append(i)
-        if misses:
-            import pyarrow.parquet as pq
+                import pyarrow.parquet as pq
 
-            for i in set(misses):
                 t = pq.read_table(paths[i], columns=self._META_COLUMNS)
                 ids_np = t.column("doc_id").to_numpy()
                 if ids_np.size > 1 and np.any(ids_np[1:] < ids_np[:-1]):
@@ -1011,19 +986,11 @@ class LocalSearcher:
                     self._meta_frag_cache.pop(
                         next(iter(self._meta_frag_cache))
                     )
-                self._meta_frag_cache[i] = (ids_np, t)
-        for d in doc_ids:
-            i = int(np.searchsorted(lo, d, side="right")) - 1
-            if i < 0 or d > hi[i]:
-                continue
-            ent = self._meta_frag_cache.get(i)
-            if ent is None:  # pragma: no cover - evicted mid-call
-                continue
+                ent = self._meta_frag_cache[i] = (ids_np, t)
             ids_np, t = ent
-            j = int(np.searchsorted(ids_np, d))
-            if j >= len(ids_np) or int(ids_np[j]) != d:
-                continue
-            out[d] = {
-                c: t.column(c)[j].as_py() for c in self._META_COLUMNS
-            }
+            want = d[known & (frag == i)]
+            j = np.minimum(np.searchsorted(ids_np, want), ids_np.size - 1)
+            hit = ids_np[j] == want
+            # one take + to_pylist per fragment, not an as_py() per cell
+            out.update(zip(want[hit].tolist(), t.take(j[hit]).to_pylist()))
         return out

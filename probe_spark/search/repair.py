@@ -12,9 +12,9 @@ set G and score them driver-side with their repaired presence/dl
 Round 4 built that overlay with a full Spark job (docs scan ⋈ affected
 ids → mapInPandas retokenize → toPandas), ~1.2-1.6s of every COLD
 special-term query (BENCH q17/q21/q22).  This module gives the overlay
-the same treatment ``index/codec.raw_doc_ids`` gave the affected-id
-resolution: when the index is POSIX-visible and the affected set is
-driver-sized, read the affected texts with pyarrow (row-group pruned)
+the same treatment ``codec.PostingsDirectory.raw_doc_ids`` gave the
+affected-id resolution: when the index is POSIX-visible and the affected
+set is driver-sized, read the affected texts with pyarrow (row-group pruned)
 and retokenize them on a forked process pool — no Spark job at all.
 Measured at sf0.1 (61k affected docs): 0.15s read + ~0.2s pooled
 retokenize vs 1.2-1.6s for the distributed join.  Past

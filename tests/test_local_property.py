@@ -37,6 +37,11 @@ VOCAB = [
 
 @st.composite
 def query_strings(draw, depth: int = 2) -> str:
+    if draw(st.integers(0, 5)) == 0:
+        # parenthesised right-nested OR: "a OR (b OR c)" parses as
+        # Or(a, Or(b, c)), not the left spine of an unparenthesised chain
+        a, b, c = (draw(st.sampled_from(VOCAB)) for _ in range(3))
+        return f"{a} OR ({b} OR {c})"
     if depth == 0 or draw(st.booleans()):
         word = draw(st.sampled_from(VOCAB))
         prefix = draw(st.sampled_from(["", "", "", "+", "-"]))

@@ -98,3 +98,14 @@ def test_local_matched_terms_parity(local_searcher, dist_engine, qid, query, k):
     dist = dist_engine.search(query, k=k).collect()
     for lr, dr in zip(local, dist):
         assert lr["matched_terms"] == list(dr["matched_terms"]), query
+
+
+@pytest.mark.parametrize(
+    "query", ["error OR handler", "error OR handler OR timeout", "error"]
+)
+def test_local_k_zero_returns_nothing(local_searcher, dist_engine, query):
+    """k=0 answers no rows on every route, the dense disjunction included
+    (it used to index np.partition out of bounds), as the engine does."""
+    assert local_searcher.search(query, k=10)  # the terms do occur
+    assert local_searcher.search(query, k=0) == []
+    assert dist_engine.search(query, k=0).collect() == []

@@ -150,12 +150,11 @@ class TestDriverRetokParity:
     def test_driver_vs_distributed_arrays(self, engine):
         import numpy as np
 
-        from probe_spark.index.codec import raw_doc_ids
         from probe_spark.search import repair
 
         g = frozenset({"hashtable"})
         lookups = ("hash", "hashtabl", "tabl")
-        ids = raw_doc_ids(engine.index_path, engine.n_buckets, ["hashtable"])
+        ids = engine.postings_dir.raw_doc_ids(["hashtable"])
         assert ids is not None and ids.size
         a = repair.driver_retok(engine.index_path, ids, g, lookups)
         b = engine._retok_distributed(ids, g, lookups)
