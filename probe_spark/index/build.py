@@ -37,18 +37,25 @@ FUSED SINGLE-PASS PIPELINE (the scale path)
            n_docs/total_dl/avgdl out of the collected rows, so there is
            no stats job.
      All side writes are atomic (dot-tmp + rename; retries overwrite).
-  3. SHUFFLE-FREE merge: the driver plans one task per (bucket,
+  3. SHUFFLE-FREE merge: the driver plans one row per (bucket,
      doc-range group) from partial-shard file sizes — greedy grouping
-     under merge_group_bytes bounds task memory AND spreads hot buckets
-     over tasks (the north rule's doc-range salting, by construction;
-     salt = group index).  Each task reads its group's shard files
-     directly with pyarrow, concatenates + sorts each (kind, term)'s
-     chunks, emits final segments hard-capped at max_postings_per_segment
-     with block-max metadata (block_last_doc/block_min_dl + per-block
-     byte offsets for WAND), side-written into postings/kind=/bucket=/
-     dirs.  The packed postings move exactly once, file -> file; Spark
-     carries only the plan in and per-segment metadata out (which also
-     yields the manifest without re-reading the index).
+     under merge_group_bytes bounds a row's memory AND spreads hot
+     buckets over rows (the north rule's doc-range salting, by
+     construction; salt = group index) — and deals the rows round-robin
+     to one task per slot.  A task reads each row's shard files directly
+     with pyarrow, sorts the chunk keys once, and splices every term's
+     doc-range-disjoint encoded chunks into its segment column-at-a-time
+     (codec.splice_runs: the boundary varints rewritten by one vectorized
+     encode, the bytes moved by one range gather, the block offset lists
+     shifted in numpy).  Terms over max_postings_per_segment, terms with
+     overlapping chunk ranges and legacy partials take the per-term path
+     (codec.merge_term_chunks).  Segments carry block-max metadata
+     (block_last_doc/block_min_dl + per-block byte offsets for WAND) and
+     are side-written into postings/kind=/bucket=/ dirs in 256-row row
+     groups.  The packed postings move exactly once, file -> file; Spark
+     carries only the plan in and per-segment metadata out, which the
+     driver folds with one Arrow group_by into the manifest (no re-read
+     of the index).
   4. manifest lineage rows per phase + per bucket (build_id, counts,
      bytes, checksum, completed_at); finished phases are skipped on
      resume (docs+partials commit together; partials/ is the merge's
@@ -1125,8 +1132,8 @@ class _ShardWriter:
     def write(self, batch: pa.RecordBatch) -> None:
         self.writer.write_table(pa.Table.from_batches([batch]))
 
-    def write_table(self, table: pa.Table) -> None:
-        self.writer.write_table(table)
+    def write_table(self, table: pa.Table, row_group_size=None) -> None:
+        self.writer.write_table(table, row_group_size=row_group_size)
 
     def close(self) -> None:
         self.writer.close()
@@ -2347,28 +2354,171 @@ _SEG_FILE_SCHEMA = pa.schema(
 )
 
 
+# a merge group's segment rows before they are split into per-kind files
+_MERGED_SEG_SCHEMA = pa.schema(
+    [_SEGMENT_ARROW_SCHEMA.field("kind"), *_SEG_FILE_SCHEMA]
+)
+
+
+def _merge_group(
+    files: list[str], salt: int, n_salts: int, block_size: int, max_seg: int
+) -> "pa.Table | None":
+    """Merge one plan row's level-0 shard files into final segment rows
+    (``_MERGED_SEG_SCHEMA``, sorted by kind, term, seg_seq), or None when
+    the files hold no chunk.
+
+    COLUMN SPLICE (the default): per (kind, term), the level-0 chunks are
+    doc-range DISJOINT — pass-B tasks own contiguous docID ranges
+    (_one_row_per_partition(contiguous=True)) and stream ids ascending
+    within a task — so a term whose chunks fit one segment is the byte
+    concatenation of its already-encoded chunks with one leading varint
+    rewritten per chunk boundary.  ``codec.splice_runs`` does that for
+    every such term of the group at once: one sort of the chunk keys, one
+    vectorized varint encode, one range gather of the docs/dl bytes and
+    a shift of the block offset lists.  Postings move as encoded bytes
+    (~1.3 B/posting), never decoded.
+
+    PER-TERM PATH (``codec.merge_term_chunks``) for the inputs only it
+    handles: a term whose total df exceeds ``max_seg`` (split into
+    several segments at block boundaries), a term whose chunk ranges
+    overlap (decode + sort + re-encode), and legacy partials without
+    block metadata (decoded).  Its rows are merged into the same
+    (kind, term, seg_seq) order."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from probe_spark.index.codec import (
+        merge_term_chunks,
+        row_chunks,
+        splice_runs,
+        stack_segments,
+    )
+
+    legacy = "block_last" not in pq.read_schema(files[0]).names
+    blocks = [] if legacy else [
+        "block_last", "block_min_dl", "block_doc_off", "block_dl_off",
+    ]
+    t = pa.concat_tables(
+        [
+            pq.read_table(
+                f,
+                columns=[
+                    "kind", "term", "df_part", "min_doc", "max_doc",
+                    "docs_bin", "dl_bin", *blocks,
+                ],
+            )
+            for f in files
+        ]
+    )
+    n = t.num_rows
+    if n == 0:
+        return None
+    # sort INDICES over the key columns only — permuting the table would
+    # copy every binary payload once for nothing
+    order = pc.sort_indices(
+        t.select(["kind", "term", "min_doc"]),
+        sort_keys=[
+            ("kind", "ascending"),
+            ("term", "ascending"),
+            ("min_doc", "ascending"),
+        ],
+    ).to_numpy(zero_copy_only=False)
+    kinds = t.column("kind").take(order).combine_chunks()
+    terms = t.column("term").take(order).combine_chunks()
+    new_term = pc.or_(
+        pc.not_equal(kinds[1:], kinds[:-1]),
+        pc.not_equal(terms[1:], terms[:-1]),
+    ).to_numpy(zero_copy_only=False)
+    starts = np.concatenate([[0], np.flatnonzero(new_term) + 1, [n]])
+    sizes = np.diff(starts)
+    df = t.column("df_part").to_numpy()[order]
+    lo = t.column("min_doc").to_numpy()[order]
+    hi = t.column("max_doc").to_numpy()[order]
+    slow = np.add.reduceat(df, starts[:-1]) > max_seg
+    overlap = np.flatnonzero((lo[1:] <= hi[:-1]) & ~new_term)
+    slow[np.searchsorted(starts, overlap, side="right") - 1] = True
+    if legacy:
+        slow[:] = True
+    fast = ~slow
+
+    def chunk_columns(groups):
+        """Chunk columns of the term ``groups`` (a mask over terms) in
+        sorted order, and each group's row bounds within them."""
+        rows = np.repeat(groups, sizes)
+        c = t.select(["docs_bin", "dl_bin", *blocks]).take(order[rows])
+        c = c.combine_chunks()
+        return (
+            [df[rows], lo[rows], hi[rows], *(col.chunk(0) for col in c.columns)],
+            np.concatenate([[0], np.cumsum(sizes[groups])]),
+        )
+
+    def segment_table(first_rows, seg_seq, seg) -> pa.Table:
+        n_seg = len(first_rows)
+        return pa.Table.from_arrays(
+            [
+                kinds.take(first_rows),
+                terms.take(first_rows),
+                pa.array(np.full(n_seg, salt, np.int32)),
+                pa.array(seg_seq, pa.int32()),
+                pa.array(np.full(n_seg, n_salts, np.int32)),
+                pa.array(seg.df), pa.array(seg.min_doc), pa.array(seg.max_doc),
+                seg.docs, seg.dls, seg.block_last, seg.block_min_dl,
+                seg.block_doc_off, seg.block_dl_off,
+                pa.array(seg.seg_bytes), pa.array(seg.seg_crc),
+            ],
+            schema=_MERGED_SEG_SCHEMA,
+        )
+
+    parts: list[pa.Table] = []
+    if fast.any():
+        cols, bounds = chunk_columns(fast)
+        parts.append(
+            segment_table(
+                starts[:-1][fast],
+                np.zeros(int(fast.sum()), np.int32),
+                splice_runs(*cols, bounds),
+            )
+        )
+    if slow.any():
+        cols, bounds = chunk_columns(slow)
+        chunks = row_chunks(*cols)
+        first_rows: list[int] = []
+        seg_seq: list[int] = []
+        segs = []
+        for g, a, b in zip(
+            np.flatnonzero(slow).tolist(), bounds[:-1].tolist(), bounds[1:].tolist()
+        ):
+            merged = merge_term_chunks(
+                chunks[a:b], max_seg, block_size, decode=legacy
+            )
+            first_rows += [int(starts[g])] * len(merged)
+            seg_seq += range(len(merged))
+            segs += merged
+        parts.append(segment_table(first_rows, seg_seq, stack_segments(segs)))
+    out = pa.concat_tables(parts)
+    if len(parts) > 1:
+        out = out.take(
+            pc.sort_indices(
+                out,
+                sort_keys=[
+                    ("kind", "ascending"),
+                    ("term", "ascending"),
+                    ("seg_seq", "ascending"),
+                ],
+            )
+        )
+    return out
+
+
 def _make_file_merger(block_size: int, max_seg: int, out_dir: str):
     """mapInArrow generator over MERGE-PLAN rows (bucket, salt, n_salts,
     files): each row names the level-0 shard files of one bucket's
-    doc-range group.  The task reads those files directly with pyarrow and
-    merges each (kind, term)'s chunks into final segments hard-capped at
-    ``max_seg`` postings, yielding only per-segment metadata.
-
-    FAST PATH (the default): per term, the level-0 chunks are doc-range
-    DISJOINT and min_doc-ascending — pass-B tasks own contiguous docID
-    ranges (_one_row_per_partition(contiguous=True)) and stream ids
-    ascending within a task — so segments are assembled by BYTE SPLICING
-    the already-encoded varint streams (codec.splice_chunks): one leading
-    varint rewritten per chunk boundary, block metadata concatenated with
-    offset shifts.  The decode+sort+re-encode this replaces was the merge
-    phase's memory-bandwidth wall (at local[32] the same work took 4x the
-    task-seconds of local[8] — saturated memory system), and postings now
-    move once as ~1.3 B/posting encoded bytes instead of 2x16 B/posting
-    decoded int64 traffic.
-
-    FALLBACK (legacy partials without block metadata, or a term whose
-    chunk ranges overlap): decode, concatenate, sort, re-encode — the
-    original path, kept for resume-across-format and safety.
+    doc-range group.  The task merges them (``_merge_group``: a column
+    splice, with a per-term path for hot, overlapping and legacy inputs)
+    and writes each kind's segments to ``kind=/bucket=/part-sNNNNN``
+    in 256-row row groups (postings readers prune on their term min/max),
+    yielding only per-segment metadata.
 
     NO SHUFFLE anywhere: the packed postings move exactly once, file ->
     file; skew is handled by the driver's size-based range grouping (a hot
@@ -2376,260 +2526,49 @@ def _make_file_merger(block_size: int, max_seg: int, out_dir: str):
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _single_threaded_arrow()
-        import zlib
-
         import numpy as np
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from probe_spark.index.codec import (
-            EncodedChunk,
-            encode_postings,
-            splice_chunks,
-            split_encoded_chunk,
-            varint_decode,
-        )
-
-        meta: dict[str, list] = {f.name: [] for f in _SEG_META_ARROW_SCHEMA}
-
-        def flush_meta() -> pa.RecordBatch:
-            batch = pa.RecordBatch.from_arrays(
-                [pa.array(meta[f.name], f.type) for f in _SEG_META_ARROW_SCHEMA],
-                schema=_SEG_META_ARROW_SCHEMA,
-            )
-            for v in meta.values():
-                v.clear()
-            return batch
-
-        def _flat(col):
-            return (
-                pa.concat_arrays(col.chunks)
-                if isinstance(col, pa.ChunkedArray)
-                else col
-            )
-
-        def _bin_view(col):
-            """(offsets int32 np, data memoryview) of a binary column —
-            chunk bytes slice zero-copy as data[offs[i]:offs[i+1]]."""
-            arr = _flat(col)
-            o = arr.offset
-            offs = np.frombuffer(arr.buffers()[1], np.int32)[o : o + len(arr) + 1]
-            return offs, memoryview(arr.buffers()[2])
-
-        def _list_view(col, dtype):
-            arr = _flat(col)
-            return (
-                arr.offsets.to_numpy(zero_copy_only=False),
-                arr.values.to_numpy(zero_copy_only=False).astype(dtype, copy=False),
-            )
 
         for batch in batches:
             for row in batch.to_pylist():
                 bucket = int(row["bucket"])
                 salt = int(row["salt"])
-                n_salts = int(row["n_salts"])
-                files = list(row["files"])
-                legacy = "block_last" not in pq.read_schema(files[0]).names
-                cols = [
-                    "kind", "term", "df_part", "min_doc", "max_doc",
-                    "docs_bin", "dl_bin",
-                ]
-                if not legacy:
-                    cols += [
-                        "block_last", "block_min_dl",
-                        "block_doc_off", "block_dl_off",
-                    ]
-                t = pa.concat_tables(
-                    [pq.read_table(f, columns=cols) for f in files]
+                segs = _merge_group(
+                    list(row["files"]), salt, int(row["n_salts"]),
+                    block_size, max_seg,
                 )
-                if t.num_rows == 0:
+                if segs is None:
                     continue
-                # sort INDICES over the key columns only — permuting the
-                # table would copy every binary payload once for nothing
-                order = pc.sort_indices(
-                    t.select(["kind", "term", "min_doc"]),
-                    sort_keys=[
-                        ("kind", "ascending"),
-                        ("term", "ascending"),
-                        ("min_doc", "ascending"),
-                    ],
-                ).to_numpy(zero_copy_only=False)
-                kinds = t.column("kind").to_pylist()
-                terms = t.column("term").to_pylist()
-                min_docs = _flat(t.column("min_doc")).to_numpy(zero_copy_only=False)
-                max_docs = _flat(t.column("max_doc")).to_numpy(zero_copy_only=False)
-                dfs = _flat(t.column("df_part")).to_numpy(zero_copy_only=False)
-                d_offs, d_buf = _bin_view(t.column("docs_bin"))
-                l_offs, l_buf = _bin_view(t.column("dl_bin"))
-                if not legacy:
-                    bl_off, bl_v = _list_view(t.column("block_last"), np.int64)
-                    bm_off, bm_v = _list_view(t.column("block_min_dl"), np.int32)
-                    bd_off, bd_v = _list_view(t.column("block_doc_off"), np.int64)
-                    bo_off, bo_v = _list_view(t.column("block_dl_off"), np.int64)
-
-                writers: dict[str, tuple[_ShardWriter, dict]] = {}
-
-                def _writer(kind: str):
-                    ent = writers.get(kind)
-                    if ent is None:
-                        w = _ShardWriter(
-                            os.path.join(
-                                _strip_scheme(out_dir),
-                                f"kind={kind}",
-                                f"bucket={bucket}",
-                            ),
-                            f"part-s{salt:05d}.parquet",
-                            _SEG_FILE_SCHEMA,
-                        )
-                        ent = (w, {f.name: [] for f in _SEG_FILE_SCHEMA})
-                        writers[kind] = ent
-                    return ent
-
-                def emit_seg(kind: str, term: str, c, seg_seq: int) -> None:
-                    docs_bin = bytes(c.docs)
-                    dl_bin = bytes(c.dls)
-                    w, out_cols = _writer(kind)
-                    out_cols["term"].append(term)
-                    out_cols["salt"].append(salt)
-                    out_cols["seg_seq"].append(seg_seq)
-                    out_cols["n_salts"].append(n_salts)
-                    out_cols["df_seg"].append(c.df)
-                    out_cols["min_doc"].append(c.min_doc)
-                    out_cols["max_doc"].append(c.max_doc)
-                    out_cols["docs_bin"].append(docs_bin)
-                    out_cols["dl_bin"].append(dl_bin)
-                    out_cols["block_last_doc"].append(c.block_last.tolist())
-                    out_cols["block_min_dl"].append(c.block_min_dl.tolist())
-                    out_cols["block_doc_off"].append(c.block_doc_off.tolist())
-                    out_cols["block_dl_off"].append(c.block_dl_off.tolist())
-                    out_cols["seg_bytes"].append(len(docs_bin) + len(dl_bin))
-                    out_cols["seg_crc"].append(zlib.crc32(docs_bin))
-                    meta["kind"].append(kind)
-                    meta["bucket"].append(bucket)
-                    meta["term"].append(term)
-                    meta["df_seg"].append(c.df)
-                    meta["seg_bytes"].append(len(docs_bin) + len(dl_bin))
-                    meta["seg_crc"].append(zlib.crc32(docs_bin))
-                    if len(out_cols["term"]) >= 256:
-                        w.write(
-                            pa.RecordBatch.from_arrays(
-                                [
-                                    pa.array(out_cols[f.name], f.type)
-                                    for f in _SEG_FILE_SCHEMA
-                                ],
-                                schema=_SEG_FILE_SCHEMA,
-                            )
-                        )
-                        for v in out_cols.values():
-                            v.clear()
-
-                def chunk_of(i: int) -> "EncodedChunk":
-                    return EncodedChunk(
-                        dfs[i], min_docs[i], max_docs[i],
-                        d_buf[d_offs[i] : d_offs[i + 1]],
-                        l_buf[l_offs[i] : l_offs[i + 1]],
-                        bl_v[bl_off[i] : bl_off[i + 1]],
-                        bm_v[bm_off[i] : bm_off[i + 1]],
-                        bd_v[bd_off[i] : bd_off[i + 1]],
-                        bo_v[bo_off[i] : bo_off[i + 1]],
+                kinds = segs.column("kind")
+                for kind in pc.unique(kinds).to_pylist():
+                    at = np.flatnonzero(
+                        pc.equal(kinds, kind).to_numpy(zero_copy_only=False)
                     )
-
-                def emit_decoded(kind, term, rows_idx) -> None:
-                    """Fallback: decode + sort + re-encode (legacy partials
-                    or overlapping chunk ranges)."""
-                    idc = []
-                    dlc = []
-                    for i in rows_idx:
-                        gaps = varint_decode(bytes(d_buf[d_offs[i] : d_offs[i + 1]]))
-                        idc.append(np.cumsum(gaps.astype(np.int64)))
-                        dlc.append(
-                            varint_decode(
-                                bytes(l_buf[l_offs[i] : l_offs[i + 1]])
-                            ).astype(np.int64)
-                        )
-                    ids = np.concatenate(idc)
-                    dls = np.concatenate(dlc)
-                    o = np.argsort(ids, kind="stable")
-                    ids = ids[o]
-                    dls = dls[o]
-                    for seg_seq, s in enumerate(range(0, len(ids), max_seg)):
-                        d = ids[s : s + max_seg]
-                        l = dls[s : s + max_seg]
-                        (
-                            docs_bin, dl_bin, blast, bmin,
-                            bdoc, bdl,
-                        ) = encode_postings(d, l, block=block_size)
-                        emit_seg(
-                            kind, term,
-                            EncodedChunk(
-                                len(d), int(d[0]), int(d[-1]),
-                                docs_bin, dl_bin, blast, bmin, bdoc, bdl,
-                            ),
-                            seg_seq,
-                        )
-
-                n = len(order)
-                i = 0
-                while i < n:
-                    ii = int(order[i])
-                    key = (kinds[ii], terms[ii])
-                    j = i
-                    while j < n and (
-                        kinds[int(order[j])], terms[int(order[j])]
-                    ) == key:
-                        j += 1
-                    rows_idx = [int(x) for x in order[i:j]]
-                    i = j
-                    kind, term = key
-                    if legacy or (
-                        len(rows_idx) > 1
-                        and bool(
-                            np.any(
-                                min_docs[rows_idx][1:]
-                                <= max_docs[rows_idx][:-1]
-                            )
-                        )
-                    ):
-                        emit_decoded(kind, term, rows_idx)
-                        continue
-                    pieces: list = []
-                    for ri in rows_idx:
-                        c = chunk_of(ri)
-                        if c.df > max_seg:
-                            pieces.extend(
-                                split_encoded_chunk(c, max_seg, block_size)
-                            )
-                        else:
-                            pieces.append(c)
-                    seg_seq = 0
-                    group: list = []
-                    gdf = 0
-                    for c in pieces:
-                        if group and gdf + c.df > max_seg:
-                            emit_seg(kind, term, splice_chunks(group), seg_seq)
-                            seg_seq += 1
-                            group, gdf = [], 0
-                        group.append(c)
-                        gdf += c.df
-                    if group:
-                        emit_seg(kind, term, splice_chunks(group), seg_seq)
-
-                for w, out_cols in writers.values():
-                    if out_cols["term"]:
-                        w.write(
-                            pa.RecordBatch.from_arrays(
-                                [
-                                    pa.array(out_cols[f.name], f.type)
-                                    for f in _SEG_FILE_SCHEMA
-                                ],
-                                schema=_SEG_FILE_SCHEMA,
-                            )
-                        )
+                    w = _ShardWriter(
+                        os.path.join(
+                            _strip_scheme(out_dir),
+                            f"kind={kind}",
+                            f"bucket={bucket}",
+                        ),
+                        f"part-s{salt:05d}.parquet",
+                        _SEG_FILE_SCHEMA,
+                    )
+                    w.write_table(
+                        segs.slice(at[0], len(at)).select(_SEG_FILE_SCHEMA.names),
+                        row_group_size=256,
+                    )
                     w.close()
-                if meta["term"]:
-                    yield flush_meta()
-        if meta["term"]:
-            yield flush_meta()
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        kinds.combine_chunks(),
+                        pa.array(np.full(segs.num_rows, bucket, np.int32)),
+                        *(
+                            segs.column(c).combine_chunks()
+                            for c in ("term", "df_seg", "seg_bytes", "seg_crc")
+                        ),
+                    ],
+                    schema=_SEG_META_ARROW_SCHEMA,
+                )
 
     return gen
 
@@ -2722,8 +2661,15 @@ def _merge_partials_fused(
             os.path.join(d, "part-00000.parquet"),
         )
         return []
+    # plan rows round-robin over one task per slot: a plan row is tens of
+    # ms of numpy, so a task per row mostly paid Spark's per-task cost
+    # (the 48k-turn, 8-bucket perfbench build at local[2] on 4 vCPUs:
+    # merge phase 1.6-2.2 s with 8 tasks, 0.93-1.15 s with 2)
     plan_df = _one_row_per_partition(
-        spark, plan, "bucket int, salt int, n_salts int, files array<string>"
+        spark,
+        plan,
+        "bucket int, salt int, n_salts int, files array<string>",
+        n_tasks=spark.sparkContext.defaultParallelism,
     )
     meta = plan_df.mapInArrow(
         _make_file_merger(
@@ -2734,31 +2680,34 @@ def _merge_partials_fused(
     # fold the per-segment metadata on the driver: the rows are
     # vocabulary-scale (one per term-segment), and a groupBy here costs two
     # extra shuffle stages of pure fixed overhead per build — measured ~2s
-    # wall plus the JVM GC debt they inherit at local[32]
-    agg: dict[tuple[str, int], list] = {}
-    for r in meta.collect():
-        key = (r["kind"], int(r["bucket"]))
-        a = agg.get(key)
-        if a is None:
-            a = agg[key] = [0, 0, set(), 0, 0]
-        a[0] += 1
-        a[1] += int(r["df_seg"])
-        a[2].add(r["term"])
-        a[3] += int(r["seg_bytes"])
-        a[4] += int(r["seg_crc"])
+    # wall plus the JVM GC debt they inherit at local[32].  The fold is
+    # one Arrow group_by over the collected table, not a loop over Rows.
+    agg = (
+        meta.toArrow()
+        .group_by(["kind", "bucket"], use_threads=False)
+        .aggregate(
+            [
+                ("term", "count_distinct"),
+                ("df_seg", "sum"),
+                ("seg_bytes", "sum"),
+                ("seg_crc", "sum"),
+            ]
+        )
+        .sort_by([("bucket", "ascending"), ("kind", "ascending")])
+    )
     return [
         {
             "build_id": build_id,
-            "phase": f"postings_{kind}",
-            "partition_id": bucket,
+            "phase": f"postings_{r['kind']}",
+            "partition_id": r["bucket"],
             "status": "done",
-            "n_terms": len(a[2]),
-            "n_postings": a[1],
-            "bytes": a[3],
-            "checksum": str(a[4]),
+            "n_terms": r["term_count_distinct"],
+            "n_postings": r["df_seg_sum"],
+            "bytes": r["seg_bytes_sum"],
+            "checksum": str(r["seg_crc_sum"]),
             "completed_at": time.time(),
         }
-        for (kind, bucket), a in agg.items()
+        for r in agg.to_pylist()
     ]
 
 

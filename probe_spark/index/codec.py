@@ -13,6 +13,7 @@ compression").
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 
@@ -348,6 +349,276 @@ def splice_chunks(chunks: list[EncodedChunk]) -> EncodedChunk:
         df, chunks[0].min_doc, chunks[-1].max_doc, bytes(docs), bytes(dls),
         np.concatenate(bl), np.concatenate(bm),
         np.concatenate(bdo), np.concatenate(blo),
+    )
+
+
+def merge_term_chunks(
+    chunks: list[EncodedChunk], max_seg: int, block: int, decode: bool = False
+) -> list[EncodedChunk]:
+    """One term's chunks (min_doc-ascending) -> its final segments, in
+    seg_seq order, each hard-capped at ``max_seg`` postings.
+
+    Doc-range-disjoint chunks are split at block boundaries where one
+    exceeds ``max_seg`` and greedily spliced into segments.  Overlapping
+    chunk ranges, or ``decode=True`` (partials without block metadata),
+    take the decode + sort + re-encode path instead."""
+    if decode or any(
+        b.min_doc <= a.max_doc for a, b in zip(chunks, chunks[1:])
+    ):
+        parts = [decode_postings(bytes(c.docs), bytes(c.dls)) for c in chunks]
+        d_all = np.concatenate([p[0] for p in parts])
+        o = np.argsort(d_all, kind="stable")
+        d_all = d_all[o]
+        l_all = np.concatenate([p[1] for p in parts])[o]
+        out = []
+        for s in range(0, len(d_all), max_seg):
+            d = d_all[s : s + max_seg]
+            l = l_all[s : s + max_seg]
+            out.append(
+                EncodedChunk(
+                    len(d), d[0], d[-1], *encode_postings(d, l, block=block)
+                )
+            )
+        return out
+    pieces: list[EncodedChunk] = []
+    for c in chunks:
+        pieces.extend(split_encoded_chunk(c, max_seg, block))
+    out = []
+    group: list[EncodedChunk] = []
+    gdf = 0
+    for c in pieces:
+        if group and gdf + c.df > max_seg:
+            out.append(splice_chunks(group))
+            group, gdf = [], 0
+        group.append(c)
+        gdf += c.df
+    if group:
+        out.append(splice_chunks(group))
+    return out
+
+
+class SegmentColumns(NamedTuple):
+    """Final segments as columns, one entry per segment (what
+    :func:`splice_runs` and :func:`stack_segments` return).  ``docs``/
+    ``dls`` are binary arrays and the ``block_*`` fields list arrays (the
+    EncodedChunk fields); ``df``/``min_doc``/``max_doc``/``seg_bytes``/
+    ``seg_crc`` are int64 numpy arrays (``seg_crc`` is zlib.crc32 of
+    ``docs``)."""
+
+    df: np.ndarray
+    min_doc: np.ndarray
+    max_doc: np.ndarray
+    docs: "object"
+    dls: "object"
+    block_last: "object"
+    block_min_dl: "object"
+    block_doc_off: "object"
+    block_dl_off: "object"
+    seg_bytes: np.ndarray
+    seg_crc: np.ndarray
+
+
+def _list_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets int64 relative to the first row, values) of a list array."""
+    offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    vals = arr.values.to_numpy(zero_copy_only=False)[offs[0] : offs[-1]]
+    return offs - offs[0], vals
+
+
+def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets int64 relative to the first row, data uint8) of a binary
+    array — both zero-copy views of its buffers."""
+    o = arr.offset
+    offs = np.frombuffer(arr.buffers()[1], np.int32)[o : o + len(arr) + 1]
+    offs = offs.astype(np.int64)
+    raw = np.frombuffer(arr.buffers()[2], np.uint8)
+    return offs - offs[0], raw[offs[0] : offs[-1]]
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + n)`` over (starts, lens) pairs."""
+    total = int(lens.sum())
+    run0 = np.cumsum(lens) - lens
+    return np.repeat(starts - run0, lens) + np.arange(total, dtype=np.int64)
+
+
+def row_chunks(
+    df: np.ndarray,
+    min_doc: np.ndarray,
+    max_doc: np.ndarray,
+    docs,
+    dls,
+    block_last=None,
+    block_min_dl=None,
+    block_doc_off=None,
+    block_dl_off=None,
+) -> list[EncodedChunk]:
+    """Rows of chunk columns (numpy scalars, pyarrow binary / list arrays)
+    as EncodedChunks over zero-copy slices.  Without block columns
+    (legacy partials) the block fields are empty."""
+    d_offs, d = _binary_parts(docs)
+    l_offs, l = _binary_parts(dls)
+    d, l = memoryview(d), memoryview(l)
+    cols = (block_last, block_min_dl, block_doc_off, block_dl_off)
+    lists = [] if block_last is None else [_list_parts(c) for c in cols]
+    none = [np.empty(0, np.int64)] * 4
+    return [
+        EncodedChunk(
+            df[i], min_doc[i], max_doc[i],
+            d[d_offs[i] : d_offs[i + 1]], l[l_offs[i] : l_offs[i + 1]],
+            *([v[o[i] : o[i + 1]] for o, v in lists] or none),
+        )
+        for i in range(len(df))
+    ]
+
+
+def stack_segments(segs: list[EncodedChunk]) -> SegmentColumns:
+    """Segments built one at a time, as the columns :func:`splice_runs`
+    returns."""
+    import zlib
+
+    import pyarrow as pa
+
+    docs = [bytes(c.docs) for c in segs]
+    dls = [bytes(c.dls) for c in segs]
+    return SegmentColumns(
+        df=np.array([c.df for c in segs], np.int64),
+        min_doc=np.array([c.min_doc for c in segs], np.int64),
+        max_doc=np.array([c.max_doc for c in segs], np.int64),
+        docs=pa.array(docs, pa.binary()),
+        dls=pa.array(dls, pa.binary()),
+        block_last=pa.array([c.block_last for c in segs], pa.list_(pa.int64())),
+        block_min_dl=pa.array(
+            [c.block_min_dl for c in segs], pa.list_(pa.int32())
+        ),
+        block_doc_off=pa.array(
+            [c.block_doc_off for c in segs], pa.list_(pa.int64())
+        ),
+        block_dl_off=pa.array(
+            [c.block_dl_off for c in segs], pa.list_(pa.int64())
+        ),
+        seg_bytes=np.array([len(a) + len(b) for a, b in zip(docs, dls)], np.int64),
+        seg_crc=np.array([zlib.crc32(a) for a in docs], np.int64),
+    )
+
+
+def splice_runs(
+    df: np.ndarray,
+    min_doc: np.ndarray,
+    max_doc: np.ndarray,
+    docs,
+    dls,
+    block_last,
+    block_min_dl,
+    block_doc_off,
+    block_dl_off,
+    starts: np.ndarray,
+) -> SegmentColumns:
+    """:func:`splice_chunks` over many terms at once, a column at a time.
+
+    Rows are encoded chunks (numpy scalars, pyarrow binary / list arrays,
+    all in the same row order); rows ``starts[g]:starts[g + 1]`` are the
+    doc-range-disjoint, min_doc-ascending chunks of segment ``g``
+    (``starts`` ends with the row count; at least one segment).  Segment
+    g equals ``splice_chunks`` of its rows, field for field:
+
+      * every non-first chunk's leading varint (its absolute min_doc,
+        ``varint_len(min_doc)`` bytes) becomes the gap from the previous
+        chunk's max_doc — one vectorized encode for all of them.  The gap
+        is never larger than min_doc, so each edit removes 0+ bytes: the
+        docs stream is the input stream minus a per-byte keep mask, with
+        the new varints written in place;
+      * the dl streams and ``block_last``/``block_min_dl`` concatenate
+        unchanged, so the segments reuse the input buffers;
+      * ``block_doc_off``/``block_dl_off`` shift by each chunk's byte base
+        inside its segment, the doc offsets of a chunk's second and later
+        blocks also by its leading varint's size change.
+
+    No per-byte index array is built (the mask is one byte per input
+    byte); memory stays a small multiple of the input's encoded bytes."""
+    import zlib
+
+    import pyarrow as pa
+
+    n = len(df)
+    seg_rows = np.diff(starts)
+    n_seg = len(seg_rows)
+    firsts = starts[:-1]
+    d_offs, d_src = _binary_parts(docs)
+    l_offs, l_src = _binary_parts(dls)
+
+    # new leading varints of the non-first chunks
+    is_first = np.zeros(n, dtype=bool)
+    is_first[firsts] = True
+    nf = np.flatnonzero(~is_first)
+    gaps = min_doc[nf] - max_doc[nf - 1]
+    if len(nf) and int(gaps.min()) <= 0:
+        raise ValueError("splice_runs: chunk doc ranges overlap")
+    enc, enc_offs = _varint_encode_offsets(gaps.astype(np.uint64))
+    new_len = np.diff(enc_offs)
+    old_len = np.searchsorted(
+        _VARINT_THRESH, min_doc[nf].astype(np.uint64), side="right"
+    ) + 1
+    cut = np.zeros(n, dtype=np.int64)
+    cut[nf] = old_len - new_len
+
+    # docs: drop the first cut[k] bytes of every chunk, then overwrite the
+    # (now new_len-byte) leading varints
+    if cut.any():
+        keep = np.ones(len(d_src), dtype=bool)
+        keep[_ranges(d_offs[:-1], cut)] = False
+        out = d_src[keep]
+    else:
+        out = d_src.copy()
+    out_offs = np.concatenate([[0], np.cumsum(np.diff(d_offs) - cut)])
+    out[_ranges(out_offs[nf], new_len)] = np.frombuffer(enc, np.uint8)
+
+    seg_of = np.repeat(np.arange(n_seg), seg_rows)
+    doc_base = out_offs[:-1] - out_offs[firsts][seg_of]
+    dl_base = l_offs[:-1] - l_offs[firsts][seg_of]
+
+    bo_offs, bdo = _list_parts(block_doc_off)
+    lo_offs, bdl = _list_parts(block_dl_off)
+    shift = np.repeat(doc_base - cut, np.diff(bo_offs))
+    shift[bo_offs[:-1]] += cut  # a chunk's block 0 starts at its base
+    new_bdo = bdo.astype(np.int64) + shift
+    new_bdl = bdl.astype(np.int64) + np.repeat(dl_base, np.diff(lo_offs))
+
+    seg_doffs = out_offs[starts]
+    seg_loffs = l_offs[starts]
+    mv = memoryview(out)
+    bounds = seg_doffs.tolist()
+    seg_crc = np.fromiter(
+        (zlib.crc32(mv[a:b]) for a, b in zip(bounds, bounds[1:])),
+        dtype=np.int64,
+        count=n_seg,
+    )
+
+    def _binary(offs, data):
+        return pa.BinaryArray.from_buffers(
+            pa.binary(), n_seg,
+            [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(data)],
+        )
+
+    def _lists(offs, values):
+        return pa.ListArray.from_arrays(
+            pa.array(offs[starts].astype(np.int32)), pa.array(values)
+        )
+
+    bl_offs, bl = _list_parts(block_last)
+    bm_offs, bm = _list_parts(block_min_dl)
+    return SegmentColumns(
+        df=np.add.reduceat(df, firsts),
+        min_doc=min_doc[firsts],
+        max_doc=max_doc[starts[1:] - 1],
+        docs=_binary(seg_doffs, out),
+        dls=_binary(seg_loffs, l_src),
+        block_last=_lists(bl_offs, bl),
+        block_min_dl=_lists(bm_offs, bm),
+        block_doc_off=_lists(bo_offs, new_bdo),
+        block_dl_off=_lists(lo_offs, new_bdl),
+        seg_bytes=np.diff(seg_doffs) + np.diff(seg_loffs),
+        seg_crc=seg_crc,
     )
 
 
