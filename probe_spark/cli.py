@@ -408,6 +408,11 @@ def cmd_benchmark(args) -> int:
                 for i, q in enumerate(f)
                 if q.strip()
             ]
+        if not suite:
+            print(
+                f"error: no queries in {args.queries_file}", file=sys.stderr
+            )
+            return 2
     else:
         from probe_spark.fixtures import REFERENCE_QUERIES
 

@@ -22,12 +22,28 @@ Token output contract (the per-row invariant everything else builds on):
 order-preserving, first-seen-deduplicated token list per input string; TF is
 therefore binary and doc length == number of unique tokens — mirroring the
 reference, whose ``tokenize`` dedups via a HashSet (tokenization.rs:2703-2760).
+
+Two entry points keep that contract.  ``tokenize`` is the scalar oracle:
+queries, the repair join and the reference-parity tests use it.  The index
+build (fused and two-pass alike) uses ``tokenize_arrow``, which tokenizes an
+Arrow text batch at a time: Arrow splits and dictionary-encodes the words,
+each distinct word's recipe (its tokens and raw special words) is looked up
+once in a per-worker word table, and numpy expands the word occurrences to
+per-row postings as ids into that table.  Rows with a ``-``-prefixed word
+take ``tokenize`` for their tokens.  Parity with ``tokenize`` +
+``raw_special_words`` is pinned per row by the tests.
 """
 
 from __future__ import annotations
 
 import re as _re
 from functools import lru_cache
+from itertools import repeat
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from probe_spark.functions import _tables as T
 from probe_spark.functions.porter2 import stem
@@ -611,80 +627,250 @@ def raw_special_words_batch(texts):
     return texts.map(lambda t: raw_special_words(t) if t else [])
 
 
-# word -> (special_runs, flat (comp, stemmed, is_exc) candidates) for
-# NON-negation words: one dict probe per word replaces two lru_cache hits
-# plus the per-word run split.  Plain dict beats lru_cache here (no lock /
-# recency bookkeeping on the build's hottest loop); capped + cleared so a
-# long-lived executor worker can't grow it unboundedly on adversarial
-# vocabulary (real vocabulary is Zipf — the cap is never hit in practice).
-_WORD_RECIPE: dict[str, tuple] = {}
-_WORD_RECIPE_MAX = 1 << 20
+# ---------------------------------------------------------------------------
+# the index build's batch tokenizer
+# ---------------------------------------------------------------------------
+
+# Separators of Python's str.split() that Arrow's ascii_split_whitespace
+# does not split on (it splits on exactly space, \t, \n, \v, \f and \r;
+# pinned against unicodedata by the tokenizer tests).  A row holding one is
+# re-joined with single spaces in Python before the Arrow split.
+PY_ONLY_WHITESPACE = (
+    "\x1c\x1d\x1e\x1f\x85\xa0\u1680"
+    + "".join(chr(c) for c in range(0x2000, 0x200B))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+_PY_ONLY_WHITESPACE_RE = "[" + PY_ONLY_WHITESPACE + "]"
+# words per table before tokenize_arrow starts a new one (real vocabulary
+# is Zipf-distributed: the cap bounds a long-lived worker on adversarial
+# input and is not reached in practice)
+_WORD_TABLE_MAX = 1 << 20
 
 
-def _word_recipe(word: str) -> tuple:
-    if word.isalnum():
-        runs = (word,)
-    elif word.isascii():
-        runs = _ASCII_ALNUM_RUN.findall(word)
-    else:
-        runs = _alnum_runs(word)
-    flat = tuple(
-        trip
-        for tok in runs
-        for _lower, comps in _word_candidates(tok)
-        for trip in comps
+def replace_rows(texts: "pa.Array", mask: "pa.Array", fn) -> "pa.Array":
+    """``texts`` with every row where ``mask`` is true replaced by
+    ``fn(row)`` (null mask entries count as false)."""
+    mask = pc.fill_null(mask, False)
+    if not pc.any(mask).as_py():
+        return texts
+    rows = texts.filter(mask).to_pylist()
+    return pc.replace_with_mask(
+        texts, mask, pa.array([fn(t) for t in rows], texts.type)
     )
-    return (_word_special_runs(word), flat)
 
 
-def tokenize_and_raw(text: str) -> tuple[list[str], list[str]]:
-    """``(tokenize(text), raw_special_words(text))`` in ONE whitespace walk.
+class _WordTable:
+    """Per-worker memo of the build tokenizer: word -> recipe.
 
-    The index build calls both on every turn; splitting and iterating the
-    text twice was a measurable share of the fused core at 32-way worker
-    concurrency.  Emission is streamed optimistically: negation (a
-    ``-``-prefixed word anywhere in the text) can suppress tokens emitted
-    from EARLIER words, so on the first such word the token side falls back
-    to the exact two-pass ``tokenize`` while the raw side (which ignores
-    negation) finishes in this walk.  Output parity with the two separate
-    calls is pinned by tests on every fixture text."""
-    seen: set[str] = set()
-    toks: list[str] = []
-    rseen: set[str] = set()
-    raws: list[str] = []
-    add = seen.add
-    append = toks.append
-    radd = rseen.add
-    rappend = raws.append
-    cache = _WORD_RECIPE
-    cache_get = cache.get
-    words = text.split()
-    for i, word in enumerate(words):
-        recipe = cache_get(word)
-        if recipe is None:
-            if word[0] == "-" and not word.isalnum():
-                # negation suppresses tokens from EARLIER words too:
-                # finish the raw side, recompute the token side exactly
-                for later in words[i:]:
-                    for w in _word_special_runs(later):
-                        if w not in rseen:
-                            radd(w)
-                            rappend(w)
-                return tokenize(text), raws
-            recipe = _word_recipe(word)
-            if len(cache) >= _WORD_RECIPE_MAX:
-                cache.clear()
-            cache[word] = recipe
-        sruns, flat = recipe
-        for w in sruns:
-            if w not in rseen:
-                radd(w)
-                rappend(w)
-        for comp, stemmed, is_exc in flat:
-            if is_exc and comp not in seen:
-                add(comp)
-                append(comp)
-            if stemmed not in seen:
-                add(stemmed)
-                append(stemmed)
-    return toks, raws
+    A word's recipe is its token sequence (per compound part of each alnum
+    run: ``comp`` when it is an exception term, then ``stemmed`` — what
+    ``tokenize`` emits for the word before first-seen dedup), its raw runs
+    (``_word_special_runs``) and a flag for a leading ``-`` (a possible
+    negation, which the token side leaves to ``tokenize``).  Recipes are
+    flat arrays: word w's token ids are ``tok_flat[tok_off[w]:tok_off[w +
+    1]]``, its raw ids ``raw_flat[raw_off[w]:raw_off[w + 1]]``.  Both kinds
+    share one id space over ``strings``.
+
+    A table only grows; when it is full ``tokenize_arrow`` starts a new one,
+    so ids a caller still holds keep the meaning this table gave them."""
+
+    def __init__(self) -> None:
+        self.word_ids: dict[str, int] = {}
+        self.token_ids: dict[str, int] = {}
+        self.strings: list[str] = []
+        self.tok_off = np.zeros(1, np.int64)
+        self.tok_flat = np.zeros(0, np.int32)
+        self.raw_off = np.zeros(1, np.int64)
+        self.raw_flat = np.zeros(0, np.int32)
+        self.neg = np.zeros(0, bool)
+
+    def intern(self, tokens) -> list[int]:
+        ids = self.token_ids
+        strings = self.strings
+        out = []
+        for t in tokens:
+            i = ids.get(t)
+            if i is None:
+                i = ids[t] = len(strings)
+                strings.append(t)
+            out.append(i)
+        return out
+
+    def lookup(self, words) -> "np.ndarray":
+        """Word ids of the distinct ``words``, adding each new word's
+        recipe."""
+        wids = np.fromiter(
+            map(self.word_ids.get, words, repeat(-1)), np.int64, len(words)
+        )
+        missing = np.flatnonzero(wids < 0)
+        if len(missing):
+            new = [words[j] for j in missing.tolist()]
+            wids[missing] = self._add(new)
+        return wids
+
+    def _add(self, words: list[str]) -> "np.ndarray":
+        tok_lens, tok_vals, raw_lens, raw_vals, negs = [], [], [], [], []
+        for w in words:
+            neg = w[0] == "-"
+            seq = []
+            if not neg:
+                if w.isalnum():
+                    runs = (w,)
+                elif w.isascii():
+                    runs = _ASCII_ALNUM_RUN.findall(w)
+                else:
+                    runs = _alnum_runs(w)
+                for run in runs:
+                    for _lower, comps in _word_candidates(run):
+                        for comp, stemmed, is_exc in comps:
+                            if is_exc:
+                                seq.append(comp)
+                            seq.append(stemmed)
+            t = self.intern(seq)
+            r = self.intern(_word_special_runs(w))
+            tok_lens.append(len(t))
+            tok_vals += t
+            raw_lens.append(len(r))
+            raw_vals += r
+            negs.append(neg)
+        base = len(self.word_ids)
+        for k, w in enumerate(words):
+            self.word_ids[w] = base + k
+
+        def grow(off, flat, lens, vals):
+            ends = off[-1] + np.cumsum(np.asarray(lens, np.int64))
+            return (
+                np.concatenate((off, ends)),
+                np.concatenate((flat, np.asarray(vals, np.int32))),
+            )
+
+        self.tok_off, self.tok_flat = grow(
+            self.tok_off, self.tok_flat, tok_lens, tok_vals
+        )
+        self.raw_off, self.raw_flat = grow(
+            self.raw_off, self.raw_flat, raw_lens, raw_vals
+        )
+        self.neg = np.concatenate((self.neg, np.asarray(negs, bool)))
+        return np.arange(base, base + len(words), dtype=np.int64)
+
+    def take(self, ids: "np.ndarray") -> "pa.Array":
+        """The token strings of ``ids`` as an Arrow string array."""
+        if not len(ids):
+            return pa.array([], pa.string())
+        uniq, inv = np.unique(ids, return_inverse=True)
+        strings = self.strings
+        return pa.array(
+            [strings[i] for i in uniq.tolist()], pa.string()
+        ).take(pa.array(inv.astype(np.int32)))
+
+
+# one table per process: Spark reuses a Python worker across tasks and
+# builds, so the memo outlives a task, as the lru_caches above do
+_TABLE = _WordTable()
+
+
+class BatchTokens(NamedTuple):
+    """Postings of one text batch, as ids into ``table.strings``: each
+    row's tokens (``tok_ids[tok_doc == r]``) and raw special words
+    (``raw_ids[raw_doc == r]``) in first-seen order, so per row they equal
+    ``tokenize(t)`` and ``raw_special_words(t)``; ``dls`` is each row's
+    token count."""
+
+    tok_ids: "np.ndarray"
+    tok_doc: "np.ndarray"
+    raw_ids: "np.ndarray"
+    raw_doc: "np.ndarray"
+    dls: "np.ndarray"
+    table: _WordTable
+
+    def lists(self) -> "tuple[pa.Array, pa.Array]":
+        """The ``tokens`` and ``raws`` list<string> columns (an empty list
+        for a null or empty text)."""
+        n = len(self.dls)
+        out = []
+        for ids, doc in (
+            (self.tok_ids, self.tok_doc),
+            (self.raw_ids, self.raw_doc),
+        ):
+            offs = np.zeros(n + 1, np.int32)
+            np.cumsum(np.bincount(doc, minlength=n), out=offs[1:])
+            out.append(pa.ListArray.from_arrays(offs, self.table.take(ids)))
+        return out[0], out[1]
+
+
+def _expand(off, flat, occ_wid, occ_doc):
+    """Each word occurrence's recipe ids, in occurrence order, with the
+    row of the occurrence."""
+    starts = off[occ_wid]
+    lens = off[occ_wid + 1] - starts
+    ends = np.cumsum(lens)
+    idx = np.arange(int(ends[-1]) if len(ends) else 0, dtype=np.int64)
+    idx += np.repeat(starts - (ends - lens), lens)
+    return flat[idx], np.repeat(occ_doc, lens)
+
+
+def _first_seen(ids, doc, n_ids: int):
+    """Drop repeated (doc, id) pairs, keeping each first occurrence in
+    place (``pandas.unique`` is hash-based and keeps first-appearance
+    order)."""
+    import pandas as pd
+
+    key = pd.unique(doc * n_ids + ids)
+    return (key % n_ids).astype(np.int32), key // n_ids
+
+
+def tokenize_arrow(texts: "pa.Array") -> BatchTokens:
+    """The index build's tokenizer: postings of a batch of texts.
+
+    Per row equal to ``(tokenize(t), raw_special_words(t))``, order
+    included (pinned by the parity tests), but a batch at a time: the texts
+    are split into words and dictionary-encoded by Arrow, each distinct
+    word's recipe is looked up once in this worker's word table, and the
+    word occurrences are expanded to (row, token) pairs and de-duplicated
+    per row in numpy.  A row with a ``-``-prefixed word takes ``tokenize``
+    for its token side, because a negation also removes tokens of earlier
+    words; its raw side ignores negation and stays batched."""
+    global _TABLE
+    table = _TABLE
+    if max(len(table.word_ids), len(table.strings)) >= _WORD_TABLE_MAX:
+        table = _TABLE = _WordTable()
+    n = len(texts)
+    split_texts = replace_rows(
+        texts,
+        pc.match_substring_regex(texts, _PY_ONLY_WHITESPACE_RE),
+        lambda t: " ".join(t.split()),
+    )
+    per_row = pc.ascii_split_whitespace(split_texts)
+    words = pc.list_flatten(per_row)
+    occ_doc = pc.list_parent_indices(per_row)
+    nonempty = pc.not_equal(pc.binary_length(words), 0)
+    words = words.filter(nonempty)
+    occ_doc = occ_doc.filter(nonempty).to_numpy().astype(np.int64)
+    enc = words.dictionary_encode()
+    wids = table.lookup(enc.dictionary.to_numpy(zero_copy_only=False))
+    occ_wid = wids[enc.indices.to_numpy(zero_copy_only=False)]
+
+    n_ids = len(table.strings)
+    raw_ids, raw_doc = _first_seen(
+        *_expand(table.raw_off, table.raw_flat, occ_wid, occ_doc), n_ids
+    )
+    neg_occ = table.neg[occ_wid]
+    if neg_occ.any():
+        neg_rows = np.unique(occ_doc[neg_occ])
+        keep = ~np.isin(occ_doc, neg_rows)
+        occ_wid, occ_doc = occ_wid[keep], occ_doc[keep]
+    tok_ids, tok_doc = _first_seen(
+        *_expand(table.tok_off, table.tok_flat, occ_wid, occ_doc), n_ids
+    )
+    if neg_occ.any():
+        scalar = [tokenize(t) for t in texts.take(neg_rows).to_pylist()]
+        s_ids = np.asarray(
+            table.intern(tk for toks in scalar for tk in toks), np.int32
+        )
+        s_doc = np.repeat(neg_rows, [len(toks) for toks in scalar])
+        tok_ids = np.concatenate((tok_ids, s_ids))
+        tok_doc = np.concatenate((tok_doc, s_doc))
+        order = np.argsort(tok_doc, kind="stable")
+        tok_ids, tok_doc = tok_ids[order], tok_doc[order]
+    dls = np.bincount(tok_doc, minlength=n).astype(np.int32)
+    return BatchTokens(tok_ids, tok_doc, raw_ids, raw_doc, dls, table)

@@ -24,8 +24,9 @@ FUSED SINGLE-PASS PIPELINE (the scale path)
        * pass B (one driver-planned task per bucket, like the merge)
          reads its bucket's IPC shards directly with pyarrow, sorts by
          (conv_id, turn_idx) nulls-first in C++, then:
-         - tokenizes each turn (probe-parity tokenizer, §2.3) — the ONE
-           tokenizer pass ever;
+         - tokenizes the turns a batch at a time
+           (tokenizer.tokenize_arrow: each distinct word's recipe looked up
+           once, postings expanded in numpy) — the ONE tokenizer pass ever;
          - side-writes the bucket's docs/ shard with pyarrow's vectorized
            parquet writer (token arrays never touch parquet unless
            store_tokens);
@@ -49,7 +50,9 @@ FUSED SINGLE-PASS PIPELINE (the scale path)
      encode, the bytes moved by one range gather, the block offset lists
      shifted in numpy).  Terms over max_postings_per_segment, terms with
      overlapping chunk ranges and legacy partials take the per-term path
-     (codec.merge_term_chunks).  Segments carry block-max metadata
+     (codec.merge_term_chunks), which cuts hot terms into segments of
+     whole blocks: a segment holds at most max(max_postings_per_segment,
+     block_size) postings.  Segments carry block-max metadata
      (block_last_doc/block_min_dl + per-block byte offsets for WAND) and
      are side-written into postings/kind=/bucket=/ dirs in 256-row row
      groups.  The packed postings move exactly once, file -> file; Spark
@@ -236,7 +239,10 @@ def _timed(label: str):
 @dataclass
 class BuildConfig:
     n_buckets: int = 32  # parquet partition dirs for term-hash pruning
-    max_postings_per_segment: int = 1 << 17  # hard cap per final segment
+    # cap on postings per final segment, with a floor of one block: the
+    # fused merge cuts hot terms at block boundaries, so the effective cap
+    # is max(max_postings_per_segment, block_size)
+    max_postings_per_segment: int = 1 << 17
     block_size: int = 128  # block-max granularity
     doc_partitions: int | None = None  # defaults to defaultParallelism
     # fused exchange: target rows per range bucket (pass-B task working
@@ -250,12 +256,10 @@ class BuildConfig:
     # the reference's default is 500
     blank_lines_over: int | None = None
     # level-0 flush threshold: bounds the partial builder's in-memory
-    # accumulator (postings held per task before a flush).  The flush
-    # sorts/encodes in cache-resident SORT_CHUNK units internally (the
-    # one-block regroup measured 3-16x per-op inflation at 32-way worker
-    # concurrency — DRAM-bound random access), so this can stay large:
-    # bigger flushes mean fewer duplicated per-term rows in the partial
-    # shards and a cheaper merge.
+    # accumulator (postings held per task before a flush; each flush
+    # sorts and varint-encodes them in one block).  Bigger flushes mean
+    # fewer duplicated per-term rows in the partial shards and a cheaper
+    # merge.
     partial_flush_postings: int = 1 << 20
     # pass-B Arrow slice size fed to the fused core: one add() appends
     # ~rows x avg_dl postings, so this bounds the accumulator's chunk
@@ -293,13 +297,28 @@ def _blank_long_lines(text: str, limit: int) -> str:
     )
 
 
+def _blank_long_lines_arrow(texts: "pa.Array", limit: int) -> "pa.Array":
+    """_blank_long_lines over an Arrow text column (only rows longer than
+    ``limit`` go through Python)."""
+    import pyarrow.compute as pc
+
+    from probe_spark.functions.tokenizer import replace_rows
+
+    return replace_rows(
+        texts,
+        pc.greater(pc.utf8_length(texts), limit),
+        lambda t: _blank_long_lines(t, limit),
+    )
+
+
 def _make_docs_builder(
     offsets: dict[int, int], blank_lines_over: "int | None" = None
 ):
     """mapInArrow generator over range-partitioned, partition-sorted
     transcripts: assigns doc_id = partition_offset + local_row_index (dense,
     globally ordered by (conv_id, turn_idx) because range partition index
-    order IS range order) and runs the ONE tokenizer pass.
+    order IS range order) and runs the ONE tokenizer pass (``tokenize_arrow``
+    per batch; the tokens/raws list columns are built from its id postings).
 
     This replaces a window over a _pid-keyed hash shuffle: hashing ~n_parts
     distinct _pid values into n_parts buckets collides badly (measured: a
@@ -312,7 +331,7 @@ def _make_docs_builder(
         _single_threaded_arrow()
         from pyspark import TaskContext
 
-        from probe_spark.functions.tokenizer import tokenize_and_raw
+        from probe_spark.functions.tokenizer import tokenize_arrow
 
         pid = TaskContext.get().partitionId()
         next_id = offsets.get(pid, 0)
@@ -320,17 +339,11 @@ def _make_docs_builder(
             n = batch.num_rows
             if n == 0:
                 continue
-            texts = batch.column("text").to_pylist()
+            texts = batch.column("text")
             if blank_lines_over is not None:
-                texts_r = [
-                    _blank_long_lines(t, blank_lines_over) if t else t
-                    for t in texts
-                ]
-            else:
-                texts_r = texts
-            both = [tokenize_and_raw(t) if t else ([], []) for t in texts_r]
-            tokens = [tk for tk, _ in both]
-            raws = [rw for _, rw in both]
+                texts = _blank_long_lines_arrow(texts, blank_lines_over)
+            bt = tokenize_arrow(texts)
+            tokens, raws = bt.lists()
             arrays = [
                 pa.array(range(next_id, next_id + n), pa.int64()),
                 batch.column("conv_id"),
@@ -339,9 +352,9 @@ def _make_docs_builder(
                 batch.column("tool"),
                 batch.column("ts"),
                 batch.column("text"),
-                pa.array([len(ts) for ts in tokens], pa.int32()),
-                pa.array(tokens, pa.list_(pa.string())),
-                pa.array(raws, pa.list_(pa.string())),
+                pa.array(bt.dls),
+                tokens,
+                raws,
             ]
             next_id += n
             yield pa.RecordBatch.from_arrays(
@@ -582,20 +595,30 @@ def _assign_and_tokenize(
 
 
 class _PartialAcc:
-    """Map-side-combine core shared by the two-pass partials builder and the
-    fused single-pass builder: accumulates (term-code, doc, dl) triples and
+    """Map-side-combine core shared by the fused single-pass builder and the
+    two-pass partials builder: accumulates (term-code, doc, dl) triples and
     flushes delta+varint-packed PARTIALS_SCHEMA batches to ``sink``.
 
-    Allocation-light by design: per batch it appends THREE large contiguous
-    numpy arrays (global term codes via an interning dict over the batch's
-    DISTINCT terms only, repeated doc ids, repeated dls) — no per-term
-    slicing, no dict-of-small-arrays.  All grouping work happens once per
-    FLUSH: one stable argsort by code, one vectorized varint encode of the
-    whole flush with per-value byte offsets, then per-term byte slicing.
-    The original per-batch dict-of-slices design thrashed caches badly
-    under 32-way worker concurrency (measured 44x per-task inflation at 32
-    concurrent workers vs 8 on the same input; this layout removes ~100x
-    of the small-object allocations)."""
+    Two front ends feed the same core.  ``add_tokens`` (the fused core)
+    takes a ``tokenizer.BatchTokens``: its token ids map to term codes
+    through one numpy array per kind, so only a token id the map has not
+    met goes through the ``(kind, term)`` interning dict.  ``add`` (the
+    two-pass layout) takes Arrow list<string> columns, dictionary-encodes
+    them and interns each batch's distinct terms through that dict.  Both
+    intern a batch's new terms in first-appearance order, the tok kind
+    before the raw kind, so term codes — and with them the flushed row
+    order — depend only on the postings.
+
+    Allocation-light by design: per kind and batch the core copies THREE
+    contiguous slices (term codes, doc ids, dls) into preallocated slabs
+    that live as long as the task; the per-batch inputs (token ids and
+    rows, or the adapter's dictionary codes and repeated row indices) are
+    batch-sized arrays, not flush-sized ones.  All grouping work happens
+    once per FLUSH: one stable argsort by code, one vectorized varint
+    encode of the whole flush with per-value byte offsets, then per-term
+    byte slicing.  The original per-batch dict-of-slices design thrashed
+    caches badly under 32-way worker concurrency (measured 44x per-task
+    inflation at 32 concurrent workers vs 8 on the same input)."""
 
     def __init__(
         self,
@@ -612,17 +635,23 @@ class _PartialAcc:
         self.terms: list[tuple[str, str]] = []
         self._term_buckets: list = []  # np chunks, parallel to terms
         self._hashed_terms = 0
+        # add_tokens: token id -> term code (-1 = not met yet) per kind,
+        # valid for the word table they were filled from
+        self._id_table = None
+        self._id_codes: dict[str, object] = {}
         # preallocated posting slabs, reused across the task's lifetime:
-        # per-batch np.repeat/fancy-index used to allocate ~2 MB of FRESH
-        # pages per add, and on a memory-overcommitted host a guest minor
-        # fault costs ~0.6 ms of kernel time — 32 concurrent workers spent
-        # 80-90% of the machine in the kernel during pass B.  Slabs make
-        # the accumulate path allocation-free regardless of allocator.
+        # the accumulated postings (up to a flush) are written in place,
+        # never concatenated or regrown per batch.  Fresh pages are what
+        # hurt: on a memory-overcommitted host a guest minor fault costs
+        # ~0.6 ms of kernel time, and 32 concurrent workers once spent
+        # 80-90% of the machine in the kernel during pass B.  An add still
+        # allocates its batch-sized inputs (the tokenizer's id arrays, or
+        # the adapter's codes and repeated row indices); only the slabs
+        # are allocation-free.
         self._cap = 0
         self._codes_buf = None  # int32[cap]
         self._ids_buf = None  # int64[cap]
         self._dls_buf = None  # int32[cap]
-        self._rows_scratch = None  # int64[cap] repeat-index scratch
         self.pending = 0
         self.n_docs = 0
         self.total_dl = 0
@@ -645,6 +674,21 @@ class _PartialAcc:
             self._term_buckets = [np.concatenate(self._term_buckets)]
         return self._term_buckets[0] if self._term_buckets else None
 
+    def _intern(self, kind: str, terms) -> "object":
+        """Term codes of ``terms`` (strings), adding new ones in order."""
+        import numpy as np
+
+        term_ids = self.term_ids
+        out = np.empty(len(terms), dtype=np.int32)
+        for i, t in enumerate(terms):
+            key = (kind, t)
+            gid = term_ids.get(key)
+            if gid is None:
+                gid = term_ids[key] = len(self.terms)
+                self.terms.append(key)
+            out[i] = gid
+        return out
+
     def add(self, ids, dls, kind_cols) -> None:
         """ids/dls: numpy arrays (ids ascending — batches stream in docID
         order within a task, which _flush relies on for per-term
@@ -652,8 +696,7 @@ class _PartialAcc:
         import numpy as np
         import pyarrow.compute as pc
 
-        self.n_docs += int(len(ids))
-        self.total_dl += int(dls.sum(dtype=np.int64))
+        self._count(ids, dls)
         for kind, arr in kind_cols:
             lens = (
                 pc.fill_null(pc.list_value_length(arr), 0)
@@ -663,50 +706,73 @@ class _PartialAcc:
             if lens.sum() == 0:
                 continue
             de = arr.flatten().dictionary_encode()
-            codes = de.indices.to_numpy(zero_copy_only=False).astype(
-                np.int32, copy=False
-            )
-            vocab = de.dictionary.to_pylist()
-            term_ids = self.term_ids
-            terms = self.terms
-            gmap = np.empty(len(vocab), dtype=np.int32)
-            for i, t in enumerate(vocab):
-                key = (kind, t)
-                gid = term_ids.get(key)
-                if gid is None:
-                    gid = len(terms)
-                    term_ids[key] = gid
-                    terms.append(key)
-                gmap[i] = gid
-            total = int(len(codes))
-            if self.pending and self.pending + total > max(
-                self._cap, self.flush_postings
-            ):
-                self._emit()
-            self._ensure_capacity(self.pending + total)
-            p = self.pending
-            np.take(gmap, codes, out=self._codes_buf[p : p + total])
-            # repeat(ids, lens) into the slab without a fresh array:
-            # scatter 1 at each row boundary, cumsum in place -> row index
-            # per posting, then gather.  Zero-length rows would collide
-            # boundaries, so compact them away first.
-            nz = lens > 0
-            if not bool(nz.all()):
-                ids_nz, dls_nz, lens_nz = ids[nz], dls[nz], lens[nz]
-            else:
-                ids_nz, dls_nz, lens_nz = ids, dls, lens
-            rows = self._rows_scratch[:total]
-            rows[:] = 0
-            if len(lens_nz) > 1:
-                rows[np.cumsum(lens_nz[:-1])] = 1
-                np.cumsum(rows, out=rows)
-            np.take(ids_nz, rows, out=self._ids_buf[p : p + total])
-            np.take(
-                dls_nz.astype(np.int32, copy=False),
-                rows,
-                out=self._dls_buf[p : p + total],
-            )
-            self.pending += total
+            gmap = self._intern(kind, de.dictionary.to_pylist())
+            codes = gmap[de.indices.to_numpy(zero_copy_only=False)]
+            self._append(ids, dls, np.repeat(np.arange(len(ids)), lens), codes)
+        self._end_batch()
+
+    def add_tokens(self, ids, bt) -> None:
+        """ids: the batch rows' doc ids (ascending, as for ``add``); bt: the
+        rows' ``tokenizer.BatchTokens``, whose ``dls`` are the doc
+        lengths."""
+        import numpy as np
+
+        self._count(ids, bt.dls)
+        if bt.table is not self._id_table:
+            self._id_table = bt.table
+            self._id_codes = {}
+        n_strings = len(bt.table.strings)
+        for kind, tids, tdoc in (
+            ("tok", bt.tok_ids, bt.tok_doc),
+            ("raw", bt.raw_ids, bt.raw_doc),
+        ):
+            if not len(tids):
+                continue
+            m = self._id_codes.get(kind)
+            if m is None or len(m) < n_strings:
+                old = m if m is not None else np.empty(0, np.int32)
+                m = np.full(max(n_strings, 2 * len(old)), -1, np.int32)
+                m[: len(old)] = old
+                self._id_codes[kind] = m
+            codes = m[tids]
+            unmet = codes < 0
+            if unmet.any():
+                met, first = np.unique(tids[unmet], return_index=True)
+                met = met[np.argsort(first)]
+                strings = bt.table.strings
+                m[met] = self._intern(kind, [strings[i] for i in met.tolist()])
+                codes = m[tids]
+            self._append(ids, bt.dls, tdoc, codes)
+        self._end_batch()
+
+    def _count(self, ids, dls) -> None:
+        import numpy as np
+
+        self.n_docs += int(len(ids))
+        self.total_dl += int(dls.sum(dtype=np.int64))
+
+    def _append(self, ids, dls, rows, codes) -> None:
+        """Append one kind's postings: term ``codes[i]`` in row
+        ``rows[i]`` of the batch whose doc ids and lengths are ids/dls."""
+        import numpy as np
+
+        total = int(len(codes))
+        if self.pending and self.pending + total > max(
+            self._cap, self.flush_postings
+        ):
+            self._emit()
+        self._ensure_capacity(self.pending + total)
+        p = self.pending
+        self._codes_buf[p : p + total] = codes
+        np.take(ids, rows, out=self._ids_buf[p : p + total])
+        np.take(
+            dls.astype(np.int32, copy=False),
+            rows,
+            out=self._dls_buf[p : p + total],
+        )
+        self.pending += total
+
+    def _end_batch(self) -> None:
         if self.pending >= self.flush_postings:
             self._emit()
 
@@ -720,7 +786,6 @@ class _PartialAcc:
             ("_codes_buf", np.int32),
             ("_ids_buf", np.int64),
             ("_dls_buf", np.int32),
-            ("_rows_scratch", np.int64),
         ):
             buf = np.empty(cap, dtype=dt)
             old = getattr(self, name)
@@ -736,42 +801,18 @@ class _PartialAcc:
         else:
             self.sink(batch)
 
-    # postings per cache-resident sort unit: the flush regroup (stable
-    # argsort by code + gathers) is random-access, and at 32-way worker
-    # concurrency a multi-million-element block measured 3-16x per-op
-    # inflation (DRAM-bound) while ~128k-element blocks stayed
-    # cache-resident (1.3x).  The chunked flush sorts/encodes per unit and
-    # byte-splices per-term pieces, so partials still get ONE row per
-    # (term, flush) — merge cost and shard size do not grow with the
-    # number of sort units.
-    SORT_CHUNK = 1 << 17
-
     def _flush(self) -> "tuple[pa.RecordBatch, object]":
         import numpy as np
 
-        # slab views, not copies: every downstream step gathers through an
+        from probe_spark.index.codec import _varint_encode_offsets
+
+        # slab views, not copies: every step below gathers through an
         # argsort order (fresh arrays), so nothing retains these views and
         # the slab is free for reuse the moment this returns
         codes = self._codes_buf[: self.pending]
         ids = self._ids_buf[: self.pending]
         dls = self._dls_buf[: self.pending]
         self.pending = 0
-        # The chunked path needs doc ids non-decreasing ACROSS sort units
-        # (its per-term byte pieces concatenate as continued delta
-        # streams); a parquet read split in the two-pass layout can
-        # concatenate files out of doc order — those flushes (and small
-        # ones) take the single-block path with its full-lexsort guard.
-        if len(codes) > self.SORT_CHUNK and bool(
-            np.all(ids[1:] >= ids[:-1])
-        ):
-            return self._flush_chunked(codes, ids, dls)
-        return self._flush_block(codes, ids, dls)
-
-    def _flush_block(self, codes, ids, dls) -> "tuple[pa.RecordBatch, object]":
-        import numpy as np
-
-        from probe_spark.index.codec import _varint_encode_offsets
-
         # stable sort by term code: within a term, arrival order is
         # normally ascending doc order (see add), so runs come out sorted.
         # Guard: a parquet read split can concatenate files out of doc
@@ -836,169 +877,6 @@ class _PartialAcc:
             doc_offs[bstarts] - doc_offs[rep_tstart],
             dl_offs[bstarts] - dl_offs[rep_tstart],
             bcum,
-        )
-
-    def _flush_chunked(
-        self, codes, ids, dls
-    ) -> "tuple[pa.RecordBatch, object]":
-        """Cache-resident flush: sort + varint-encode per SORT_CHUNK unit,
-        then splice each term's per-unit byte pieces in one vectorized
-        gather.  Correct because a term's first gap in each unit is
-        written as (first_id - last_id_seen_for_term), last_id starting
-        at 0 — so 'absolute first value' and 'delta from previous piece'
-        are the same encoding rule and pieces concatenate verbatim."""
-        import numpy as np
-
-        from probe_spark.index.codec import _varint_encode_offsets
-
-        C = self.SORT_CHUNK
-        Bsz = self.block_size
-        n = len(codes)
-        last_id = np.zeros(len(self.terms), dtype=np.int64)
-        # per-run (run = one term's postings within one unit) metadata
-        r_codes, r_counts, r_min, r_max = [], [], [], []
-        r_dsrc, r_dlen, r_lsrc, r_llen = [], [], [], []
-        r_nb, r_bstart = [], []
-        bl_vals, bm_vals, bd_vals, bo_vals = [], [], [], []
-        doc_bufs, dl_bufs = [], []
-        doc_base = 0
-        dl_base = 0
-        block_base = 0
-        for a in range(0, n, C):
-            b = min(a + C, n)
-            cc = codes[a:b]
-            order = np.argsort(cc, kind="stable")
-            sc = cc[order]
-            si = ids[a:b][order]
-            sd = dls[a:b][order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            gaps = np.empty(len(si), dtype=np.uint64)
-            if len(si) > 1:
-                np.subtract(
-                    si[1:], si[:-1], out=gaps[1:], casting="unsafe"
-                )
-            first_codes = sc[starts]
-            gaps[starts] = (
-                si[starts] - last_id[first_codes]
-            ).astype(np.uint64)
-            last_id[first_codes] = si[ends - 1]
-            docs_bin, doc_offs = _varint_encode_offsets(gaps)
-            dl_bin, dl_offs = _varint_encode_offsets(sd.astype(np.uint64))
-            counts = ends - starts
-            nb = (counts + Bsz - 1) // Bsz
-            bcum = np.concatenate(([0], np.cumsum(nb)))
-            rep_tstart = np.repeat(starts, nb)
-            intra = (
-                np.arange(int(bcum[-1]), dtype=np.int64)
-                - np.repeat(bcum[:-1], nb)
-            )
-            bstarts = rep_tstart + intra * Bsz
-            bends = np.minimum(bstarts + Bsz, np.repeat(ends, nb))
-            bl_vals.append(si[bends - 1])
-            bm_vals.append(np.minimum.reduceat(sd, bstarts).astype(np.int32))
-            # unit-relative byte offsets; re-based per term at assembly
-            bd_vals.append(doc_offs[bstarts] - doc_offs[rep_tstart])
-            bo_vals.append(dl_offs[bstarts] - dl_offs[rep_tstart])
-            r_codes.append(first_codes)
-            r_counts.append(counts.astype(np.int64))
-            r_min.append(si[starts])
-            r_max.append(si[ends - 1])
-            r_dsrc.append(doc_base + doc_offs[starts])
-            r_dlen.append(doc_offs[ends] - doc_offs[starts])
-            r_lsrc.append(dl_base + dl_offs[starts])
-            r_llen.append(dl_offs[ends] - dl_offs[starts])
-            r_nb.append(nb.astype(np.int64))
-            r_bstart.append(block_base + bcum[:-1])
-            doc_bufs.append(np.frombuffer(docs_bin, np.uint8))
-            dl_bufs.append(np.frombuffer(dl_bin, np.uint8))
-            doc_base += len(docs_bin)
-            dl_base += len(dl_bin)
-            block_base += int(bcum[-1])
-        # ---- assembly: group runs by term code (chunk order preserved)
-        Rc = np.concatenate(r_codes)
-        Rn = np.concatenate(r_counts)
-        Rmin = np.concatenate(r_min)
-        Rmax = np.concatenate(r_max)
-        Rds = np.concatenate(r_dsrc)
-        Rdl = np.concatenate(r_dlen)
-        Rls = np.concatenate(r_lsrc)
-        Rll = np.concatenate(r_llen)
-        Rnb = np.concatenate(r_nb)
-        Rbs = np.concatenate(r_bstart)
-        DOC = np.concatenate(doc_bufs)
-        DLB = np.concatenate(dl_bufs)
-        BL = np.concatenate(bl_vals)
-        BM = np.concatenate(bm_vals)
-        BD = np.concatenate(bd_vals)
-        BO = np.concatenate(bo_vals)
-        order = np.argsort(Rc, kind="stable")
-        Rc, Rn, Rmin, Rmax = Rc[order], Rn[order], Rmin[order], Rmax[order]
-        Rds, Rdl, Rls, Rll = Rds[order], Rdl[order], Rls[order], Rll[order]
-        Rnb, Rbs = Rnb[order], Rbs[order]
-
-        def _gather(src, src_starts, lens):
-            total = int(lens.sum())
-            dst = np.concatenate(([0], np.cumsum(lens)))
-            idx = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(dst[:-1], lens)
-                + np.repeat(src_starts, lens)
-            )
-            return src[idx], dst
-
-        def _splice_bytes(src, src_starts, lens):
-            """Variable-slice permutation as a memcpy loop: an index-array
-            gather here would build ~8 bytes of int64 indices per byte
-            moved (measured as the chunked flush's DRAM hog at 32-way
-            concurrency); slice assignment moves the bytes with no index
-            materialization."""
-            dst = np.concatenate(([0], np.cumsum(lens)))
-            out = bytearray(int(dst[-1]))
-            mv = memoryview(src)
-            pos = 0
-            for s, ln in zip(src_starts.tolist(), lens.tolist()):
-                out[pos:pos + ln] = mv[s:s + ln]
-                pos += ln
-            return bytes(out), dst
-
-        docs_all, d_dst = _splice_bytes(DOC, Rds, Rdl)
-        dls_all, l_dst = _splice_bytes(DLB, Rls, Rll)
-        # block metadata in run order -> gathered to sorted-run order
-        bl_g, _ = _gather(BL, Rbs, Rnb)
-        bm_g, _ = _gather(BM, Rbs, Rnb)
-        bd_g, _ = _gather(BD, Rbs, Rnb)
-        bo_g, _ = _gather(BO, Rbs, Rnb)
-        # term boundaries over sorted runs
-        tb = np.flatnonzero(np.diff(Rc)) + 1
-        tstarts = np.concatenate(([0], tb))
-        tends = np.concatenate((tb, [len(Rc)]))
-        sel = Rc[tstarts]
-        dfs = np.add.reduceat(Rn, tstarts)
-        # per-run byte offset within its term (re-bases block offsets)
-        term_first_d = np.repeat(d_dst[tstarts], tends - tstarts)
-        term_first_l = np.repeat(l_dst[tstarts], tends - tstarts)
-        adj_d = d_dst[:-1] - term_first_d
-        adj_l = l_dst[:-1] - term_first_l
-        bd_g = bd_g + np.repeat(adj_d, Rnb)
-        bo_g = bo_g + np.repeat(adj_l, Rnb)
-        nb_term = np.add.reduceat(Rnb, tstarts)
-        bcum_t = np.concatenate(([0], np.cumsum(nb_term)))
-        return self._build_batch(
-            sel,
-            dfs,
-            Rmin[tstarts],
-            Rmax[tends - 1],
-            docs_all,
-            np.concatenate((d_dst[tstarts], [int(d_dst[-1])])),
-            dls_all,
-            np.concatenate((l_dst[tstarts], [int(l_dst[-1])])),
-            bl_g,
-            bm_g,
-            bd_g,
-            bo_g,
-            bcum_t,
         )
 
     def _build_batch(
@@ -1201,14 +1079,15 @@ class _BucketShardSink:
 
 
 class _FusedCore:
-    """Per-task fused build core: assigns dense docIDs, tokenizes, feeds
-    the map-side combiner, and side-writes docs parquet shards (one per
-    range bucket) plus ONE level-0 partials shard per task with pyarrow's
-    vectorized writers.  The JVM never row-converts or parquet-writes the
-    bulk data (measured: Spark's row-based ParquetWriteSupport burned ~40
-    JVM core-seconds per million turns); the Spark output is one @stats
-    metadata row per task, so the stats job disappears too (the driver
-    folds the collected rows).
+    """Per-task fused build core: assigns dense docIDs, tokenizes each
+    Arrow batch with ``tokenize_arrow``, hands its id postings to the
+    map-side combiner (``_PartialAcc.add_tokens``: no per-turn Python
+    lists), and side-writes docs parquet shards (one per range bucket) plus
+    ONE level-0 partials shard per task with pyarrow's vectorized writers.
+    The JVM never row-converts or parquet-writes the bulk data (measured:
+    Spark's row-based ParquetWriteSupport burned ~40 JVM core-seconds per
+    million turns); the Spark output is one @stats metadata row per task,
+    so the stats job disappears too (the driver folds the collected rows).
 
     A task processes its range buckets in ASCENDING bucket order — doc ids
     then ascend across the whole task, which _PartialAcc._flush relies on
@@ -1262,7 +1141,7 @@ class _FusedCore:
     def process(self, batch: pa.RecordBatch) -> None:
         import numpy as np
 
-        from probe_spark.functions.tokenizer import tokenize_and_raw
+        from probe_spark.functions.tokenizer import tokenize_arrow
 
         n = batch.num_rows
         if n == 0:
@@ -1273,15 +1152,10 @@ class _FusedCore:
             import resource as _res
 
             f0 = _res.getrusage(_res.RUSAGE_SELF).ru_minflt
-        texts = batch.column("text").to_pylist()
+        texts = batch.column("text")
         if self.blank_lines_over is not None:
-            lim = self.blank_lines_over
-            rank_texts = [_blank_long_lines(t, lim) if t else t for t in texts]
-        else:
-            rank_texts = texts
-        both = [tokenize_and_raw(t) if t else ([], []) for t in rank_texts]
-        tokens = [tk for tk, _ in both]
-        raws = [rw for _, rw in both]
+            texts = _blank_long_lines_arrow(texts, self.blank_lines_over)
+        bt = tokenize_arrow(texts)
         if tt is not None:
             tt["tok"] = tt.get("tok", 0.0) + time.time() - t0
             f1 = _res.getrusage(_res.RUSAGE_SELF).ru_minflt
@@ -1289,10 +1163,7 @@ class _FusedCore:
             f0 = f1
             t0 = time.time()
         ids = np.arange(self.next_id, self.next_id + n, dtype=np.int64)
-        dls = np.array([len(ts) for ts in tokens], dtype=np.int32)
-        tok_arr = pa.array(tokens, pa.list_(pa.string()))
-        raw_arr = pa.array(raws, pa.list_(pa.string()))
-        self.acc.add(ids, dls, [("tok", tok_arr), ("raw", raw_arr)])
+        self.acc.add_tokens(ids, bt)
         if tt is not None:
             tt["pack"] = tt.get("pack", 0.0) + time.time() - t0
             f1 = _res.getrusage(_res.RUSAGE_SELF).ru_minflt
@@ -1312,14 +1183,14 @@ class _FusedCore:
             batch.column("tool"),
             ts_col,
             batch.column("text"),
-            pa.array(dls.astype(np.int32)),
+            pa.array(bt.dls),
         ]
         names = [
             "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
             "text", "dl",
         ]
         if self.store_tokens:
-            arrays += [tok_arr, raw_arr]
+            arrays += list(bt.lists())
             names += ["tokens", "raws"]
         self.next_id += n
         docs_batch = pa.RecordBatch.from_arrays(arrays, names=names)

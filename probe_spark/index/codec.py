@@ -260,7 +260,11 @@ def split_encoded_chunk(
     piece starting at block s only needs its first varint rewritten from
     gap-relative-to-block_last[s-1] to the absolute doc id.  Chunks carry
     uniform ``block``-sized blocks except the tail (the _flush layout), so
-    piece sizes are exact from arithmetic."""
+    piece sizes are exact from arithmetic.
+
+    A piece holds ``max(1, max_seg // block)`` whole blocks, so the cap has
+    a floor of one block: with ``max_seg < block`` a piece holds up to
+    ``block`` postings, i.e. at most ``max(max_seg, block)``."""
     if c.df <= max_seg:
         return [c]
     nb = len(c.block_last)

@@ -64,6 +64,17 @@ def is_only_excluded_terms(expr: Expr) -> bool:
     return all(t.excluded for t in walk_terms(expr))
 
 
+def gate_keywords(expr: Expr) -> list[str] | None:
+    """Early termination (elastic_query.rs:372-374): the keywords a doc
+    must hold at least one of to qualify, or None for an only-excluded
+    query (then a doc holding none qualifies) — otherwise 'foo OR -bar'
+    would accept every unrelated doc at score 0.  Every lane applies this
+    gate; ``evaluate`` is its scalar form."""
+    if is_only_excluded_terms(expr):
+        return None
+    return sorted(extract_query_terms(expr))
+
+
 def special_terms(expr: Expr) -> frozenset[str]:
     """Keywords registered via add_special_term in the reference parser
     (elastic_query.rs:768-773): exact or excluded terms, lowercased."""
@@ -122,12 +133,8 @@ def evaluate(expr: Expr, present, ignore_negatives: bool = False) -> bool:
     A doc is a candidate iff evaluate(...) is True (block-level filter
     semantics, negations enforced).
     """
-    # early termination (elastic_query.rs:372-374): a doc matching NO query
-    # keyword at all qualifies only when the query is only-excluded terms —
-    # otherwise 'foo OR -bar' would accept every unrelated doc at score 0
-    if not is_only_excluded_terms(expr) and not any(
-        present(kw) for kw in extract_query_terms(expr)
-    ):
+    gate = gate_keywords(expr)
+    if gate is not None and not any(present(kw) for kw in gate):
         return False
     has_req = has_required_term(expr)
     if has_req and not ignore_negatives:

@@ -698,6 +698,15 @@ class SearchEngine:
             return rec(e.left) | rec(e.right)
 
         result = rec(expr)
+        # the any-keyword gate (ast.gate_keywords): load-bearing on the
+        # zero-included path, whose candidates are every doc
+        # ('absentterm OR -commonterm'), and on the repair-widened set
+        gate = ast.gate_keywords(expr)
+        if gate is not None:
+            any_kw = F.lit(False)
+            for kw in gate:
+                any_kw = any_kw | pres(kw)
+            result = result & any_kw
         if has_req:
             req_check = F.lit(True)
             for t in ast.walk_terms(expr):

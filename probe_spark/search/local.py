@@ -215,17 +215,16 @@ class LocalSearcher:
             return eval_rec(e.left) | eval_rec(e.right)
 
         ok = eval_rec(expr)
-        # early termination (elastic_query.rs:372-374, = ast.evaluate's
-        # gate, same guard as ranged._score_eval_numpy): a doc matching
-        # NO query keyword qualifies only for an only-excluded query.
-        # Vacuous over the postings-union candidates (every one holds
-        # >=1 keyword by construction) but LOAD-BEARING on the
-        # repair-widened set: an affected doc whose retokenization holds
-        # none of the query's keywords must not qualify at score 0
-        # through an excluded-term branch.
-        if not ast.is_only_excluded_terms(expr):
+        # the any-keyword gate (ast.gate_keywords).  Vacuous over the
+        # postings-union candidates (every one holds >=1 keyword by
+        # construction) but LOAD-BEARING on the repair-widened set: an
+        # affected doc whose retokenization holds none of the query's
+        # keywords must not qualify at score 0 through an excluded-term
+        # branch.
+        gate = ast.gate_keywords(expr)
+        if gate is not None:
             any_kw = np.zeros(n, dtype=bool)
-            for kw in present:
+            for kw in gate:
                 any_kw |= pres(kw)
             ok &= any_kw
         if has_req:

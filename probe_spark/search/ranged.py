@@ -127,16 +127,16 @@ def _score_eval_numpy(
         return rec_eval(e.left) | rec_eval(e.right)
 
     ok = rec_eval(expr)
-    # early termination (elastic_query.rs:372-374, = ast.evaluate's gate):
-    # a doc matching NO query keyword qualifies only for an only-excluded
-    # query.  Vacuous over a query's OWN candidates (every candidate holds
-    # >=1 keyword by construction) but LOAD-BEARING on the batch path,
-    # where the shared candidate set is the union over all queries in the
-    # batch: without it, a shape like '"a" AND "a" OR -"b"' accepts other
-    # queries' candidates at score 0 (Or(false, excluded-not-present)).
-    if not ast.is_only_excluded_terms(expr):
+    # the any-keyword gate (ast.gate_keywords).  Vacuous over a query's
+    # OWN candidates (every candidate holds >=1 keyword by construction)
+    # but LOAD-BEARING on the batch path, where the shared candidate set is
+    # the union over all queries in the batch: without it, a shape like
+    # '"a" AND "a" OR -"b"' accepts other queries' candidates at score 0
+    # (Or(false, excluded-not-present)).
+    gate = ast.gate_keywords(expr)
+    if gate is not None:
         any_kw = np.zeros(n, dtype=bool)
-        for kw in ast.extract_query_terms(expr):
+        for kw in gate:
             any_kw = any_kw | pres(kw)
         ok = ok & any_kw
     if has_req:

@@ -157,6 +157,21 @@ class TestCli:
             r["p95_sec"] >= r["p50_sec"] >= 0.0 for r in rows[:-1]
         )
 
+    @pytest.mark.parametrize("content", ["", "  \n\t\n\n"])
+    def test_benchmark_empty_queries_file(self, tmp_path, capsys, content):
+        # an empty suite is an error before any lane opens the index (the
+        # index path here does not exist)
+        from probe_spark import cli
+
+        qf = tmp_path / "queries.txt"
+        qf.write_text(content)
+        rc = cli.main(["benchmark", "--index", str(tmp_path / "no_index"),
+                       "--queries-file", str(qf), "--lane", "both"])
+        assert rc == 2
+        out = capsys.readouterr()
+        assert out.out == ""
+        assert "no queries in" in out.err
+
     def test_build_filter_restricts_corpus(self, spark, tmp_path, capsys):
         from probe_spark import cli
         from probe_spark.fixtures import write_transcripts_parquet

@@ -239,114 +239,6 @@ def test_split_then_splice_roundtrip(p, blocks_per_piece):
     assert got_dls.tolist() == dls.tolist()
 
 
-class TestChunkedFlushEquivalence:
-    """_PartialAcc._flush_chunked must produce batches whose rows decode
-    identically to _flush_block on the same postings (same terms, dfs,
-    min/max, decoded ids/dls, block metadata semantics)."""
-
-    def _mk_acc(self, sort_chunk):
-        from probe_spark.index.build import _PartialAcc
-
-        out = []
-        acc = _PartialAcc(1 << 30, lambda b, buckets=None: out.append(b), 8)
-        acc.SORT_CHUNK = sort_chunk
-        return acc, out
-
-    def _feed(self, acc, n_docs=4000, vocab=700, seed=3):
-        import numpy as np
-        import pyarrow as pa
-
-        rng = np.random.default_rng(seed)
-        words = [f"w{i}" for i in range(vocab)]
-        toks = [
-            sorted({words[j] for j in rng.integers(0, vocab, 30)})
-            for _ in range(n_docs)
-        ]
-        ids = np.arange(100, 100 + n_docs, dtype=np.int64)
-        dls = np.array([len(t) for t in toks], dtype=np.int32)
-        arr = pa.array(toks, pa.list_(pa.string()))
-        acc.add(ids, dls, [("tok", arr)])
-        acc._emit()
-
-    def _canon(self, batches):
-        from probe_spark.index.codec import decode_postings
-
-        rows = {}
-        for b in batches:
-            for r in b.to_pylist():
-                ids, dls = decode_postings(r["docs_bin"], r["dl_bin"])
-                key = (r["kind"], r["term"])
-                assert key not in rows, "duplicate term row in one flush"
-                rows[key] = (
-                    r["df_part"], r["min_doc"], r["max_doc"],
-                    ids.tolist(), dls.tolist(),
-                    r["block_last"], r["block_min_dl"],
-                )
-        return rows
-
-    def test_chunked_equals_block(self):
-        # chunked path: tiny SORT_CHUNK forces many units
-        acc_c, out_c = self._mk_acc(sort_chunk=1 << 10)
-        self._feed(acc_c)
-        # block path: huge SORT_CHUNK keeps the single-block branch
-        acc_b, out_b = self._mk_acc(sort_chunk=1 << 30)
-        self._feed(acc_b)
-        rows_c, rows_b = self._canon(out_c), self._canon(out_b)
-        assert rows_c.keys() == rows_b.keys()
-        for k in rows_b:
-            # ids/dls/df/min/max must match exactly; block boundaries may
-            # differ (units close blocks early), but block_last must be a
-            # subsequence-compatible cover: same first/last and min_dl
-            # consistent per covered range — compare the decode-relevant
-            # invariants
-            cb, bb = rows_c[k], rows_b[k]
-            assert cb[0] == bb[0] and cb[1] == bb[1] and cb[2] == bb[2], k
-            assert cb[3] == bb[3] and cb[4] == bb[4], k
-            assert cb[5][-1] == bb[5][-1], k
-
-    def test_chunked_wand_block_decode(self):
-        """Block-max metadata from the chunked flush must satisfy the
-        WAND decoder's contract: decoding any subset of blocks via the
-        byte offsets yields exactly those blocks' postings."""
-        import numpy as np
-
-        from probe_spark.index.codec import decode_blocks, decode_postings
-
-        acc_c, out_c = self._mk_acc(sort_chunk=1 << 10)
-        self._feed(acc_c, n_docs=3000, vocab=40, seed=5)
-        for b in out_c:
-            for r in b.to_pylist():
-                ids, dls = decode_postings(r["docs_bin"], r["dl_bin"])
-                offs = r["block_doc_off"]
-                loffs = r["block_dl_off"]
-                lasts = r["block_last"]
-                nb = len(lasts)
-                rng = np.random.default_rng(7)
-                keep = sorted(
-                    set(rng.integers(0, nb, max(1, nb // 2)).tolist())
-                )
-                got_ids, got_dls = decode_blocks(
-                    r["docs_bin"], r["dl_bin"],
-                    np.asarray(lasts, np.int64),
-                    np.asarray(offs, np.int64),
-                    np.asarray(loffs, np.int64),
-                    np.asarray(keep, np.int64),
-                )
-                # reference: per-block slices of the full decode
-                bl = [0] + [
-                    int(np.searchsorted(ids, lasts[i], side="right"))
-                    for i in range(nb)
-                ]
-                want_ids = np.concatenate(
-                    [ids[bl[i]:bl[i + 1]] for i in keep]
-                )
-                want_dls = np.concatenate(
-                    [dls[bl[i]:bl[i + 1]] for i in keep]
-                )
-                assert got_ids.tolist() == want_ids.tolist()
-                assert got_dls.tolist() == want_dls.tolist()
-
-
 @given(_postings(), st.integers(min_value=1, max_value=10**11))
 @settings(max_examples=150, deadline=None)
 def test_leading_varint_shift_offsets_whole_segment(p, off):

@@ -109,3 +109,71 @@ def test_local_k_zero_returns_nothing(local_searcher, dist_engine, query):
     assert local_searcher.search(query, k=10)  # the terms do occur
     assert local_searcher.search(query, k=0) == []
     assert dist_engine.search(query, k=0).collect() == []
+
+
+# doc 1 holds the raw word 'backend' (so the exact term's repair join
+# retokenizes it) but negates it, so its retokenization holds no query
+# keyword; 'backend' is repair-affecting: special, it stays whole
+GATE_TEXTS = [
+    "use a backend here",
+    "skip -backend now",
+    "error in the handler",
+    "plain words only",
+    "backend error mix",
+]
+
+
+@pytest.fixture(scope="module")
+def gate_index(spark, tmp_index_root):
+    import datetime
+
+    from probe_spark.index.build import BuildConfig, IndexBuilder
+
+    rows = [
+        {
+            "conv_id": f"c{i}",
+            "turn_idx": 0,
+            "role": "user",
+            "text": t,
+            "tool": "",
+            "ts": datetime.datetime(2026, 1, 1),
+        }
+        for i, t in enumerate(GATE_TEXTS)
+    ]
+    path = f"{tmp_index_root}/idx_gate"
+    IndexBuilder(spark, BuildConfig(n_buckets=2)).build(
+        spark.createDataFrame(rows), path
+    )
+    return path
+
+
+@pytest.mark.parametrize(
+    "query", ['"backend" OR -error', '-error OR "backend"']
+)
+def test_zero_included_any_keyword_gate(spark, gate_index, query):
+    """A doc holding none of the query's keywords qualifies only for an
+    only-excluded query.  On the engine's full path (prune=False) the
+    repair join adds every affected doc as a candidate, and without the
+    gate in _compile_eval doc 1 qualified at score 0 through the excluded
+    branch; the local lane and the oracle apply the gate."""
+    from probe_spark import oracle
+    from probe_spark.functions.tokenizer import tokenize
+    from probe_spark.search.engine import SearchEngine
+    from probe_spark.search.local import LocalSearcher
+
+    assert tokenize("backend") != tokenize("backend", frozenset({"backend"}))
+    k = len(GATE_TEXTS)
+    want = oracle.search(GATE_TEXTS, query, k=k)
+    local = LocalSearcher(gate_index).search(query, k=k, with_metadata=False)
+    dist = (
+        SearchEngine(spark, gate_index)
+        .search(query, k=k, prune=False, with_metadata=False)
+        .collect()
+    )
+    ids = [w.doc_id for w in want]
+    assert ids == [0, 4] or ids == [4, 0]
+    assert [r["doc_id"] for r in local] == ids, query
+    assert [r["doc_id"] for r in dist] == ids, query
+    for w, lr, dr in zip(want, local, dist):
+        assert abs(lr["score"] - w.score) < 1e-9, query
+        assert abs(dr["score"] - w.score) < 1e-9, query

@@ -262,5 +262,9 @@ def test_max_seg_64_build_verifies(spark, tmp_index_root):
     assert rep["ok"], rep
     post = pq.read_table(f"{path}/postings")
     assert pc.max(post.column("seg_seq")).as_py() > 0
-    # hot terms split at whole blocks: a piece is at least one block
-    assert pc.max(post.column("df_seg")).as_py() <= 128
+    # hot terms split at whole blocks, so the segment cap has a floor of
+    # one block: max_seg=64 under 128-posting blocks gives 128-posting
+    # segments (BuildConfig.max_postings_per_segment)
+    cap = max(cfg.max_postings_per_segment, cfg.block_size)
+    assert cfg.block_size > cfg.max_postings_per_segment
+    assert pc.max(post.column("df_seg")).as_py() == cap

@@ -158,3 +158,13 @@ class TestEvaluate:
         assert ast.evaluate(
             expr, self._present({"data", "base", "sqlite"}), ignore_negatives=True
         )
+
+    def test_any_keyword_gate(self):
+        # a doc holding no query keyword qualifies only for an
+        # only-excluded query; excluded keywords count toward the gate
+        expr, _ = parse_query("absentterm OR -commonterm")
+        assert ast.gate_keywords(expr) == sorted(ast.extract_query_terms(expr))
+        assert not ast.evaluate(expr, self._present(set()))
+        expr, _ = parse_query("-commonterm")
+        assert ast.gate_keywords(expr) is None
+        assert ast.evaluate(expr, self._present(set()))

@@ -191,9 +191,31 @@ def test_stem_idempotent_on_lowercase(word):
     assert stem(word) == stem(word)
 
 
+def _batch_rows(texts):
+    """tokenize_arrow's per-row (tokens, raws) and dls for ``texts``."""
+    import pyarrow as pa
+
+    from probe_spark.functions.tokenizer import tokenize_arrow
+
+    bt = tokenize_arrow(pa.array(texts, pa.string()))
+    toks, raws = bt.lists()
+    got = list(zip(toks.to_pylist(), raws.to_pylist()))
+    assert bt.dls.tolist() == [len(t) for t, _ in got]
+    return got
+
+
+def _scalar_rows(texts):
+    from probe_spark.functions.tokenizer import raw_special_words, tokenize
+
+    return [
+        (tokenize(t), raw_special_words(t)) if t else ([], []) for t in texts
+    ]
+
+
 class TestTokenizeAndRaw:
-    """tokenize_and_raw must equal (tokenize(t), raw_special_words(t))
-    exactly — the fused build rides it for every turn."""
+    """The build's batch tokenizer (tokenize_arrow) must equal
+    (tokenize(t), raw_special_words(t)) per row, order included — the
+    fused and two-pass builds ride it for every turn."""
 
     CASES = [
         "Hello world the HashMap getUserName",
@@ -206,43 +228,140 @@ class TestTokenizeAndRaw:
         "   ",
         "-",
         "repeat repeat REPEAT RePeat",
+        # a negated word removes tokens of EARLIER words
+        "a b -a",
+        "error handler -error handler",
+        # camelCase, compound and exception words
+        "getUserName parseJSONToHTML5 APIDefinition OAuth2Provider",
+        "blackmail whitelist hashtable keyboard database",
+        "JavaScript TypeScript iOS API http",
+        "",
+        None,
     ]
 
     def test_parity_fixed(self):
-        from probe_spark.functions.tokenizer import (
-            raw_special_words,
-            tokenize,
-            tokenize_and_raw,
-        )
-
+        assert _batch_rows(self.CASES) == _scalar_rows(self.CASES)
+        # one row at a time too (no cross-row state)
         for t in self.CASES:
-            assert tokenize_and_raw(t) == (tokenize(t), raw_special_words(t)), t
+            assert _batch_rows([t]) == _scalar_rows([t]), t
 
-    def test_parity_fixture_corpus(self, spark):
-        from probe_spark.fixtures import transcripts_df
-        from probe_spark.functions.tokenizer import (
-            raw_special_words,
-            tokenize,
-            tokenize_and_raw,
+    def test_null_and_empty_batches(self):
+        assert _batch_rows([None, "", "  ", None]) == [([], [])] * 4
+        assert _batch_rows([]) == []
+
+    def test_unicode_snippets(self):
+        from probe_spark.fixtures import _UNICODE_SNIPPETS
+
+        texts = _UNICODE_SNIPPETS + [
+            " ".join(_UNICODE_SNIPPETS),
+            "x " + "\n".join(_UNICODE_SNIPPETS) + " -emoji",
+        ]
+        assert _batch_rows(texts) == _scalar_rows(texts)
+
+    def test_python_only_separators(self):
+        """str.split() separators that Arrow's ASCII split does not know
+        (\x1c-\x1f, \x85, \xa0, \u2028, \u3000, ...) split words here too."""
+        from probe_spark.functions.tokenizer import PY_ONLY_WHITESPACE
+
+        texts = [f"alpha{c}betaGamma{c}{c}delta" for c in PY_ONLY_WHITESPACE]
+        texts += [
+            "error\x1chandler\x1dtimeout\x1eretry\x1fdone",
+            "cache\x85miss\xa0hit\u2028line\u3000wide",
+            "plain ascii row between",
+            "\u3000-error\u3000error handler",
+        ]
+        got = _batch_rows(texts)
+        assert got == _scalar_rows(texts)
+        assert got[0][0] == ["alpha", "beta", "gamma", "delta"]
+
+    def test_python_only_whitespace_is_complete(self):
+        """PY_ONLY_WHITESPACE is exactly str.isspace() minus the six
+        characters Arrow's ascii_split_whitespace splits on."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from probe_spark.functions.tokenizer import PY_ONLY_WHITESPACE
+
+        space = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+        split = pc.ascii_split_whitespace(
+            pa.array([f"a{c}b" for c in space])
+        ).to_pylist()
+        arrow_splits = {c for c, parts in zip(space, split) if len(parts) == 2}
+        assert arrow_splits == set(" \t\n\v\f\r")
+        assert set(PY_ONLY_WHITESPACE) == set(space) - arrow_splits
+        assert len(PY_ONLY_WHITESPACE) == len(set(PY_ONLY_WHITESPACE))
+
+    def test_blank_lines_over(self):
+        """The builds blank long lines before tokenizing (Arrow-side for
+        the batch tokenizer, per text for the scalar one)."""
+        import pyarrow as pa
+
+        from probe_spark.functions.tokenizer import tokenize_arrow
+        from probe_spark.index.build import (
+            _blank_long_lines,
+            _blank_long_lines_arrow,
         )
 
         texts = [
-            r["text"]
-            for r in transcripts_df(spark, n_convs=300, seed=11).collect()
-            if r["text"]
+            "short line\n" + "verylongword " * 20 + "\nkept tail",
+            "x" * 30,
+            None,
+            "fine",
+            "naïve " * 10 + "\ncafé",
         ]
+        bt = tokenize_arrow(
+            _blank_long_lines_arrow(pa.array(texts, pa.string()), 25)
+        )
+        toks, raws = bt.lists()
+        want = _scalar_rows(
+            [_blank_long_lines(t, 25) if t else t for t in texts]
+        )
+        assert list(zip(toks.to_pylist(), raws.to_pylist())) == want
+        assert "verylongword" not in toks[0].as_py()
+
+    def test_word_table_restart_keeps_old_ids(self, monkeypatch):
+        """A full word table is replaced, not cleared: ids returned before
+        the restart still name the same strings."""
+        import pyarrow as pa
+
+        from probe_spark.functions import tokenizer as T
+
+        monkeypatch.setattr(T, "_TABLE", T._WordTable())
+        first = T.tokenize_arrow(pa.array(["error handler", "timeout"]))
+        before = first.table.take(first.tok_ids).to_pylist()
+        monkeypatch.setattr(T, "_WORD_TABLE_MAX", 1)
+        second = T.tokenize_arrow(pa.array(["zebra error"]))
+        assert second.table is not first.table
+        assert first.table.take(first.tok_ids).to_pylist() == before
+        assert _batch_rows(self.CASES) == _scalar_rows(self.CASES)
+
+    def test_parity_fixture_corpus(self, spark):
+        from probe_spark.fixtures import transcripts_df
+
+        texts = [r["text"] for r in transcripts_df(spark, n_convs=300, seed=11).collect()]
         assert len(texts) > 1000
-        for t in texts:
-            assert tokenize_and_raw(t) == (tokenize(t), raw_special_words(t))
+        for a in range(0, len(texts), 512):
+            chunk = texts[a : a + 512]
+            assert _batch_rows(chunk) == _scalar_rows(chunk)
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.text(max_size=200))
-def test_tokenize_and_raw_parity_property(text):
-    from probe_spark.functions.tokenizer import (
-        raw_special_words,
-        tokenize,
-        tokenize_and_raw,
-    )
+@given(st.lists(st.one_of(st.none(), st.text(max_size=200)), max_size=6))
+def test_tokenize_and_raw_parity_property(texts):
+    assert _batch_rows(texts) == _scalar_rows(texts)
 
-    assert tokenize_and_raw(text) == (tokenize(text), raw_special_words(text))
+
+_WORDISH = st.text(
+    alphabet=st.sampled_from(
+        list("abcXYZ09-_.'é日 \t\n") + ["\x1c", "\x85", "\xa0", " ", "　"]
+    ),
+    max_size=40,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.one_of(st.none(), _WORDISH), max_size=8))
+def test_batch_parity_separators_and_negation(texts):
+    """Dense draws of '-', camel case, punctuation and the separators
+    Arrow's ASCII split does not know."""
+    assert _batch_rows(texts) == _scalar_rows(texts)
