@@ -299,7 +299,7 @@ def run(sf_dir: str, cpus: int, skip_queries: bool = False) -> dict:
         result["query_p95_sec"] = round(lat[int(0.95 * (len(lat) - 1))], 3)
 
         # steady-state pass: the same suite again against the now-warm
-        # engine caches (per-term WAND metadata, bootstrap blocks, repair
+        # engine caches (per-term df and segment metadata, repair
         # bundles) — a query service's repeat-query latency
         lat2 = []
         for qid, qtext, k in REFERENCE_QUERIES:

@@ -650,7 +650,8 @@ def main(argv: list[str] | None = None) -> int:
                         "filename matching; its --exclude-filenames "
                         "corresponds to omitting this flag)")
     s.add_argument("--no-prune", action="store_true",
-                   help="disable block-max WAND pruning")
+                   help="force the full path (no single-term or "
+                        "doc-range route)")
     s.add_argument("--session", default=None,
                    help="session id: drop results already returned in this "
                         "session and record the new ones")

@@ -723,9 +723,11 @@ def _q_streaming_windows(spark, sf_dir):
 
 
 def _q_bm25_topk_wand(spark, sf_dir):
-    """Top-k through the block-max WAND path (disjunctive single-keyword
-    query -> eligible); the oracle is the naive full-scoring SQL + LIMIT,
-    so the driver compare IS the rank-identity check."""
+    """Top-k of a pure disjunction of single-keyword terms, the shape the
+    block-max WAND route served until it was deleted; it now takes the
+    doc-range route.  The entry keeps its name so results stay comparable
+    across rounds.  The oracle is the naive full-scoring SQL + LIMIT, so
+    the driver compare IS the rank-identity check."""
     eng = get_engine(spark, sf_dir)
     res = eng.search("hash OR join", k=50, with_metadata=False)
     return res.select("doc_id", F.round("score", 6).alias("score"))
@@ -808,11 +810,11 @@ def _q_compacted_index(spark, sf_dir):
 
 def _q_bm25_topk_ranged(spark, sf_dir):
     """Top-k through the doc-range-partitioned path (search/ranged.py):
-    a boolean query with a stable excluded special is not WAND-eligible
-    and not a single conjunctive Term, so with k given it takes the
-    one-exchange ranged fan-out.  The oracle is the naive full-scoring
-    SQL + the engine's ordering + LIMIT, so the driver compare IS the
-    ranged path's rank-identity check."""
+    a boolean query with a stable excluded special is not a single
+    keyword and not a single conjunctive Term, so with k given it takes
+    the one-exchange ranged fan-out.  The oracle is the naive
+    full-scoring SQL + the engine's ordering + LIMIT, so the driver
+    compare IS the ranged path's rank-identity check."""
     eng = get_engine(spark, sf_dir)
     res = eng.search("hash -dup", k=50, with_metadata=False)
     return res.select("doc_id", F.round("score", 6).alias("score"))
@@ -822,7 +824,7 @@ def _q_bm25_topk_local(spark, sf_dir):
     """Top-k through the driver-local front-end (search/local.py — pyarrow
     segment reads + numpy scoring, no Spark jobs), lifted into a DataFrame
     so the driver's DuckDB compare pins the local path's rank-identity
-    against the same naive full-scoring oracle as the WAND path."""
+    against the same naive full-scoring oracle as ``bm25_topk_wand``."""
     from probe_spark.search.local import LocalSearcher
 
     get_engine(spark, sf_dir)  # ensure the index exists on disk

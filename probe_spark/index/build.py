@@ -52,10 +52,11 @@ FUSED SINGLE-PASS PIPELINE (the scale path)
      overlapping chunk ranges and legacy partials take the per-term path
      (codec.merge_term_chunks), which cuts hot terms into segments of
      whole blocks: a segment holds at most max(max_postings_per_segment,
-     block_size) postings.  Segments carry block-max metadata
-     (block_last_doc/block_min_dl + per-block byte offsets for WAND) and
-     are side-written into postings/kind=/bucket=/ dirs in 256-row row
-     groups.  The packed postings move exactly once, file -> file; Spark
+     block_size) postings.  Segments carry block metadata
+     (block_last_doc/block_min_dl + per-block byte offsets, the doc-range
+     route's range index) and are side-written into
+     postings/kind=/bucket=/ dirs in 256-row row groups.  The packed
+     postings move exactly once, file -> file; Spark
      carries only the plan in and per-segment metadata out, which the
      driver folds with one Arrow group_by into the manifest (no re-read
      of the index).
@@ -130,8 +131,8 @@ POSTINGS_SCHEMA = StructType(
         StructField("dl_bin", BinaryType(), False),
         StructField("block_last_doc", ArrayType(LongType(), False), False),
         StructField("block_min_dl", ArrayType(IntegerType(), False), False),
-        # byte start offsets per block into docs_bin / dl_bin (block-max
-        # WAND decodes only surviving blocks)
+        # byte start offsets per block into docs_bin / dl_bin (the
+        # doc-range route decodes only the blocks overlapping its range)
         StructField("block_doc_off", ArrayType(LongType(), False), False),
         StructField("block_dl_off", ArrayType(LongType(), False), False),
         StructField("bucket", IntegerType(), False),
@@ -243,7 +244,7 @@ class BuildConfig:
     # fused merge cuts hot terms at block boundaries, so the effective cap
     # is max(max_postings_per_segment, block_size)
     max_postings_per_segment: int = 1 << 17
-    block_size: int = 128  # block-max granularity
+    block_size: int = 128  # postings per block (range-index granularity)
     doc_partitions: int | None = None  # defaults to defaultParallelism
     # fused exchange: target rows per range bucket (pass-B task working
     # set).  Small buckets keep full-width worker concurrency cache-

@@ -110,12 +110,12 @@ def encode_postings(doc_ids: np.ndarray, dls: np.ndarray, block: int = 128):
     """Pack sorted doc ids + doc lengths into
     (docs_bin, dl_bin, block_last, block_min_dl, block_doc_off, block_dl_off).
 
-    Block metadata serves block-max pruning (WAND upper bounds: BM25 with
-    tf=1 is monotone decreasing in dl, so the per-block max score for a term
-    is idf * C(min_dl)); the byte offsets let a query decode ONLY surviving
-    blocks (each block's delta stream is self-contained given the previous
-    block's last doc id — the first gap of block 0 is the absolute id, so
-    base 0 works uniformly).
+    Block metadata is a range index: block_last plus the byte offsets let a
+    query decode ONLY the blocks overlapping a doc range (each block's delta
+    stream is self-contained given the previous block's last doc id — the
+    first gap of block 0 is the absolute id, so base 0 works uniformly).
+    block_min_dl has no reader; it stays in the layout until the next
+    FORMAT_VERSION change.
     """
     order = np.argsort(doc_ids, kind="stable")
     d = doc_ids[order].astype(np.int64)
@@ -312,7 +312,7 @@ def splice_chunks(chunks: list[EncodedChunk]) -> EncodedChunk:
     no sort, no int64 inflation (the merge phase's former memory-bandwidth
     wall).  The result satisfies every ``encode_postings`` invariant
     except uniform block sizes, which no consumer assumes (decode_blocks
-    resolves offsets; WAND reads per-block last_doc/min_dl)."""
+    resolves offsets from per-block last_doc)."""
     if len(chunks) == 1:
         c = chunks[0]
         return EncodedChunk(

@@ -414,10 +414,11 @@ def merge_many(
     — so the merge rewrites one varint + the numeric doc metadata per
     segment and moves the posting bytes exactly once, no decode, no sort,
     no shuffle (the same invariant splice_chunks exploits, codec.py).
-    Segment addresses (term, salt, seg_seq) may collide between inputs;
-    every query path already disambiguates by min_doc (delta builds
-    created the same situation — see wand.py BlockMeta note), and doc
-    ranges are disjoint by construction.
+    Segment addresses (term, salt, seg_seq) may collide between inputs,
+    as they already do after streamed delta builds (seg_seq restarts at
+    0 per batch); no query path keys segments by that address — they
+    select by term and doc range — and doc ranges are disjoint by
+    construction.
 
     The merged index is rank- and score-IDENTICAL to a fresh build over
     the concatenated corpus when the source order is the (conv_id,

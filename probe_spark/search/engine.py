@@ -63,7 +63,6 @@ deviation; pinned by tests/test_special_camel_fragment.py.)
 
 from __future__ import annotations
 
-import math
 import os
 import threading
 from dataclasses import dataclass
@@ -88,9 +87,8 @@ from probe_spark.index.xxhash import spark_bucket
 from probe_spark.query import ast
 from probe_spark.query.parser import ParseError, parse_query
 from probe_spark.runtime import ensure_package_on_executors, warm_python_workers
+from probe_spark.search.ranged import B, K1, bm25_idf
 
-K1 = 1.5
-B = 0.5
 MAX_QUERY_TERMS = 256
 # affected-doc fetches at or below this cardinality go through a literal
 # doc_id IN (...) predicate (parquet row-group pruning); above it, a
@@ -185,62 +183,9 @@ def _decode_map_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBa
         )
 
 
-# block decode emits the same exploded shape as the full-segment decode
-_DECODE_KEEP_SCHEMA = _DECODED_SCHEMA
-
-
-def _decode_blocks_arrow(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
-    """(term, docs_bin, dl_bin, block_last_doc, block_doc_off, block_dl_off,
-    keep) -> exploded (term, src='tok', doc_id, dl) decoding ONLY the kept
-    blocks (block-max WAND survivors)."""
-    import numpy as np
-
-    from probe_spark.index.codec import decode_blocks
-
-    for batch in batches:
-        terms = batch.column("term").to_pylist()
-        docs_bins = batch.column("docs_bin").to_pylist()
-        dl_bins = batch.column("dl_bin").to_pylist()
-        lasts = batch.column("block_last_doc").to_pylist()
-        doc_offs = batch.column("block_doc_off").to_pylist()
-        dl_offs = batch.column("block_dl_off").to_pylist()
-        keeps = batch.column("keep").to_pylist()
-        out_term: list[str] = []
-        out_ids: list = []
-        out_dl: list = []
-        for t, db, lb, bl, doff, loff, kp in zip(
-            terms, docs_bins, dl_bins, lasts, doc_offs, dl_offs, keeps
-        ):
-            if kp is None:  # decode-all marker (pruning ineffective)
-                kp = range(len(bl))
-            ids, dls = decode_blocks(db, lb, bl, doff, loff, kp)
-            out_term.extend([t] * len(ids))
-            out_ids.append(ids)
-            out_dl.append(dls)
-        ids_all = (
-            np.concatenate(out_ids) if out_ids else np.empty(0, dtype=np.int64)
-        )
-        dl_all = (
-            np.concatenate(out_dl).astype(np.int32)
-            if out_dl
-            else np.empty(0, dtype=np.int32)
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_term, pa.string()),
-                pa.array(["tok"] * len(out_term), pa.string()),
-                pa.array(ids_all, pa.int64()),
-                pa.array(dl_all, pa.int32()),
-            ],
-            names=["term", "src", "doc_id", "dl"],
-        )
-
-
 def _make_decode_topk_arrow(k: int):
-    """Single-term WAND decode that keeps only the partition-local top-k
-    INSIDE the Arrow stage: score = idf * tf_norm(dl) is strictly
+    """Single-term segment decode that keeps only the partition-local
+    top-k INSIDE the Arrow stage: score = idf * tf_norm(dl) is strictly
     decreasing in dl (single keyword, binary tf), ties broken doc_id asc,
     so the k smallest (dl, doc_id) pairs per partition are exactly the
     partition's best k — the Python->JVM boundary then carries <=k rows
@@ -250,23 +195,16 @@ def _make_decode_topk_arrow(k: int):
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
 
-        from probe_spark.index.codec import decode_blocks
+        from probe_spark.index.codec import decode_postings
 
         chunks_i: list = []
         chunks_d: list = []
         for batch in batches:
-            docs_bins = batch.column("docs_bin").to_pylist()
-            dl_bins = batch.column("dl_bin").to_pylist()
-            lasts = batch.column("block_last_doc").to_pylist()
-            doc_offs = batch.column("block_doc_off").to_pylist()
-            dl_offs = batch.column("block_dl_off").to_pylist()
-            keeps = batch.column("keep").to_pylist()
-            for db, lb, bl, doff, loff, kp in zip(
-                docs_bins, dl_bins, lasts, doc_offs, dl_offs, keeps
+            for db, lb in zip(
+                batch.column("docs_bin").to_pylist(),
+                batch.column("dl_bin").to_pylist(),
             ):
-                if kp is None:  # decode-all marker (pruning ineffective)
-                    kp = range(len(bl))
-                ids, dls = decode_blocks(db, lb, bl, doff, loff, kp)
+                ids, dls = decode_postings(db, lb)
                 chunks_i.append(ids)
                 chunks_d.append(dls.astype(np.int32))
         if not chunks_i:
@@ -329,12 +267,12 @@ def _check_format_version(stats_row, index_path: str) -> None:
         )
 
 
-def _wand_eligible(expr: ast.Expr) -> bool:
-    """True iff the query is a pure disjunction of single-keyword optional
-    terms — the classic (block-max) WAND setting.  Multi-keyword terms have
-    all-of evaluation semantics and AND/required/excluded/exact shapes
-    change which docs qualify, which would invalidate the bootstrap
-    threshold (theta must lower-bound the k-th score of QUALIFYING docs)."""
+def _single_keyword_or(expr: ast.Expr) -> bool:
+    """True iff the query is a flat disjunction of single-keyword optional
+    terms (one such term included).  Then every doc holding a keyword
+    qualifies and its score is the plain sum of its keywords' BM25 —
+    multi-keyword terms have all-of semantics, and AND/required/excluded/
+    exact shapes change which docs qualify."""
 
     def rec(e: ast.Expr) -> bool:
         if isinstance(e, ast.Term):
@@ -466,17 +404,13 @@ class SearchEngine:
         # run the evict window under DIFFERENT locks.
         if not hasattr(self, "_cache_lock"):
             self._cache_lock = threading.Lock()
-        self._df_cache: dict[str, int] = {}
+        # term -> (df, segment count), from segment metadata
+        self._df_cache: dict[str, tuple[int, int]] = {}
         # docs/ per-file doc_id ranges (footer sweep, lazy; _UNSET until
         # first _with_meta) — prunes the winner-metadata fetch to O(k) files
         self._docs_ranges: "list[tuple[str, int, int]] | None" = _UNSET
-        # per-term WAND metadata + bootstrap-block memos (query services
-        # repeat terms across queries; each miss costs a ~0.3s collect job)
-        self._meta_cache: dict[str, list] = {}
-        self._boot_cache: dict[tuple, tuple] = {}
-        # columnar per-term block tables for WAND selection (index-only
-        # data — arrays of block start/last/min_dl + segment addresses)
-        self._blocktab_cache: dict[str, dict] = {}
+        # 0-row results by with_metadata, built on first use (_empty)
+        self._empties: dict[bool, DataFrame] = {}
         # winner metadata rows by doc_id (FIFO; ~200 B/doc)
         self._docmeta_cache: dict[int, dict] = {}
         # special-term repair bundles keyed by (special set, lookup tuple):
@@ -519,9 +453,7 @@ class SearchEngine:
         # refresh semantics.
         with self._cache_lock:
             self._df_cache.clear()
-            self._meta_cache.clear()
-            self._boot_cache.clear()
-            self._blocktab_cache.clear()
+            self._empties.clear()
             self._docmeta_cache.clear()
             for bundle in self._overlay_cache.values():
                 if bundle is not None and bundle[5] is not None:
@@ -552,9 +484,10 @@ class SearchEngine:
         f = self._fetch(self.postings, terms, "tok")
         return f.mapInArrow(_decode_map_arrow, _DECODED_SCHEMA)
 
-    def _term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """df per term from segment metadata (sum of df_seg — a pruned
-        parquet column scan, no posting decode), memoized per engine.
+    def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """(df, segment count) per term from segment metadata (df is the
+        sum of df_seg — a pruned parquet column scan, no posting decode),
+        memoized per engine.
 
         POSIX-visible indexes resolve this driver-side with pyarrow
         (``PostingsDirectory.tok_segments`` — milliseconds); otherwise one
@@ -564,11 +497,10 @@ class SearchEngine:
         if missing:
             local = self.postings_dir.tok_segments(missing, ["term", "df_seg"])
             if local is not None:
-                found: dict[str, int] = {}
+                found: dict[str, tuple[int, int]] = {}
                 for r in local:
-                    found[r["term"]] = found.get(r["term"], 0) + int(
-                        r["df_seg"]
-                    )
+                    df, n_seg = found.get(r["term"], (0, 0))
+                    found[r["term"]] = (df + int(r["df_seg"]), n_seg + 1)
             else:
                 buckets = sorted(
                     {spark_bucket(t, self.n_buckets) for t in missing}
@@ -579,13 +511,22 @@ class SearchEngine:
                         & F.col("term").isin(missing)
                     )
                     .groupBy("term")
-                    .agg(F.sum("df_seg").alias("df"))
+                    .agg(
+                        F.sum("df_seg").alias("df"),
+                        F.count(F.lit(1)).alias("n_seg"),
+                    )
                     .collect()
                 )
-                found = {r["term"]: int(r["df"]) for r in rows}
+                found = {
+                    r["term"]: (int(r["df"]), int(r["n_seg"])) for r in rows
+                }
             for t in missing:
-                self._df_cache[t] = found.get(t, 0)
+                self._df_cache[t] = found.get(t, (0, 0))
         return {t: self._df_cache[t] for t in terms}
+
+    def _term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """df per term (see ``_term_stats``)."""
+        return {t: st[0] for t, st in self._term_stats(terms).items()}
 
     def _distinct_tools(self) -> list[str]:
         """Distinct tool metadata values (cached; the filename-match analog
@@ -716,332 +657,58 @@ class SearchEngine:
             result = req_check & result
         return result
 
-    # -- block-max WAND path --------------------------------------------------
-    def _search_pruned(
-        self,
-        expr: ast.Expr,
-        token_terms: list[str],
-        k: int,
-        with_metadata: bool,
+    # -- single-term top-k ----------------------------------------------------
+    def _search_single_term(
+        self, term: str, k: int, with_metadata: bool
     ) -> DataFrame:
-        """Exact top-k for pure disjunctive queries via block-max pruning
-        (see probe_spark.search.wand).  Three metadata-scale steps pick the
-        surviving blocks; only those decode."""
-        import numpy as np
-
-        from probe_spark.search import wand
-
-        spark = self.spark
-        buckets = sorted({spark_bucket(t, self.n_buckets) for t in token_terms})
-        seg_filter = F.col("bucket").isin(buckets) & F.col("term").isin(
-            token_terms
+        """Top-k of a query that is ONE optional single-keyword term.  Each
+        doc appears once in the term's postings, the boolean eval is
+        trivially true, and score = idf * tf_norm(dl) — so there is
+        nothing to group or shuffle: the plan is scan -> decode-top-k
+        (``_make_decode_topk_arrow``) -> TakeOrderedAndProject over <=k
+        rows per task."""
+        df, n_seg = self._term_stats([term])[term]
+        if not df:
+            return self._empty(with_metadata)
+        segs = self._fetch(self.postings, [term], "tok").select(
+            "docs_bin", "dl_bin"
         )
-        # 1. metadata collect: no binary columns -> pruned parquet scan;
-        #    memoized per term (repeat terms across a query service's
-        #    queries skip the job entirely)
-        # snapshot hits first: pool threads share this cache and another
-        # query's eviction pass (its `needed` set differs) could drop a
-        # term between the membership test and the read below
-        local_meta = {
-            t: m
-            for t in token_terms
-            if (m := self._meta_cache.get(t)) is not None
-        }
-        miss = [t for t in token_terms if t not in local_meta]
-        if miss:
-            # POSIX-visible index: pyarrow metadata read, no Spark job
-            # (same driver-local metadata plane as _term_dfs)
-            meta_rows = self.postings_dir.tok_segments(
-                miss,
-                [
-                    "term", "salt", "seg_seq", "df_seg", "min_doc",
-                    "max_doc", "block_last_doc", "block_min_dl",
-                ],
-            )
-            if meta_rows is None:
-                miss_buckets = sorted(
-                    {spark_bucket(t, self.n_buckets) for t in miss}
-                )
-                meta_rows = (
-                    self.postings.filter(
-                        F.col("bucket").isin(miss_buckets)
-                        & F.col("term").isin(miss)
-                    )
-                    .select(
-                        "term", "salt", "seg_seq", "df_seg", "min_doc",
-                        "max_doc", "block_last_doc", "block_min_dl",
-                    )
-                    .collect()
-                )
-            fetched: dict[str, list] = {t: [] for t in miss}
-            for r in meta_rows:
-                fetched[r["term"]].append(
-                    wand.SegmentMeta(
-                        r["term"], int(r["salt"]), int(r["seg_seq"]),
-                        int(r["min_doc"]), int(r["max_doc"]),
-                        np.asarray(r["block_last_doc"], dtype=np.int64),
-                        np.asarray(r["block_min_dl"], dtype=np.int32),
-                        int(r["df_seg"]),
-                    )
-                )
-            # FIFO-evict down to the cap, never touching terms this query
-            # needs; block arrays are ~KB-20KB/term.  Inserts go through
-            # the lock; this query reads its own local_meta snapshot.
-            with self._cache_lock:
-                needed = set(token_terms)
-                while len(self._meta_cache) >= 2048:
-                    victim = next(
-                        (t for t in self._meta_cache if t not in needed),
-                        None,
-                    )
-                    if victim is None:
-                        break
-                    self._meta_cache.pop(victim, None)
-                self._meta_cache.update(fetched)
-            local_meta.update(fetched)
-        metas = [m for t in token_terms for m in local_meta[t]]
-        df_by_term: dict[str, int] = {}
-        for m in metas:
-            df_by_term[m.term] = df_by_term.get(m.term, 0) + m.df_seg
-        for t in token_terms:
-            self._df_cache.setdefault(t, df_by_term.get(t, 0))
-        idfs = {
-            t: math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
-            for t, df in df_by_term.items()
-            if df > 0
-        }
-        empty = self._empty(with_metadata)
-        if not idfs:
-            return empty
-
-        # columnar per-term block tables (cached: the arrays depend only on
-        # the index, not the query) — no per-block Python objects anywhere
-        # on the query path
-        tabs: dict = {}
-        for t in token_terms:
-            tab = self._blocktab_cache.get(t)
-            if tab is None:
-                tab = wand.term_block_table(local_meta[t])
-                with self._cache_lock:
-                    while len(self._blocktab_cache) >= 2048:
-                        victim = next(
-                            (
-                                x
-                                for x in self._blocktab_cache
-                                if x not in token_terms
-                            ),
-                            None,
-                        )
-                        if victim is None:
-                            break
-                        self._blocktab_cache.pop(victim, None)
-                    self._blocktab_cache[t] = tab
-            if len(tab["min_dl"]):
-                tabs[t] = tab
-        best: dict = {}
-        for t, tab in tabs.items():
-            idf = idfs.get(t, 0.0)
-            if idf <= 0.0:
-                continue
-            u = idf * wand.c_factor(tab["min_dl"], self.avgdl)
-            i = int(np.argmax(u))
-            best[t] = wand.BlockRef(
-                t, int(tab["salt"][i]), int(tab["seg_seq"][i]),
-                int(tab["seg_min_doc"][i]), int(tab["block"][i]),
-                int(tab["start"][i]), int(tab["last"][i]), float(u[i]),
-            )
-
-        # 2. theta bootstrap: decode ONE best block per term (driver-side;
-        #    bounded by max_postings_per_segment bytes per term)
-        theta = 0.0
-        if best:
-            from probe_spark.index.codec import decode_blocks
-
-            # bootstrap blocks are per-(segment, block) constants — memoize
-            # so repeat terms skip this collect too
-            pairs = [
-                (b.term, b.salt, b.seg_seq, b.min_doc)
-                for b in best.values()
-                if (b.term, b.salt, b.seg_seq, b.min_doc, b.block)
-                not in self._boot_cache
-            ]
-            pair_col = F.struct(
-                F.col("term"), F.col("salt"), F.col("seg_seq"),
-                F.col("min_doc"),
-            )
-            want = [
-                F.struct(
-                    F.lit(t), F.lit(s), F.lit(q), F.lit(m).cast("long")
-                )
-                for t, s, q, m in pairs
-            ]
-            boot_rows = (
-                (
-                    self.postings.filter(seg_filter)
-                    .filter(pair_col.isin(*want))
-                    .select(
-                        "term", "salt", "seg_seq", "min_doc", "docs_bin",
-                        "dl_bin", "block_last_doc", "block_doc_off",
-                        "block_dl_off",
-                    )
-                    .collect()
-                )
-                if want
-                else []
-            )
-            by_pair = {
-                (r["term"], int(r["salt"]), int(r["seg_seq"]),
-                 int(r["min_doc"])): r
-                for r in boot_rows
-            }
-            decoded = []
-            for b in best.values():
-                ck = (b.term, b.salt, b.seg_seq, b.min_doc, b.block)
-                hit = self._boot_cache.get(ck)
-                if hit is None:
-                    r = by_pair.get((b.term, b.salt, b.seg_seq, b.min_doc))
-                    if r is None:
-                        continue
-                    hit = decode_blocks(
-                        bytes(r["docs_bin"]), bytes(r["dl_bin"]),
-                        r["block_last_doc"], r["block_doc_off"],
-                        r["block_dl_off"], [b.block],
-                    )
-                    while len(self._boot_cache) >= 4096:
-                        del self._boot_cache[next(iter(self._boot_cache))]
-                    self._boot_cache[ck] = hit
-                decoded.append((b.term, hit[0], hit[1]))
-            theta = wand.partial_theta(decoded, idfs, self.avgdl, k)
-
-        # 3. sweep + selection
-        keep_masks, stats = wand.select_blocks_columnar(
-            tabs, idfs, self.avgdl, theta
+        # a hot term's segments live in ONE bucket file, usually under
+        # maxPartitionBytes -> the whole decode would run as a single
+        # task; spreading the (compressed, ~1.2 B/posting) segment rows
+        # across the cores first costs one tiny round-robin exchange and
+        # buys a parallel decode
+        n_par = min(2 * self.spark.sparkContext.defaultParallelism, n_seg)
+        if n_par > 1:
+            segs = segs.repartition(n_par)
+        decoded = segs.mapInArrow(
+            _make_decode_topk_arrow(k), "doc_id long, dl int"
         )
-        self.last_wand_stats = {**stats, "theta": theta}
-        if stats["blocks_kept"] == 0:
-            return empty
-        if (
-            not isinstance(expr, ast.Term)
-            and stats["blocks_kept"] > 0.5 * stats["blocks_total"]
-        ):
-            # block-max pruning is ineffective here (narrow dl spread
-            # keeps every block's upper bound above theta — measured
-            # blocks_kept == blocks_total on hot-term OR queries), so the
-            # decode is ~full either way and the groupBy(doc_id) row
-            # shuffle would dominate.  The doc-range-partitioned path
-            # does the same decode but evaluates locally per range.
-            return self._search_ranged(
-                expr, {t: t for t in token_terms}, k, with_metadata
-            )
-        if stats["blocks_kept"] >= 0.9 * stats["blocks_total"]:
-            # pruning is ineffective (narrow dl spread keeps ~every
-            # block's upper bound above theta): decoding the few extra
-            # blocks is far cheaper than materializing + broadcasting a
-            # keep manifest row per surviving segment (a 60%-df term has
-            # ~100k segments — driver-serializing that per query WAS the
-            # cost).  keep=null tells the decoders "all blocks"; decoding
-            # a superset is exact (extra docs score below theta <= k-th).
-            joined = self.postings.filter(seg_filter).withColumn(
-                "keep", F.lit(None).cast(ArrayType(IntegerType()))
-            )
-            # a hot term's segments live in ONE bucket file, usually under
-            # maxPartitionBytes -> the whole decode would run as a single
-            # task; spreading the (compressed, ~1.2 B/posting) segment
-            # rows across the cores first costs one tiny exchange and
-            # buys a parallel decode — the same bytes-not-rows exchange
-            # shape the doc-range path uses
-            n_par = min(
-                2 * self.spark.sparkContext.defaultParallelism, len(metas)
-            )
-            if n_par > 1:
-                joined = joined.repartition(n_par)
-        else:
-            # materialize the (small) keep manifest from the masks —
-            # iterates only surviving blocks
-            keep: dict[tuple, list[int]] = {}
-            for t, m in keep_masks.items():
-                tab = tabs[t]
-                for i in np.flatnonzero(m).tolist():
-                    keep.setdefault(
-                        (
-                            t,
-                            int(tab["salt"][i]),
-                            int(tab["seg_seq"][i]),
-                            int(tab["seg_min_doc"][i]),
-                        ),
-                        [],
-                    ).append(int(tab["block"][i]))
-            keep_df = spark.createDataFrame(
-                [
-                    (t, s, q, m, sorted(blocks))
-                    for (t, s, q, m), blocks in keep.items()
-                ],
-                "term string, salt int, seg_seq int, min_doc long, "
-                "keep array<int>",
-            )
-            joined = self.postings.filter(seg_filter).join(
-                F.broadcast(keep_df),
-                ["term", "salt", "seg_seq", "min_doc"],
-            )
-
-        tf_norm = _tf_norm_col(self.avgdl)
-        if isinstance(expr, ast.Term):
-            # single optional term (WAND eligibility => exactly one
-            # keyword): each doc appears once, the boolean eval is
-            # trivially true, and score = idf * tf_norm — so the
-            # groupBy(doc_id) shuffle is a no-op AND the Arrow stage can
-            # keep only its partition-local top-k (score is monotone in
-            # -dl).  The whole query is scan -> decode-top-k ->
-            # TakeOrderedAndProject over <=k rows/task, no exchange.
-            decoded = joined.select(
-                "docs_bin", "dl_bin", "block_last_doc",
-                "block_doc_off", "block_dl_off", "keep",
-            ).mapInArrow(_make_decode_topk_arrow(k), "doc_id long, dl int")
-            idf = next(iter(idfs.values()))
-            cols = ["doc_id", (F.lit(idf) * tf_norm).alias("score")]
-            if with_metadata:
-                cols.append(
-                    F.array(F.lit(token_terms[0])).alias("matched_terms")
-                )
-            result = (
-                decoded.select(*cols)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-            return self._with_meta(result) if with_metadata else result
-
-        decoded = joined.select(
-            "term", "docs_bin", "dl_bin", "block_last_doc",
-            "block_doc_off", "block_dl_off", "keep",
-        ).mapInArrow(_decode_blocks_arrow, _DECODE_KEEP_SCHEMA)
-        hits = decoded.groupBy("doc_id").agg(
-            F.collect_set("term").alias("hits"), F.first("dl").alias("dl")
-        )
-        present = {
-            kw: F.array_contains(F.col("hits"), kw) for kw in token_terms
-        }
-        scored = hits.withColumn("_tf_norm", tf_norm)
-        eval_col = self._compile_eval(expr, present)
-        score_col = self._compile_score(expr, idfs, present)
-        cols = ["doc_id", "score"]
+        score = F.lit(bm25_idf(self.n_docs, df)) * _tf_norm_col(self.avgdl)
+        cols = ["doc_id", score.alias("score")]
         if with_metadata:
-            cols.append(_matched_terms_col(present).alias("matched_terms"))
+            cols.append(F.array(F.lit(term)).alias("matched_terms"))
         result = (
-            scored.withColumn("score", score_col)
-            .filter(eval_col & F.col("score").isNotNull())
-            .select(*cols)
+            decoded.select(*cols)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-        if with_metadata:
-            result = self._with_meta(result)
-        return result
+        return self._with_meta(result) if with_metadata else result
 
     def _empty(self, with_metadata: bool) -> DataFrame:
         """0-row result with the SAME schema a non-empty result would have,
         so downstream consumers (limiter's octet_length(text), merging's
         conv_id/turn_idx) see the columns they reference instead of
-        crashing on a no-hit query."""
+        crashing on a no-hit query.  Built once per engine and
+        ``with_metadata`` (each build is a ~24 ms createDataFrame)."""
+        empty = self._empties.get(with_metadata)
+        if empty is None:
+            empty = self._empties[with_metadata] = self._build_empty(
+                with_metadata
+            )
+        return empty
+
+    def _build_empty(self, with_metadata: bool) -> DataFrame:
         base = [
             StructField("doc_id", LongType(), False),
             StructField("score", DoubleType(), False),
@@ -1355,9 +1022,7 @@ class SearchEngine:
             match = kw_to_match.get(kw)
             df = dfs.get(match, 0) if match else 0
             if df > 0:
-                idfs[kw] = math.log(
-                    1.0 + (self.n_docs - df + 0.5) / (df + 0.5)
-                )
+                idfs[kw] = bm25_idf(self.n_docs, df)
         overlay_ids = overlay[0] if overlay is not None else None
         sum_df = sum(dfs.get(t, 0) for t in lookups)
         if sum_df == 0 and (overlay_ids is None or not overlay_ids.size):
@@ -1772,9 +1437,10 @@ class SearchEngine:
         """Top-k BM25 results: (doc_id, score [, conv_id, turn_idx, role,
         tool, ts, text]), rank-identical to the oracle.  k=None returns the
         full scored result set unsorted (no TakeOrdered barrier) — for bulk
-        export / oracle comparison.  ``prune=True`` enables block-max WAND
-        for eligible (pure disjunctive) top-k queries — identical results,
-        fewer decoded postings; ``prune=False`` forces the full path.
+        export / oracle comparison.  ``prune=True`` lets a top-k query
+        take its fastest exact route (single-term decode-top-k, zero-df
+        kill, doc-range evaluation; PLANS.md route table) — identical
+        results; ``prune=False`` forces the full path.
 
         ``where``: metadata-scoped search — a Spark SQL boolean expression
         over the doc metadata columns (conv_id, turn_idx, role, tool, ts);
@@ -1793,9 +1459,8 @@ class SearchEngine:
         ``exclude``: a (doc_id) DataFrame of results to drop BEFORE top-k —
         the reference's early session-cache filtering (cache.rs:392-541):
         a repeated --session query returns the NEXT k results, not a
-        shortened page.  Disables WAND pruning (its theta bootstrap
-        lower-bounds the k-th score over ALL qualifying docs; excluded
-        docs could push it above the k-th unseen score and over-prune).
+        shortened page.  Excluded docs are dropped inside the doc-range
+        workers, so a single-term query with ``exclude`` takes that route.
 
         ``match_metadata``: the filename-match analog (SURVEY §1.3 /
         file_list_cache.rs:357-457): a keyword is additionally credited to
@@ -1829,7 +1494,7 @@ class SearchEngine:
         if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
             return empty
         if k is not None and k <= 0:
-            return empty  # no rows asked for (WAND's k-th score has no k)
+            return empty  # no rows asked for
 
         # classify: keywords of exact/excluded terms use special resolution
         special_kws = special_keywords(expr)
@@ -1844,6 +1509,9 @@ class SearchEngine:
         tomb, tomb_over = self._tombstones()
         no_tomb = tomb is None and not tomb_over
 
+        # one optional keyword: shuffle-free decode-top-k.  A multi-term
+        # pure OR goes straight to the doc-range path below (PLANS.md
+        # route table)
         if (
             prune
             and k is not None
@@ -1852,10 +1520,10 @@ class SearchEngine:
             and no_tomb
             and not match_metadata
             and not special_kws
-            and token_terms
-            and _wand_eligible(expr)
+            and isinstance(expr, ast.Term)
+            and _single_keyword_or(expr)
         ):
-            return self._search_pruned(expr, token_terms, k, with_metadata)
+            return self._search_single_term(token_terms[0], k, with_metadata)
 
         # conjunctive zero-df kill: a pure conjunction (a simple Term's
         # all-of keywords, or an And-tree of simple Terms — "+a +b +c",
@@ -2244,9 +1912,7 @@ class SearchEngine:
             match = kw_to_match.get(kw)
             df = df_by_term.get(match, 0) if match else 0
             if df > 0:
-                idfs[kw] = math.log(
-                    1.0 + (self.n_docs - df + 0.5) / (df + 0.5)
-                )
+                idfs[kw] = bm25_idf(self.n_docs, df)
 
         # does a doc with zero hits satisfy the query?  (only-excluded etc.)
         if zero_included(expr):
@@ -2492,9 +2158,7 @@ class SearchEngine:
                     match = ktm.get(kw)
                     df = dfs.get(match, 0) if match else 0
                     if df > 0:
-                        idfs[kw] = math.log(
-                            1.0 + (self.n_docs - df + 0.5) / (df + 0.5)
-                        )
+                        idfs[kw] = bm25_idf(self.n_docs, df)
                 payload.append((expr, idfs, ktm))
             sum_df = sum(dfs.get(t, 0) for t in lookups)
             if sum_df > 0 and self.n_docs:

@@ -30,7 +30,6 @@ Semantics parity map (same references as engine.py):
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
@@ -40,12 +39,11 @@ from probe_spark.index.codec import PostingsDirectory
 from probe_spark.query import ast
 from probe_spark.query.parser import ParseError, parse_query
 from probe_spark.search.engine import (
-    B,
-    K1,
     MAX_QUERY_TERMS,
-    _wand_eligible,
+    _single_keyword_or,
     special_plan,
 )
+from probe_spark.search.ranged import B, K1, bm25_idf
 
 RESULT_COLUMNS = [
     "doc_id", "score", "conv_id", "turn_idx", "role", "tool", "ts", "text",
@@ -315,7 +313,7 @@ class LocalSearcher:
         "a OR (b OR c)" (generic sum s_a+(s_b+s_c), which can differ in
         the last ulp), returns None (fallback), as do doc ids too sparse
         for a dense array.  Eligibility otherwise mirrors
-        engine._wand_eligible (single-keyword optional terms only) plus
+        engine._single_keyword_or (single-keyword optional terms only) plus
         no tombstones/specials; search() answers k <= 0 before any
         route, so k >= 1 here."""
         from probe_spark.query import ast as _ast
@@ -337,9 +335,7 @@ class LocalSearcher:
         if size > max(2 * self.n_docs, 1 << 22):
             return None
         idfs = {
-            t: math.log(
-                1.0 + (self.n_docs - v[0].size + 0.5) / (v[0].size + 0.5)
-            )
+            t: bm25_idf(self.n_docs, v[0].size)
             for t, v in per_term.items()
             if v[0].size
         }
@@ -528,7 +524,7 @@ class LocalSearcher:
             k is not None
             and self._tomb is None
             and not special_kws
-            and _wand_eligible(expr)
+            and _single_keyword_or(expr)
         ):
             # pure disjunction of single-keyword optional terms: dense
             # scatter-add scoring, no candidate union (bit-identical —
@@ -759,7 +755,7 @@ class LocalSearcher:
             match = kw_to_match.get(kw)
             df = df_by_term.get(match, 0) if match else 0
             if df > 0:
-                idfs[kw] = math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
+                idfs[kw] = bm25_idf(self.n_docs, df)
 
         deferred_widen = False
         if zero_included:

@@ -7,10 +7,8 @@ collect_set(term))`) shuffles one 16-byte-plus-string row PER POSTING —
 for hot-term boolean queries at 26M+ turns that is a tens-of-millions-row
 hash aggregation per query, and it is exactly the byte-moving that kept
 the warm query service bandwidth-bound (q1/q3/q19/q20 class, 30-44s warm
-at 26.4M turns).  Block-max pruning cannot help on corpora with a narrow
-dl spread: the per-block min_dl is near the global min everywhere, so
-upper bounds never drop below theta (measured: blocks_kept == blocks_total
-on the reference suite's OR queries).
+at 26.4M turns).  It is also the route of every multi-term pure OR
+query (PLANS.md, route table).
 
 This path instead ships the COMPRESSED varint segments to doc-range
 partitions and evaluates the query locally per range, mirroring how a
@@ -24,8 +22,8 @@ document-sharded search cluster fans a query out to shards:
      exchange hash-partitions on range_id — the only shuffle, sized by
      the COMPRESSED postings bytes (~1.2 B/posting), not decoded rows;
   3. an Arrow worker per range decodes only the blocks overlapping its
-     range (the block-max offsets double as a range index), clips to the
-     range, and evaluates the compiled AST in numpy: presence masks via
+     range (the per-block doc offsets double as a range index), clips to
+     the range, and evaluates the compiled AST in numpy: presence masks via
      searchsorted, the exact `_compile_score`/`_compile_eval` float
      association order, then emits ONLY its per-range top-k;
   4. ``orderBy(score desc, doc_id asc).limit(k)`` merges n_ranges*k rows.
@@ -43,14 +41,26 @@ elastic_query.rs:148-292 (boolean evaluation).
 
 from __future__ import annotations
 
+import math
 from typing import Callable, Iterator
 
 import pyarrow as pa
 
 from probe_spark.query import ast
 
+# BM25 parameters (ranking.rs:361-362), shared by every lane; oracle.py
+# keeps its own pair as the independent reference
 K1 = 1.5
 B = 0.5
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    """BM25 idf of a term with document frequency ``df`` in ``n_docs``
+    docs: ln(1 + (N - df + .5)/(df + .5)) (ranking.rs:129-143).  Every
+    lane computes idf through this one float expression, so scores stay
+    bit-identical across lanes."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
 
 # target decoded postings per range: small enough that a range's numpy
 # working set stays cache-friendly and every core gets work even for
@@ -156,8 +166,8 @@ def _collect_range_postings(
 ) -> dict:
     """Accumulate a range worker's input batches into
     ``range_id -> term -> list[(ids, dls)]``, decoding ONLY the varint
-    blocks that overlap each range (the block-max offsets double as the
-    range index) and clipping decoded ids to the range."""
+    blocks that overlap each range (the per-block doc offsets double as
+    the range index) and clipping decoded ids to the range."""
     from probe_spark.index.codec import decode_blocks
 
     acc: dict[int, dict[str, list]] = {}

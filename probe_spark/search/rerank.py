@@ -5,7 +5,7 @@ The reference can reorder its BM25 top-N with a BERT cross-encoder
 (``src/search/result_ranking.rs:368-470``, models gated behind
 ``--features bert-reranker`` in ``src/cli.rs``).  This module re-expresses
 that two-stage shape Spark-first: stage 1 is the engine's BM25 top-N
-(any path — WAND, ranged, local), stage 2 re-scores ONLY those N rows
+(any path — single-term, ranged, local), stage 2 re-scores ONLY those N rows
 and reorders.  At 10^12-turn scale this is the standard retrieve-then-
 rerank serving topology: the expensive scorer touches k' << corpus rows.
 

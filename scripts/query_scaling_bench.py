@@ -89,7 +89,7 @@ spark = bench.build_spark(cpus)
 spark.sparkContext.setLogLevel("ERROR")
 eng = SearchEngine(spark, {index_dir!r})
 
-# warm pass (unmeasured): fills per-term WAND metadata, bootstrap blocks,
+# warm pass (unmeasured): fills per-term df and segment metadata,
 # repair bundles, and first-touch codegen — the service's steady state
 for _qid, qtext, k in REFERENCE_QUERIES:
     eng.search(qtext, k=k).collect()

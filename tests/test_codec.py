@@ -102,6 +102,45 @@ def test_decode_blocks_keep_all_equals_decode_postings(p):
     assert got_dls.tolist() == dls.tolist()
 
 
+class TestCodecBlocks:
+    """decode_blocks is the doc-range route's range index: a block subset
+    must decode exactly those blocks' postings."""
+
+    def test_block_decode_matches_full(self):
+        rng = np.random.default_rng(7)
+        ids = np.sort(rng.choice(100_000, size=1000, replace=False))
+        dls = rng.integers(1, 300, size=1000)
+        docs_bin, dl_bin, last, min_dl, doff, loff = encode_postings(
+            ids, dls, block=64
+        )
+        full_ids, full_dls = decode_postings(docs_bin, dl_bin)
+        assert np.array_equal(full_ids, ids)
+        assert np.array_equal(full_dls, dls)
+        n_blocks = len(last)
+        all_ids, all_dls = decode_blocks(
+            docs_bin, dl_bin, last, doff, loff, list(range(n_blocks))
+        )
+        assert np.array_equal(all_ids, ids)
+        assert np.array_equal(all_dls, dls)
+        # arbitrary subset decodes exactly its blocks
+        keep = [0, 3, n_blocks - 1]
+        sub_ids, sub_dls = decode_blocks(docs_bin, dl_bin, last, doff, loff, keep)
+        expect = np.concatenate([ids[i * 64 : (i + 1) * 64] for i in keep])
+        expect_dl = np.concatenate([dls[i * 64 : (i + 1) * 64] for i in keep])
+        assert np.array_equal(sub_ids, expect)
+        assert np.array_equal(sub_dls, expect_dl)
+
+    def test_block_metadata(self):
+        ids = np.arange(0, 300, dtype=np.int64)
+        dls = np.concatenate(
+            [np.full(128, 50), np.full(128, 10), np.full(44, 99)]
+        )
+        _, _, last, min_dl, doff, loff = encode_postings(ids, dls, block=128)
+        assert last.tolist() == [127, 255, 299]
+        assert min_dl.tolist() == [50, 10, 99]
+        assert doff[0] == 0 and loff[0] == 0
+
+
 class TestXXH64Vec:
     def test_vec_matches_scalar_all_lengths(self):
         import random
@@ -270,7 +309,7 @@ def test_leading_varint_shift_offsets_whole_segment(p, off):
     np.testing.assert_array_equal(got_ids, ids + off)
     np.testing.assert_array_equal(got_dls, dls)
 
-    # per-block decode (the WAND path) over the shifted stream: every
+    # per-block decode (the doc-range path) over the shifted stream: every
     # block subset must reproduce its shifted ids
     nb = len(bl)
     keep = list(range(nb))

@@ -2,14 +2,14 @@
 
 Semantics pinned here:
   - delete_where is a metadata write; deleted docs stop surfacing on
-    EVERY query path (WAND falls back, ranged masks, full path
-    anti-joins, zero-included scoped, files-only, local front-end)
-    while survivor scores stay bit-identical (Lucene deleted-docs
-    semantics: stats as built until vacuum).
+    EVERY query path (single terms fall back to ranged, ranged masks,
+    full path anti-joins, zero-included scoped, files-only, local
+    front-end) while survivor scores stay bit-identical (Lucene
+    deleted-docs semantics: stats as built until vacuum).
   - vacuum folds the tombstones: the result is rank- AND score-identical
-    to a fresh build over the surviving corpus, WAND re-enables, the
-    tombstone dir is gone, and `stats --verify` passes (per-bucket
-    lineage refreshed, docID density relaxed to distinct).
+    to a fresh build over the surviving corpus, the single-term route
+    re-enables, the tombstone dir is gone, and `stats --verify` passes
+    (per-bucket lineage refreshed, docID density relaxed to distinct).
 """
 
 from __future__ import annotations
@@ -71,10 +71,11 @@ class TestTombstoneMasking:
             r["score"] == baseline[r["doc_id"]]["score"] for r in after
         )
 
-    def test_ranged_and_wand_paths_masked(self, deleted):
+    def test_ranged_and_single_term_paths_masked(self, deleted):
         topk = deleted.search(Q, k=10).collect()
         assert len(topk) == 10 and all(r["role"] != "user" for r in topk)
-        # single-term WAND-eligible query falls back and is masked too
+        # a single-term query leaves its shuffle-free route for ranged
+        # (which applies the tombstone mask) and is masked too
         w = deleted.search("error", k=10).collect()
         assert len(w) == 10 and all(r["role"] != "user" for r in w)
 
@@ -137,7 +138,7 @@ class TestVacuum:
             ]
             assert got == exp, q
 
-    def test_tombstones_gone_wand_reenabled(self, idx, vacuumed):
+    def test_tombstones_gone_single_term_reenabled(self, idx, vacuumed):
         eng, _ = vacuumed
         assert not os.path.isdir(os.path.join(idx, "tombstones"))
         assert eng._tombstones() == (None, False)

@@ -199,7 +199,7 @@ class TestMergeChainCompaction:
         assert _page(em, "error OR handler", k=None) == _page(
             ef, "error OR handler", k=None
         )
-        # WAND top-k rides the spliced (non-uniform-block) segments too
+        # single-term top-k rides the spliced (non-uniform-block) segments too
         assert _page(em, "error", k=10) == _page(ef, "error", k=10)
         # the chain's fragmentation is gone: compacted layout equals the
         # fresh batch build's segment count
