@@ -12,7 +12,11 @@ compression").
 
 from __future__ import annotations
 
+import bisect
 import os
+import sys
+import threading
+from collections import OrderedDict
 from typing import NamedTuple
 
 import numpy as np
@@ -644,6 +648,104 @@ def _identity(st: os.stat_result) -> tuple[int, int, int]:
     return (st.st_size, st.st_mtime_ns, st.st_ino)
 
 
+# Bound on the bytes of varint-encoded row-group chunks one
+# PostingsDirectory keeps resident.  A searcher's decoded cache is
+# documented at ~512 MB (512 terms x ~1 MB of int32 ids + dls, 8 B per
+# posting); varint-encoded, a posting takes ~2 B, so a quarter of that
+# ceiling holds the encoded form of about as many postings.
+RESIDENT_BYTES = 128 << 20
+
+
+class _ResidentChunks:
+    """Byte-bounded LRU of row-group column chunks, keyed
+    ``(path, row group, column)``.  Threads sharing a directory (the
+    engine's query threads) share it, so every access holds the lock."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._lru: OrderedDict = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, key):
+        with self._lock:
+            hit = self._lru.get(key)
+            if hit is None:
+                return None
+            self._lru.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        """Keep ``value``, evicting least recently used chunks until the
+        total fits ``RESIDENT_BYTES``; a chunk larger than the whole
+        bound is not kept (its caller still serves it)."""
+        budget = RESIDENT_BYTES
+        if nbytes > budget:
+            return
+        with self._lock:
+            old = self._lru.pop(key, None)
+            if old is not None:
+                self.nbytes -= old[1]
+            while self._lru and self.nbytes + nbytes > budget:
+                self.nbytes -= self._lru.popitem(last=False)[1][1]
+            self._lru[key] = (value, nbytes)
+            self.nbytes += nbytes
+
+
+class _TermRows(NamedTuple):
+    """One row group's ``term`` chunk and its ``term -> row indices`` map.
+    Writers emit a group's rows in term order, so the map is usually the
+    sorted term list itself, searched by bisection; a group whose terms
+    are out of order keeps an explicit ``term -> rows`` dict instead."""
+
+    chunk: object
+    names: list
+    scattered: "dict | None"
+
+    @classmethod
+    def build(cls, chunk) -> "tuple[_TermRows, int]":
+        """The map of ``chunk`` and its size in bytes."""
+        # to_numpy().tolist() makes the str objects ~10x faster than
+        # to_pylist; sorted() of a sorted list is one linear pass
+        names = chunk.to_numpy(zero_copy_only=False).tolist()
+        scattered = None
+        if names != sorted(names):
+            scattered = {}
+            for i, t in enumerate(names):
+                scattered.setdefault(t, []).append(i)
+        # each str object is a header plus about the chunk's data bytes
+        # again
+        size = (
+            2 * chunk.get_total_buffer_size() + sys.getsizeof(names)
+            + sys.getsizeof("") * len(names)
+        )
+        if scattered is not None:
+            size += sys.getsizeof(scattered) + sum(
+                map(sys.getsizeof, scattered.values())
+            ) + sys.getsizeof(2**30) * len(names)
+        return cls(chunk, names, scattered), size
+
+    def find(self, terms: set) -> "np.ndarray | None":
+        """Ascending row indices of ``terms`` (None when none is here)."""
+        if self.scattered is None:
+            parts = []
+            for t in terms:
+                lo = bisect.bisect_left(self.names, t)
+                hi = bisect.bisect_right(self.names, t, lo)
+                if hi > lo:
+                    parts.append(np.arange(lo, hi))
+        else:
+            parts = [np.array(self.scattered[t]) for t in terms if t in self.scattered]
+        if not parts:
+            return None
+        return parts[0] if len(parts) == 1 else np.sort(np.concatenate(parts))
+
+
+def _take(chunk, idx: np.ndarray):
+    if idx[-1] - idx[0] + 1 == len(idx):  # one run: a zero-copy slice
+        return chunk.slice(int(idx[0]), len(idx))
+    return chunk.take(idx)
+
+
 class _PostingsFile:
     """One postings parquet file: its identity when the footer was parsed,
     the footer, and each row group's ``term`` (min, max) — None when the
@@ -674,11 +776,21 @@ class _PostingsFile:
             )
             self.ranges.append((st.min, st.max) if ok else None)
 
-    def read(self, terms: list[str], columns: list[str]):
-        """``columns`` of the rows whose term is in ``terms``, in row order,
-        reading only the row groups whose statistics admit one of them
-        (None when none does).  The handle's identity is re-checked
-        against the cached footer's before any byte is read."""
+    def read(self, terms: list[str], columns: list[str], resident: _ResidentChunks):
+        """``columns`` of the rows whose term is in ``terms``, in row order
+        (None when no row matches), consulting only the row groups whose
+        statistics admit one of them.  A group's ``term -> rows`` map and
+        column chunks come from ``resident``; those not resident are read
+        from the file and offered to it.  The file's identity is checked
+        against the cached footer's on every call, with ``os.stat`` before
+        anything is served and with ``os.fstat`` on the handle before any
+        byte is read."""
+        try:
+            st = os.stat(self.path)
+        except FileNotFoundError:
+            raise self._changed() from None
+        if _identity(st) != self.identity:
+            raise self._changed()
         groups = [
             g for g, r in enumerate(self.ranges)
             if r is None or any(r[0] <= t <= r[1] for t in terms)
@@ -686,27 +798,56 @@ class _PostingsFile:
         if not groups:
             return None
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        want = ["term", *(c for c in columns if c != "term")]
+        uniq = set(terms)
+        picked: dict[str, list] = {c: [] for c in columns}
+        fh = pf = None
+        try:
+            for g in groups:
+                got = dict(zip(want, [resident.get((self.path, g, c)) for c in want]))
+                if got["term"] is not None and got["term"].find(uniq) is None:
+                    continue
+                missing = [c for c in want if got[c] is None]
+                if missing:
+                    if pf is None:
+                        fh = self._handle()
+                        pf = pq.ParquetFile(fh, metadata=self.metadata)
+                    table = pf.read_row_group(g, columns=missing, use_threads=False)
+                    for c, col in zip(missing, table.columns):
+                        chunk = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+                        if c == "term":
+                            got[c], size = _TermRows.build(chunk)
+                        else:
+                            got[c], size = chunk, chunk.get_total_buffer_size()
+                        resident.put((self.path, g, c), got[c], size)
+                term = got["term"]
+                idx = term.find(uniq)
+                if idx is None:
+                    continue
+                for c in columns:
+                    picked[c].append(_take(term.chunk if c == "term" else got[c], idx))
+        finally:
+            if fh is not None:
+                fh.close()
+        if not picked[columns[0]]:
+            return None
+        return pa.Table.from_arrays(
+            [pa.chunked_array(picked[c]) for c in columns], names=columns
+        )
+
+    def _handle(self):
+        """An open handle on the file, checked against the cached
+        identity."""
         try:
             fh = open(self.path, "rb", buffering=0)
         except FileNotFoundError:
             raise self._changed() from None
-        with fh:
-            if _identity(os.fstat(fh.fileno())) != self.identity:
-                raise self._changed()
-            table = pq.ParquetFile(fh, metadata=self.metadata).read_row_groups(
-                groups,
-                columns=columns if "term" in columns else ["term", *columns],
-                use_threads=False,
-            )
-        col = table.column("term")
-        if len(terms) == 1:
-            mask = pc.equal(col, terms[0])
-        else:
-            mask = pc.is_in(col, value_set=pa.array(terms, col.type))
-        return table.filter(mask).select(columns)
+        if _identity(os.fstat(fh.fileno())) != self.identity:
+            fh.close()
+            raise self._changed()
+        return fh
 
     def _changed(self) -> IndexChangedError:
         return IndexChangedError(
@@ -723,19 +864,30 @@ class PostingsDirectory:
 
     Each bucket directory is listed once, on first use, and each file's
     footer is parsed once with its row-group ``term`` statistics.  A term
-    lookup then opens only the files of the term's hash bucket, reads only
+    lookup then touches only the files of the term's hash bucket and only
     the row groups whose min/max admit the term (the pruning the Spark
-    plan gets from the bucket + term filter) and selects the term's rows
-    with an equality mask — no dataset discovery and no footer parse per
-    lookup.  The listing is a snapshot: files added later are not seen,
-    and a cached file rewritten or removed since raises
-    :class:`IndexChangedError` instead of yielding rows.
+    plan gets from the bucket + term filter).  A row group, once read,
+    stays resident: its ``term -> row indices`` map and the column chunks
+    callers asked for, still varint-encoded, in a byte-bounded LRU
+    (``RESIDENT_BYTES``, 128 MB) shared by every thread using the
+    directory.  A lookup picks the term's rows from those by index and
+    reads from the file only the chunks not resident.
+
+    This is the encoded cache level under ``LocalSearcher``'s decoded one
+    (512 terms, ~512 MB at ~1 MB per term): a serving replica's postings
+    caches hold ~640 MB at most at that term size.
+
+    The listing is a snapshot: files added later are not seen, and a
+    cached file rewritten or removed since raises
+    :class:`IndexChangedError` instead of yielding rows, even when its row
+    groups are resident.
     """
 
     def __init__(self, index_path: str, n_buckets: int):
         self.root = os.path.join(index_path.removeprefix("file://"), "postings")
         self.n_buckets = n_buckets
         self._buckets: dict[tuple[str, int], list[_PostingsFile]] = {}
+        self._resident = _ResidentChunks()
 
     def has_kind(self, kind: str) -> bool:
         """True iff ``kind``'s postings are POSIX-visible here."""
@@ -765,8 +917,8 @@ class PostingsDirectory:
         out = []
         for bucket, bterms in sorted(by_bucket.items()):
             for f in self._files(kind, bucket):
-                table = f.read(bterms, columns)
-                if table is not None and table.num_rows:
+                table = f.read(bterms, columns, self._resident)
+                if table is not None:
                     out.append(table)
         return out
 

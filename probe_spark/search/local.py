@@ -66,14 +66,21 @@ def _narrowable(e: ast.Expr) -> bool:
 class LocalSearcher:
     """In-process top-k BM25 search over an index directory (posix paths).
 
-    Caches decoded postings per term (FIFO-bounded at 512 entries so a
-    long-lived service over a hot vocabulary stays within ~512MB of
-    decoded arrays) and memoizes term df from segment metadata.  A cache
-    miss reads through one ``codec.PostingsDirectory``: each postings
-    bucket directory is listed and each file's footer parsed once per
-    searcher, so the searcher serves the postings files it first saw —
-    rewriting one under it (``vacuum``, ``merge``, a rebuild) raises
-    ``codec.IndexChangedError`` on the next miss that touches it.
+    Postings are cached at two levels:
+      - decoded: ``(doc_ids, dls)`` arrays per term, FIFO-bounded at 512
+        entries, so a long-lived service over a hot vocabulary stays
+        within ~512 MB of decoded arrays (512 terms x ~1 MB);
+      - encoded: a miss reads through one ``codec.PostingsDirectory``,
+        which keeps the row groups it has read resident, still
+        varint-encoded, in an LRU bounded at ``codec.RESIDENT_BYTES``
+        (128 MB), so a miss decodes from memory.
+    At ~1 MB per decoded term a searcher's postings caches hold at most
+    ~640 MB (a hot term's decoded list grows with the corpus).  Each
+    postings bucket directory is listed and each file's footer parsed
+    once per searcher, so the searcher serves the postings files it first
+    saw — rewriting one under it (``vacuum``, ``merge``, a rebuild)
+    raises ``codec.IndexChangedError`` on the next miss that touches it,
+    resident or not.
     """
 
     def __init__(self, index_path: str):

@@ -31,8 +31,13 @@ from concurrent.futures import Future
 # fragment-LRU metadata plane + repair bundles), i.e. ~350 B/doc — a
 # 64-128 GB query-tier node serves a 50M-doc shard comfortably, which is
 # also the shard size class Lucene/Elasticsearch deployments run per
-# node.  Past the cap (the 10^12-turn corpus) a term's postings exceed
-# one node and every query keeps the distributed engine.
+# node.  The postings part of that is two caches per replica: decoded
+# arrays, bounded at 512 terms (~512 MB at ~1 MB per term, but a hot
+# term's list grows with the corpus at 8 B per posting), and resident
+# varint-encoded row groups, bounded at 128 MB whatever the corpus size
+# (``codec.RESIDENT_BYTES``).  Past the cap (the 10^12-turn corpus) a
+# term's postings exceed one node and every query keeps the distributed
+# engine.
 LOCAL_ROUTE_NDOCS_CAP = int(
     os.environ.get("PROBE_SPARK_LOCAL_ROUTE_CAP", 50_000_000)
 )

@@ -80,7 +80,7 @@ class TestTopK:
         plan = _plan(res)
         assert "TakeOrderedAndProject" in plan
         # scan -> decode -> top-k with no data shuffle (the only Exchange
-        # allowed is the broadcast of the tiny keep-list)
+        # allowed is the round-robin spread of a multi-segment term's rows)
         assert "Exchange hashpartitioning" not in plan
         assert "Exchange rangepartitioning" not in plan
 

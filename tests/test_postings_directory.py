@@ -4,19 +4,26 @@ every driver-side caller used before the directory existed.  Segment
 rows must match column for column and in order, on the fixture index, a
 multi-file (streamed) bucket, footers with small row groups, footers
 written without statistics, absent terms and row-group boundary terms.
+Every read is made twice, and the second must be served from the
+directory's resident row groups without opening a file.  With the
+resident budget binding, rows are unchanged and the resident bytes stay
+within it; threads sharing one directory read what a serial reader does.
 A postings file rewritten under a live searcher must raise, never yield
-rows.
+rows, also when its row groups are resident.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
+import threading
 
 import numpy as np
 import pytest
 
 from probe_spark.fixtures import transcripts_df, transcripts_rows
+from probe_spark.index import codec
 from probe_spark.index.codec import (
     IndexChangedError,
     PostingsDirectory,
@@ -64,6 +71,23 @@ def _dataset_rows(index, n_buckets, kind, terms, columns) -> list[dict]:
 
 def _dir_rows(pdir, kind, terms, columns) -> list[dict]:
     return [r for t in pdir.segments(kind, terms, columns) for r in t.to_pylist()]
+
+
+def _passes(monkeypatch):
+    """Yields twice; on the second pass no postings file may be opened,
+    so every read is served from the resident row groups."""
+    yield
+    monkeypatch.setattr(
+        codec._PostingsFile, "_handle",
+        lambda self: pytest.fail(f"second pass opened {self.path}"),
+    )
+    yield
+
+
+def _check_resident(pdir: PostingsDirectory) -> None:
+    res = pdir._resident
+    assert res.nbytes == sum(size for _v, size in res._lru.values())
+    assert res.nbytes <= codec.RESIDENT_BYTES
 
 
 def _reference_postings(index, n_buckets, kind, term):
@@ -174,56 +198,60 @@ def test_variants_have_the_layouts_they_claim(variants):
 
 @pytest.mark.parametrize("name", VARIANTS)
 @pytest.mark.parametrize("kind", ["tok", "raw"])
-def test_segments_match_dataset_read(variants, name, kind):
+def test_segments_match_dataset_read(variants, name, kind, monkeypatch):
     index, nb = variants[name]
     cols = _columns(index)
     pdir = PostingsDirectory(index, nb)
     terms = _terms(index, kind)
     assert terms
-    for t in terms + ABSENT:
-        assert _dir_rows(pdir, kind, [t], cols) == _dataset_rows(
-            index, nb, kind, [t], cols
-        ), t
-    for t in ABSENT:
-        assert _dir_rows(pdir, kind, [t], cols) == []
-    # several terms per bucket in one call (the isin read)
-    assert _dir_rows(pdir, kind, terms + ABSENT, cols) == _dataset_rows(
-        index, nb, kind, terms + ABSENT, cols
-    )
+    for _ in _passes(monkeypatch):
+        for t in terms + ABSENT:
+            assert _dir_rows(pdir, kind, [t], cols) == _dataset_rows(
+                index, nb, kind, [t], cols
+            ), t
+        for t in ABSENT:
+            assert _dir_rows(pdir, kind, [t], cols) == []
+        # several terms per bucket in one call (the isin read)
+        assert _dir_rows(pdir, kind, terms + ABSENT, cols) == _dataset_rows(
+            index, nb, kind, terms + ABSENT, cols
+        )
+    _check_resident(pdir)
 
 
 @pytest.mark.parametrize("name", ["small_row_groups", "streamed"])
-def test_row_group_boundary_terms(variants, name):
+def test_row_group_boundary_terms(variants, name, monkeypatch):
     import pyarrow.parquet as pq
 
     index, nb = variants[name]
     cols = _columns(index)
     pdir = PostingsDirectory(index, nb)
     n = 0
-    for f in _all_files(index):
-        kind = "tok" if "kind=tok" in f else "raw"
-        md = pq.ParquetFile(f).metadata
-        ci = [md.schema.column(i).path for i in range(md.num_columns)].index("term")
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(ci).statistics
-            for t in (st.min, st.max):
-                assert _dir_rows(pdir, kind, [t], cols) == _dataset_rows(
-                    index, nb, kind, [t], cols
-                ), (f, g, t)
-                n += 1
-    assert n > 4
+    for _ in _passes(monkeypatch):
+        for f in _all_files(index):
+            kind = "tok" if "kind=tok" in f else "raw"
+            md = pq.ParquetFile(f).metadata
+            ci = [md.schema.column(i).path for i in range(md.num_columns)].index("term")
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(ci).statistics
+                for t in (st.min, st.max):
+                    assert _dir_rows(pdir, kind, [t], cols) == _dataset_rows(
+                        index, nb, kind, [t], cols
+                    ), (f, g, t)
+                    n += 1
+    assert n > 8
 
 
 @pytest.mark.parametrize("name", VARIANTS)
-def test_decoded_postings_match_reference(variants, name):
+def test_decoded_postings_match_reference(variants, name, monkeypatch):
     index, nb = variants[name]
     pdir = PostingsDirectory(index, nb)
-    for kind in ("tok", "raw"):
-        for t in _terms(index, kind) + ABSENT:
-            got = pdir.postings(kind, t)
-            want = _reference_postings(index, nb, kind, t)
-            for g, w in zip(got, want):
-                assert g.dtype == w.dtype and np.array_equal(g, w), (kind, t)
+    for _ in _passes(monkeypatch):
+        for kind in ("tok", "raw"):
+            for t in _terms(index, kind) + ABSENT:
+                got = pdir.postings(kind, t)
+                want = _reference_postings(index, nb, kind, t)
+                for g, w in zip(got, want):
+                    assert g.dtype == w.dtype and np.array_equal(g, w), (kind, t)
 
 
 @pytest.mark.parametrize("name", VARIANTS)
@@ -245,13 +273,110 @@ def test_raw_doc_ids_multi_term_and_max_df_gate(variants, name):
 
 
 @pytest.mark.parametrize("name", VARIANTS)
-def test_tok_segments_match_dataset_read(variants, name):
+def test_tok_segments_match_dataset_read(variants, name, monkeypatch):
     index, nb = variants[name]
     cols = ["term", "salt", "seg_seq", "df_seg", "min_doc", "max_doc",
             "block_last_doc", "block_min_dl"]
     terms = _terms(index, "tok")[::3] + ABSENT
-    got = PostingsDirectory(index, nb).tok_segments(terms, cols)
-    assert got == _dataset_rows(index, nb, "tok", terms, cols)
+    pdir = PostingsDirectory(index, nb)
+    for _ in _passes(monkeypatch):
+        assert pdir.tok_segments(terms, cols) == _dataset_rows(
+            index, nb, "tok", terms, cols
+        )
+
+
+@pytest.mark.parametrize("name", VARIANTS)
+def test_resident_budget_binds(variants, name, monkeypatch):
+    """With room for about a tenth of the row groups, rows still match
+    and the resident bytes never pass the budget; with no room at all,
+    every chunk is served and none is kept."""
+    index, nb = variants[name]
+    cols = _columns(index)
+    kinds_terms = [(k, t) for k in ("tok", "raw") for t in _terms(index, k)]
+    full = PostingsDirectory(index, nb)
+    for kind, t in kinds_terms:
+        full.segments(kind, [t], cols)
+    assert full._resident.nbytes > 0
+    for budget in (full._resident.nbytes // 10, 1):
+        monkeypatch.setattr(codec, "RESIDENT_BYTES", budget)
+        pdir = PostingsDirectory(index, nb)
+        for kind, t in kinds_terms + [("tok", a) for a in ABSENT]:
+            assert _dir_rows(pdir, kind, [t], cols) == _dataset_rows(
+                index, nb, kind, [t], cols
+            ), (budget, kind, t)
+            _check_resident(pdir)
+        if budget == 1:
+            assert pdir._resident.nbytes == 0 and not pdir._resident._lru
+        else:
+            assert 0 < len(pdir._resident._lru) < len(full._resident._lru)
+
+
+def test_threads_share_one_directory(variants, monkeypatch):
+    """8 threads read overlapping terms through one directory, with the
+    budget small enough that they evict each other's chunks; each gets
+    what a serial read gets."""
+    index, nb = variants["small_row_groups"]
+    cols = ["term", "seg_seq", "min_doc", "docs_bin", "dl_bin"]
+    terms = _terms(index, "tok")
+    serial = PostingsDirectory(index, nb)
+    for t in terms:
+        serial.segments("tok", [t], cols)
+    want_rows = {t: _dir_rows(serial, "tok", [t], cols) for t in terms}
+    want_postings = {t: serial.postings("tok", t) for t in terms}
+    monkeypatch.setattr(codec, "RESIDENT_BYTES", serial._resident.nbytes // 4)
+
+    shared = PostingsDirectory(index, nb)
+    errors: list[BaseException] = []
+    done = [0] * 8
+
+    def worker(i: int) -> None:
+        try:
+            for rnd in range(3):
+                # each thread walks an overlapping, differently ordered slice
+                mine = terms[i::2] if rnd % 2 else terms[::-1][i % 3 :: 3]
+                for t in mine:
+                    assert _dir_rows(shared, "tok", [t], cols) == want_rows[t], t
+                    got = shared.postings("tok", t)
+                    assert all(
+                        np.array_equal(g, w) for g, w in zip(got, want_postings[t])
+                    ), t
+                    done[i] += 1
+        except BaseException as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[0]
+    assert all(done)
+    _check_resident(shared)
+
+
+@pytest.mark.parametrize("shuffled", [False, True])
+def test_term_rows_in_any_row_order(shuffled):
+    """A row group's term map finds every term's rows, ascending, whether
+    the group's rows are in term order (as the writers emit them) or
+    not; the directory tests above only see ordered groups."""
+    import pyarrow as pa
+
+    names = sorted(["a", "b", "b", "c", "d", "d", "d", "zeta", "é"])
+    if shuffled:
+        names = [names[i] for i in np.random.default_rng(3).permutation(len(names))]
+    rows, size = codec._TermRows.build(pa.array(names))
+    assert (rows.scattered is not None) == shuffled and size > 0
+    col = np.array(names, dtype=object)
+    for terms in [{"b"}, {"d"}, {"a", "d", "é"}, {"zeta", "nope"}, set(names)]:
+        want = np.flatnonzero(np.isin(col, list(terms)))
+        assert np.array_equal(rows.find(terms), want), terms
+    assert rows.find({"nope", ""}) is None
 
 
 def test_not_posix_visible(tmp_path):
@@ -269,8 +394,12 @@ def _bucket_with_two_terms(index: str, nb: int) -> tuple[str, str]:
     return next(tuple(ts[:2]) for ts in by_bucket.values() if len(ts) >= 2)
 
 
-@pytest.mark.parametrize("change", ["rewrite", "remove"])
-def test_file_changed_under_live_searcher_raises(variants, tmp_path, change):
+@pytest.mark.parametrize(
+    "change,resident",
+    [("rewrite", False), ("remove", False), ("rewrite", True), ("remove", True)],
+    ids=["rewrite", "remove", "rewrite-resident", "remove-resident"],
+)
+def test_file_changed_under_live_searcher_raises(variants, tmp_path, change, resident):
     import pyarrow.parquet as pq
 
     from probe_spark.search.local import LocalSearcher
@@ -282,6 +411,11 @@ def test_file_changed_under_live_searcher_raises(variants, tmp_path, change):
     bucket = spark_bucket(second, nb)
     ls = LocalSearcher(index)
     assert ls._postings("tok", first)[0].size  # lists the bucket, caches footers
+    if resident:
+        # the changed group is resident; only the decoded cache forgets it
+        assert ls._postings("tok", second)[0].size
+        ls._postings_cache.clear()
+        assert ls._postings_dir._resident._lru
     if change == "rewrite":
         # same rows, new files: what vacuum / merge / compact leave behind
         for f in _bucket_files(index, "tok", bucket):
