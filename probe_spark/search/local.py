@@ -30,6 +30,7 @@ Semantics parity map (same references as engine.py):
 
 from __future__ import annotations
 
+import bisect
 import os
 
 import numpy as np
@@ -61,6 +62,25 @@ def _narrowable(e: ast.Expr) -> bool:
     if isinstance(e, ast.And):
         return True
     return _narrowable(e.left) or _narrowable(e.right)
+
+
+def _listed(col):
+    """Arrow column ``col`` as the list ``col.to_pylist()`` gives, built
+    through numpy where that yields the same Python objects about 10x
+    faster: strings (null -> None), null-free integers, and naive
+    microsecond timestamps (datetime; null -> None).  Any other column
+    (a tz-aware ``ts``, whose ``to_pylist()`` is ~15x slower than numpy)
+    is returned as it is, to be converted a cell at a time."""
+    import pyarrow as pa
+
+    t = col.type
+    if (
+        pa.types.is_string(t)
+        or (pa.types.is_integer(t) and col.null_count == 0)
+        or (pa.types.is_timestamp(t) and t.unit == "us" and t.tz is None)
+    ):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    return col
 
 
 class LocalSearcher:
@@ -102,17 +122,21 @@ class LocalSearcher:
         self._postings_dir = PostingsDirectory(self.index_path, self.n_buckets)
         self._repair_cache: dict[frozenset, tuple] = {}
         self._docs_ds = None
-        # winner-metadata plane: fragment range map (footer stats) + LRU of
-        # decompressed fragment tables (~1 MB text each; 64 ≈ 64-256 MB/
-        # replica ceiling, the doc-store cache a serving replica holds)
+        # winner-metadata plane: fragment range map (footer stats) + a
+        # FIFO-bounded cache of decompressed fragments, the doc-store cache
+        # a serving replica holds.  A fragment keeps ``text`` as one Arrow
+        # array (~1 MB); from its second query on, its six small columns
+        # are Python lists (~250 B per row); 64 fragments ≈ 64-256 MB per
+        # replica plus the lists
         self._docs_map = None
         # (doc_id, dl) over EVERY doc, loaded once on first zero-included
         # query (only-excluded shapes rank the whole corpus)
         self._universe: "tuple[np.ndarray, np.ndarray] | None" = None
-        self._meta_frag_cache: dict[int, tuple] = {}
-        self._meta_frag_cap = int(
+        self._meta_frag_cache: dict[int, tuple] = {}  # see _meta_fragment
+        # at least one: a winner's row is read from its cached fragment
+        self._meta_frag_cap = max(1, int(
             os.environ.get("PROBE_SPARK_LOCAL_META_FRAGS", "64")
-        )
+        ))
         # tombstoned docs (index/maintenance.delete_where) are masked
         # before top-k; stats stay as built until vacuum — same
         # deleted-docs semantics as the Spark engine
@@ -374,6 +398,7 @@ class LocalSearcher:
         ]
         if with_metadata and results:
             kws = sorted(per_term)
+            matched = []
             for r in results:
                 d = r["doc_id"]
                 mt = []
@@ -382,10 +407,8 @@ class LocalSearcher:
                     p = int(np.searchsorted(ids, d))
                     if p < ids.size and int(ids[p]) == d:
                         mt.append(t)
-                r["matched_terms"] = mt
-            meta = self._fetch_meta([r["doc_id"] for r in results])
-            for r in results:
-                r.update(meta.get(r["doc_id"], {}))
+                matched.append(mt)
+            self._attach_meta(results, matched)
         return results
 
     def _universe_arrays(self):
@@ -481,11 +504,7 @@ class LocalSearcher:
             {"doc_id": d, "score": 0.0} for d, _mt in out_rows
         ]
         if with_metadata and results:
-            for r, (_d, mt) in zip(results, out_rows):
-                r["matched_terms"] = mt
-            meta = self._fetch_meta([r["doc_id"] for r in results])
-            for r in results:
-                r.update(meta.get(r["doc_id"], {}))
+            self._attach_meta(results, [mt for _d, mt in out_rows])
         return results
 
     # -- search --------------------------------------------------------------
@@ -886,17 +905,24 @@ class LocalSearcher:
             # (file_processing.rs:1447-1488), from the presence arrays
             sel = np.flatnonzero(keep)[order]
             kws = sorted(present)
-            for r, j in zip(results, sel):
-                r["matched_terms"] = [kw for kw in kws if present[kw][j]]
-            meta = self._fetch_meta([r["doc_id"] for r in results])
-            for r in results:
-                r.update(meta.get(r["doc_id"], {}))
+            self._attach_meta(
+                results, [[kw for kw in kws if present[kw][j]] for j in sel]
+            )
         return results
 
     # -- winner metadata fetch ------------------------------------------------
     _META_COLUMNS = [
         "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "text",
     ]
+
+    def _attach_meta(self, results: list[dict], matched: list) -> None:
+        """Completes winner rows in place: ``matched_terms`` from
+        ``matched`` (one sorted keyword list per row, in row order), then
+        the row's docs columns (``_fetch_meta``)."""
+        meta = self._fetch_meta([r["doc_id"] for r in results])
+        for r, mt in zip(results, matched):
+            r["matched_terms"] = mt
+            r.update(meta.get(r["doc_id"], {}))
 
     def _docs_file_map(self):
         """(paths, min_doc, max_doc) for every docs/ fragment, from parquet
@@ -943,21 +969,23 @@ class LocalSearcher:
                 return None
         self._docs_map = (
             [e[2] for e in entries],
-            np.array([e[0] for e in entries], dtype=np.int64),
-            np.array([e[1] for e in entries], dtype=np.int64),
+            [e[0] for e in entries],
+            [e[1] for e in entries],
         )
         return self._docs_map
 
     def _fetch_meta(self, doc_ids: "list[int]") -> dict:
-        """Winner-row metadata.  The generic path (dataset filter with
-        isin) decompresses EVERY row group whose stats admit a winner —
-        ~1 MB of text per fragment, k fragments per query, the dominant
-        warm-query cost at multi-M-doc corpora.  The fast path resolves
-        each winner to its fragment via footer stats and keeps an LRU of
-        DECOMPRESSED fragment tables (the doc-store cache every serving
-        stack has): a warm replica answers winner lookups from memory
-        with two vectorized searchsorted calls and one row take per
-        fragment."""
+        """Winner-row metadata, ``{doc_id: row}`` with the
+        ``_META_COLUMNS`` values as ``to_pylist()`` gives them.  The
+        generic path (dataset filter with isin) decompresses EVERY row
+        group whose stats admit a winner — ~1 MB of text per fragment, k
+        fragments per query, the dominant warm-query cost at multi-M-doc
+        corpora.  The fast path resolves each winner to its fragment via
+        footer stats and keeps a FIFO-bounded cache of decompressed
+        fragments (the doc-store cache every serving stack has).  A
+        cached fragment answers a winner by two bisections and a value per
+        column (``_meta_fragment``): no Arrow-to-Python conversion of a
+        table per query."""
         fm = self._docs_file_map()
         if fm is None:
             import pyarrow.dataset as ds
@@ -968,31 +996,53 @@ class LocalSearcher:
             )
             return {r["doc_id"]: r for r in table.to_pylist()}
         paths, lo, hi = fm
-        d = np.asarray(doc_ids, dtype=np.int64)
-        frag = np.searchsorted(lo, d, side="right") - 1
-        # ids in no fragment's range (deleted/stale) are skipped
-        known = (frag >= 0) & (d <= hi[np.maximum(frag, 0)])
+        names = self._META_COLUMNS
         out: dict = {}
-        for i in np.unique(frag[known]).tolist():
-            ent = self._meta_frag_cache.get(i)
-            if ent is None:
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(paths[i], columns=self._META_COLUMNS)
-                ids_np = t.column("doc_id").to_numpy()
-                if ids_np.size > 1 and np.any(ids_np[1:] < ids_np[:-1]):
-                    order = np.argsort(ids_np, kind="stable")
-                    t = t.take(order)
-                    ids_np = ids_np[order]
-                while len(self._meta_frag_cache) >= self._meta_frag_cap:
-                    self._meta_frag_cache.pop(
-                        next(iter(self._meta_frag_cache))
-                    )
-                ent = self._meta_frag_cache[i] = (ids_np, t)
-            ids_np, t = ent
-            want = d[known & (frag == i)]
-            j = np.minimum(np.searchsorted(ids_np, want), ids_np.size - 1)
-            hit = ids_np[j] == want
-            # one take + to_pylist per fragment, not an as_py() per cell
-            out.update(zip(want[hit].tolist(), t.take(j[hit]).to_pylist()))
+        frag = None
+        # doc order visits each fragment once, so one call never evicts a
+        # fragment it still needs
+        for d in sorted(doc_ids):
+            i = bisect.bisect_right(lo, d) - 1
+            if i < 0 or d > hi[i]:  # in no fragment's range (deleted/stale)
+                continue
+            if i != frag:
+                frag = i
+                ids, cols, _ = self._meta_fragment(i, paths[i])
+            j = bisect.bisect_left(ids, d)
+            if j < len(ids) and ids[j] == d:
+                out[d] = {
+                    n: c[j] if type(c) is list else c[j].as_py()
+                    for n, c in zip(names, cols)
+                }
         return out
+
+    def _meta_fragment(self, i: int, path: str) -> tuple:
+        """Docs fragment ``i`` from the cache, read in on a miss:
+        ``(doc ids, the _META_COLUMNS, listed)``, in doc_id order.  The
+        query that reads a fragment in gets its ids as numpy and its
+        columns as Arrow and converts only its winners' cells, as the
+        uncached path would; the next query to use it converts the ids
+        and the six small columns to lists once (``_listed``; ``listed``
+        is then True), so a fragment evicted before reuse never pays for
+        whole columns.  ``text`` stays Arrow."""
+        cache = self._meta_frag_cache
+        ent = cache.get(i)
+        if ent is None:
+            import pyarrow.parquet as pq
+
+            t = pq.read_table(path, columns=self._META_COLUMNS)
+            ids_np = t.column("doc_id").to_numpy()
+            if ids_np.size > 1 and np.any(ids_np[1:] < ids_np[:-1]):
+                order = np.argsort(ids_np, kind="stable")
+                t, ids_np = t.take(order), ids_np[order]
+            while len(cache) >= self._meta_frag_cap:
+                cache.pop(next(iter(cache)))
+            ent = cache[i] = (ids_np, t.columns, False)
+        elif not ent[2]:
+            ids_np, cols, _ = ent
+            ids = ids_np.tolist()
+            # doc_id is the first column; text, the last, stays Arrow
+            ent = cache[i] = (
+                ids, [ids, *map(_listed, cols[1:-1]), cols[-1]], True
+            )
+        return ent

@@ -46,6 +46,10 @@ if TYPE_CHECKING:  # pragma: no cover
 # (~64 MB of transient text at typical turn sizes)
 DRIVER_RETOK_CAP = 262_144
 
+# affected docs per retokenize worker: smaller sets stay in the driver,
+# where a fork and two pickles would cost more than the tokenizing
+_DOCS_PER_PROC = 4096
+
 _POOL = None
 _POOL_PROCS = 0
 
@@ -177,20 +181,21 @@ def _pool(n_procs: int):
     """Lazy forked worker pool, kept across queries (a query service hits
     this path per cold special-term shape).  Fork is cheap and the workers
     only run pure-Python tokenization over pickled chunks — they never
-    touch the JVM gateway.  Resized only upward; torn down at exit."""
+    touch the JVM gateway.  Resized only upward; a worker that dies breaks
+    the pool (``BrokenProcessPool``) instead of hanging its map, and
+    ``driver_retok`` then drops it.  Workers exit with the interpreter."""
     global _POOL, _POOL_PROCS
     if _POOL is not None and _POOL_PROCS >= n_procs:
         return _POOL
-    import atexit  # noqa: PLC0415
     import multiprocessing as mp  # noqa: PLC0415
+    from concurrent.futures import ProcessPoolExecutor  # noqa: PLC0415
 
     if "fork" not in mp.get_all_start_methods():  # pragma: no cover
         return None
     if _POOL is not None:
-        _POOL.terminate()
-    _POOL = mp.get_context("fork").Pool(n_procs)
+        _POOL.shutdown(wait=False, cancel_futures=True)
+    _POOL = ProcessPoolExecutor(n_procs, mp_context=mp.get_context("fork"))
     _POOL_PROCS = n_procs
-    atexit.register(_POOL.terminate)
     return _POOL
 
 
@@ -205,6 +210,7 @@ def driver_retok(
     doc_id column) and retokenize them on the pool.  Returns the sidecar
     array dict, or None when the index is not POSIX-visible (caller falls
     back to the distributed join)."""
+    global _POOL
     base = _local_path(index_path)
     if base is None:
         return None
@@ -223,17 +229,26 @@ def driver_retok(
     texts = [texts[i] for i in order]
 
     n = len(texts)
-    n_procs = min(16, os.cpu_count() or 4, max(1, n // 4096))
+    n_procs = min(16, os.cpu_count() or 4, max(1, n // _DOCS_PER_PROC))
     pool = _pool(n_procs) if n_procs > 1 else None
-    if pool is None:
-        parts = [retok_chunk(texts, dls, lookups, g_set)]
-    else:
+    parts = None
+    if pool is not None:
+        from concurrent.futures.process import BrokenProcessPool  # noqa: PLC0415
+
         step = (n + n_procs - 1) // n_procs
-        jobs = [
-            (texts[i : i + step], dls[i : i + step], lookups, g_set)
-            for i in range(0, n, step)
-        ]
-        parts = pool.starmap(retok_chunk, jobs)
+        starts = range(0, n, step)
+        try:
+            parts = list(pool.map(
+                retok_chunk,
+                [texts[i : i + step] for i in starts],
+                [dls[i : i + step] for i in starts],
+                [lookups] * len(starts),
+                [g_set] * len(starts),
+            ))
+        except BrokenProcessPool:  # a worker died: next call forks anew
+            _POOL = None
+    if parts is None:
+        parts = [retok_chunk(texts, dls, lookups, g_set)]
     return {
         "ids": doc_ids,
         "hits": np.concatenate([p[0] for p in parts]) if parts else doc_ids,

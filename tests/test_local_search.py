@@ -177,3 +177,86 @@ def test_zero_included_any_keyword_gate(spark, gate_index, query):
     for w, lr, dr in zip(want, local, dist):
         assert abs(lr["score"] - w.score) < 1e-9, query
         assert abs(dr["score"] - w.score) < 1e-9, query
+
+
+@pytest.mark.parametrize("ts_type", ["as-built", "naive"])
+def test_fetch_meta_rows_and_types(local_index, tmp_path, ts_type):
+    """Winner rows from the fragment cache equal the whole-table
+    ``take(...).to_pylist()`` rows, value for value and type for type,
+    on a docs fragment with null ``tool`` and ``ts`` values, with ``ts``
+    as built (UTC-adjusted) and as a naive microsecond timestamp: from
+    the Arrow columns of a just-read fragment and from the lists a
+    second query converts them to.  A naive ``ts`` is cached as a list
+    of ``datetime`` objects; an as-built one stays Arrow (its
+    ``to_pylist()`` is the slow path) and gives a ``datetime`` per row."""
+    import datetime
+    import glob
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from probe_spark.search.local import LocalSearcher
+
+    index = str(tmp_path / "idx")
+    shutil.copytree(local_index, index)
+    paths = sorted(glob.glob(f"{index}/docs/**/*.parquet", recursive=True))
+    for p in paths[1:] if ts_type == "naive" else []:
+        t = pq.read_table(p)
+        t = t.set_column(
+            t.schema.get_field_index("ts"), "ts",
+            t.column("ts").cast(pa.timestamp("us")),
+        )
+        pq.write_table(t, p)
+    t = pq.read_table(paths[0])
+    n = t.num_rows
+    ts = t.column("ts")
+    if ts_type == "naive":
+        ts = ts.cast(pa.timestamp("us"))
+    for name, col, every in (("tool", t.column("tool"), 3), ("ts", ts, 5)):
+        vals = col.to_pylist()
+        t = t.set_column(
+            t.schema.get_field_index(name), name,
+            pa.array([None if i % every == 0 else v for i, v in enumerate(vals)], col.type),
+        )
+    pq.write_table(t, paths[0])
+
+    ls = LocalSearcher(index)
+    assert ls._docs_file_map() is not None  # the fragment-cache path
+    cols = ls._META_COLUMNS
+    want = {}
+    for p in paths:
+        frag = pq.read_table(p, columns=cols)
+        rows = frag.take(np.arange(frag.num_rows)).to_pylist()
+        want.update((r["doc_id"], r) for r in rows)
+    ids = sorted(want)
+    for listed in (False, True):
+        got = ls._fetch_meta(ids[::-1])
+        assert [e[2] for e in ls._meta_frag_cache.values()] == [listed] * len(paths)
+        assert repr([got[d] for d in ids]) == repr([want[d] for d in ids])
+        assert sum(got[d]["tool"] is None for d in ids) == -(-n // 3)
+        assert sum(got[d]["ts"] is None for d in ids) == -(-n // 5)
+        assert sum(type(got[d]["ts"]) is datetime.datetime for d in ids) == (
+            len(ids) - (-(-n // 5))
+        )
+    cached_ts = [e[1][cols.index("ts")] for e in ls._meta_frag_cache.values()]
+    if ts_type == "naive":
+        assert [type(c) for c in cached_ts] == [list] * len(paths)
+        assert sum(type(v) is datetime.datetime for c in cached_ts for v in c) == (
+            len(ids) - (-(-n // 5))
+        )
+    else:
+        assert not any(type(c) is list for c in cached_ts)
+
+
+def test_meta_fragment_cap_of_zero_still_answers(local_index, monkeypatch):
+    """``PROBE_SPARK_LOCAL_META_FRAGS=0`` keeps one fragment cached
+    instead of evicting from an empty cache: rows equal the default's."""
+    from probe_spark.search.local import LocalSearcher
+
+    want = LocalSearcher(local_index).search("error OR handling", k=10)
+    monkeypatch.setenv("PROBE_SPARK_LOCAL_META_FRAGS", "0")
+    ls = LocalSearcher(local_index)
+    assert repr(ls.search("error OR handling", k=10)) == repr(want)
+    assert len(ls._meta_frag_cache) == 1

@@ -10,10 +10,13 @@ retokenization (file_processing.rs:1090-1180, ranking.rs:186-208).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from probe_spark import oracle
 from probe_spark.fixtures import transcripts_df, transcripts_rows
+from probe_spark.search import repair
 
 N_CONVS = 60
 SEED = 42
@@ -45,6 +48,30 @@ def engine(spark, tmp_path_factory):
         transcripts_df(spark, N_CONVS, SEED), path
     )
     return SearchEngine(spark, path)
+
+
+_DRIVER_PID = os.getpid()
+_RETOK_CHUNK = repair.retok_chunk
+
+
+def _retok_dies_in_worker(*args):
+    """``retok_chunk`` that kills any forked worker running it."""
+    if os.getpid() != _DRIVER_PID:
+        os._exit(1)
+    return _RETOK_CHUNK(*args)
+
+
+@pytest.fixture
+def retok_pool(monkeypatch):
+    """One retokenize worker per affected doc, from a pool forked inside
+    the test (so a patched ``retok_chunk`` reaches the workers), shut
+    down after it."""
+    monkeypatch.setattr(repair, "_DOCS_PER_PROC", 1)
+    monkeypatch.setattr(repair, "_POOL", None)
+    monkeypatch.setattr(repair, "_POOL_PROCS", 0)
+    yield
+    if repair._POOL is not None:
+        repair._POOL.shutdown()
 
 
 def _ids_scores(rows):
@@ -150,13 +177,33 @@ class TestDriverRetokParity:
     def test_driver_vs_distributed_arrays(self, engine):
         import numpy as np
 
-        from probe_spark.search import repair
-
         g = frozenset({"hashtable"})
         lookups = ("hash", "hashtabl", "tabl")
         ids = engine.postings_dir.raw_doc_ids(["hashtable"])
         assert ids is not None and ids.size
         a = repair.driver_retok(engine.index_path, ids, g, lookups)
+        b = engine._retok_distributed(ids, g, lookups)
+        for k in ("ids", "hits", "olds", "dl", "dl_delta"):
+            assert np.array_equal(a[k], b[k]), k
+
+    @pytest.mark.parametrize("worker", ["alive", "dies"])
+    def test_pooled_vs_distributed_arrays(
+        self, engine, retok_pool, monkeypatch, worker
+    ):
+        """The forked-pool retokenize gives the distributed arrays; a
+        worker that dies breaks the pool instead of hanging it, and the
+        driver retokenizes the set itself."""
+        import numpy as np
+
+        if worker == "dies":
+            monkeypatch.setattr(repair, "retok_chunk", _retok_dies_in_worker)
+        g = frozenset({"hashtable"})
+        lookups = ("hash", "hashtabl", "tabl")
+        ids = engine.postings_dir.raw_doc_ids(["hashtable"])
+        assert ids is not None and ids.size >= 2
+        a = repair.driver_retok(engine.index_path, ids, g, lookups)
+        assert repair._POOL_PROCS >= 2  # the pooled branch ran
+        assert (repair._POOL is None) == (worker == "dies")
         b = engine._retok_distributed(ids, g, lookups)
         for k in ("ids", "hits", "olds", "dl", "dl_delta"):
             assert np.array_equal(a[k], b[k]), k
@@ -183,8 +230,6 @@ class TestDriverRetokParity:
     def test_sidecar_invalidated_by_docs_rewrite(self, engine, tmp_path):
         """A different docs layout must never match a stale sidecar: the
         fingerprint keys the filename, so load_sidecar returns None."""
-        from probe_spark.search import repair
-
         g = frozenset({"hashtable"})
         lookups = ("hash", "tabl")
         fp1 = repair.docs_fingerprint(engine.index_path)
