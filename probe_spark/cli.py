@@ -161,7 +161,9 @@ def cmd_search(args) -> int:
         if rerank_on:
             from probe_spark.search.rerank import rerank_rows
 
-            rows = rerank_rows(rows, args.query, k=args.max_results)
+            rows = rerank_rows(
+                rows, args.query, k=args.max_results, exact=args.exact
+            )
         from probe_spark.search.output import FORMATTERS
 
         if not args.dry_run and args.format in FORMATTERS:
@@ -235,7 +237,9 @@ def cmd_search(args) -> int:
     if rerank_on:
         from probe_spark.search.rerank import rerank_rows
 
-        rows = rerank_rows(rows, args.query, k=args.max_results)
+        rows = rerank_rows(
+            rows, args.query, k=args.max_results, exact=args.exact
+        )
     if args.session:
         from probe_spark.search.session_cache import record_results
 

@@ -510,7 +510,7 @@ def is_potential_special(w: str) -> bool:
     """True iff ``w`` could ever be fetched from the raw-word index.
 
     The query engine consults raw postings only for exact/excluded keywords
-    that are *matchable* (probe_spark.search.engine.special_plan): lowercase
+    that are *matchable* (probe_spark.query.plan.special_plan): lowercase
     alphanumeric, not a stop word, and stable under their own emission
     (w == stem(w) or an exception term).  Indexing any other raw word is
     wasted space/shuffle — in chat text this filter drops most words (every

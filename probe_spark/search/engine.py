@@ -3,11 +3,12 @@
 Query plan (all JVM-side Catalyst expressions; Python only in the Arrow
 varint decoder):
 
-  1. parse (driver) -> AST + per-query special terms
-     (probe_spark/query/parser.py; grammar = elastic_query.rs:519-967)
+  1. compile (driver): parse -> AST + per-query special terms and shape
+     flags, once per query (probe_spark/query/plan.py; grammar =
+     elastic_query.rs:519-967)
   2. classify keywords: normal terms hit the token postings; exact/excluded
      ("special") terms resolve per the reference's dynamic-special-term
-     semantics (see `_special_plan`, below)
+     semantics (see `query/plan.special_plan` and below)
   3. postings fetch: filter on (bucket, term) -> partition pruning on the
      bucket directory + parquet row-group pruning on term -> mapInArrow
      varint decode to (term, doc_id, dl)
@@ -65,7 +66,6 @@ from __future__ import annotations
 
 import os
 import threading
-from dataclasses import dataclass
 from typing import Iterator
 
 import pyarrow as pa
@@ -81,15 +81,19 @@ from pyspark.sql.types import (
 )
 
 from probe_spark.functions import tokenizer as tok
-from probe_spark.functions.porter2 import stem
 from probe_spark.index.codec import PostingsDirectory
 from probe_spark.index.xxhash import spark_bucket
 from probe_spark.query import ast
-from probe_spark.query.parser import ParseError, parse_query
+from probe_spark.query.plan import QueryPlan
 from probe_spark.runtime import ensure_package_on_executors, warm_python_workers
-from probe_spark.search.ranged import B, K1, bm25_idf
+from probe_spark.search.ranged import (
+    B,
+    K1,
+    bm25_idf,
+    repaired_avgdl,
+    tf_norm,
+)
 
-MAX_QUERY_TERMS = 256
 # affected-doc fetches at or below this cardinality go through a literal
 # doc_id IN (...) predicate (parquet row-group pruning); above it, a
 # broadcast-join full scan is the lesser evil (a 100k-literal In bloats
@@ -265,121 +269,6 @@ def _check_format_version(stats_row, index_path: str) -> None:
             f"index at {index_path} has format_version {v}, this engine "
             f"reads {FORMAT_VERSION}: rebuild the index"
         )
-
-
-def _single_keyword_or(expr: ast.Expr) -> bool:
-    """True iff the query is a flat disjunction of single-keyword optional
-    terms (one such term included).  Then every doc holding a keyword
-    qualifies and its score is the plain sum of its keywords' BM25 —
-    multi-keyword terms have all-of semantics, and AND/required/excluded/
-    exact shapes change which docs qualify."""
-
-    def rec(e: ast.Expr) -> bool:
-        if isinstance(e, ast.Term):
-            return (
-                not e.required
-                and not e.excluded
-                and not e.exact
-                and len(e.keywords) == 1
-            )
-        if isinstance(e, ast.Or):
-            return rec(e.left) and rec(e.right)
-        return False
-
-    return rec(expr)
-
-
-@dataclass
-class SpecialPlan:
-    keyword: str  # the query-map lookup key (original case)
-    matchable: bool  # False => present nowhere
-    lookup: str  # term string to fetch
-
-
-def _pure_conjunction(expr: "ast.Expr") -> bool:
-    """True when expr is an And-tree of simple Terms (no Or, no excluded/
-    exact/field terms, non-empty keywords) whose required flags are
-    all-or-none.  Then _compile_eval reduces to "EVERY keyword present"
-    (Term = all-of its keywords; And = both sides; the required-anywhere
-    check adds nothing new when all terms are required, and an optional
-    term among required ones would weaken the gate — hence all-or-none)
-    and _compile_score to the plain sum of keyword BM25 — exactly the
-    semi-join ladder + arithmetic the single-Term fast path runs."""
-    terms: list[ast.Term] = []
-
-    def rec(e: "ast.Expr") -> bool:
-        if isinstance(e, ast.Term):
-            if e.excluded or e.exact or e.field is not None or not e.keywords:
-                return False
-            terms.append(e)
-            return True
-        if isinstance(e, ast.And):
-            return rec(e.left) and rec(e.right)
-        return False
-
-    if not rec(expr):
-        return False
-    req = [t.required for t in terms]
-    return all(req) or not any(req)
-
-
-def special_keywords(expr: "ast.Expr") -> set[str]:
-    """Keywords of exact/excluded terms — they use special resolution
-    (raw-token lookup / G-set registration) instead of plain stemming."""
-    out: set[str] = set()
-    for t in ast.walk_terms(expr):
-        if t.exact or t.excluded:
-            out.update(t.keywords)
-    return out
-
-
-def zero_included(expr: "ast.Expr") -> bool:
-    """True when a doc holding NO query keyword still qualifies (e.g. a
-    lone excluded term) — such queries must score the whole corpus and
-    can never ride a postings-driven candidate path."""
-    return ast.evaluate(expr, lambda kw: False) and (
-        ast.score(expr, lambda kw: 0.0) is not None
-    )
-
-
-def affecting_specials(
-    plans: "dict[str, SpecialPlan]",
-) -> "tuple[frozenset, list[str]]":
-    """(G set, registration-affecting words): special lookups whose G-set
-    registration CHANGES how their own raw word tokenizes — those docs
-    need the retokenization repair before scoring."""
-    g_set0 = frozenset(
-        p.lookup
-        for p in plans.values()
-        if p.lookup and all(c.isalnum() for c in p.lookup)
-    )
-    affecting0 = sorted(
-        w for w in g_set0 if tok.tokenize(w) != tok.tokenize(w, g_set0)
-    )
-    return g_set0, affecting0
-
-
-def special_plan(keyword: str) -> SpecialPlan:
-    """Resolve how an exact/excluded keyword matches docs (see module doc).
-
-    matchable requires: all-lowercase alphanumeric, not a stop word, and the
-    keyword survives its own emission (kw == stem(kw) or kw is an exception
-    term) — otherwise the reference's query-token-map lookup never matches a
-    doc token (ranking.rs:186-201 with lowercase doc tokens).
-    When the base tokenizer keeps kw whole, base tokenization equals the
-    per-query-special tokenization and the token index alone is exact; when
-    base would split kw, whole-word occurrences come from the raw index and
-    stem-collisions from other words still come from the token index.
-    """
-    w = keyword.lower()
-    if keyword != w or not w or not all(c.isalnum() for c in w):
-        return SpecialPlan(keyword, False, w)
-    if tok.is_stop_word(w):
-        return SpecialPlan(keyword, False, w)
-    emitted = {stem(w)} | ({w} if tok.is_exception_term(w) else set())
-    if w not in emitted:
-        return SpecialPlan(keyword, False, w)
-    return SpecialPlan(keyword, True, w)
 
 
 class SearchEngine:
@@ -971,8 +860,7 @@ class SearchEngine:
 
     def _search_ranged(
         self,
-        expr: ast.Expr,
-        kw_to_match: dict[str, str],
+        plan: QueryPlan,
         k: int,
         with_metadata: bool,
         df_adj: "dict[str, int] | None" = None,
@@ -1008,7 +896,7 @@ class SearchEngine:
         apply the exact within-range cut."""
         from probe_spark.search import ranged
 
-        lookups = sorted({v for v in kw_to_match.values() if v is not None})
+        lookups = list(plan.lookups)
         empty = self._empty(with_metadata)
         if not lookups or not self.n_docs:
             return empty
@@ -1017,12 +905,7 @@ class SearchEngine:
         dfs = self._term_dfs(lookups)
         if df_adj:
             dfs = {t: dfs[t] + df_adj.get(t, 0) for t in lookups}
-        idfs: dict[str, float] = {}
-        for kw in ast.extract_query_terms(expr):
-            match = kw_to_match.get(kw)
-            df = dfs.get(match, 0) if match else 0
-            if df > 0:
-                idfs[kw] = bm25_idf(self.n_docs, df)
+        idfs = plan.idfs(dfs, self.n_docs)
         overlay_ids = overlay[0] if overlay is not None else None
         sum_df = sum(dfs.get(t, 0) for t in lookups)
         if sum_df == 0 and (overlay_ids is None or not overlay_ids.size):
@@ -1051,9 +934,8 @@ class SearchEngine:
                 )
                 exclude_ids = np.union1d(base, seen_ids)
         gen = ranged.make_range_eval(
-            expr,
+            plan,
             idfs,
-            kw_to_match,
             avgdl,
             width,
             k,
@@ -1082,23 +964,16 @@ class SearchEngine:
             o_presence, o_dls = overlay[1], overlay[2]
             n = overlay_ids.size
             zeros = np.zeros(n, dtype=bool)
-            sorted_kws = sorted(
-                {kw for t in ast.walk_terms(expr) for kw in t.keywords}
-            )
             present = {}
-            for kw in sorted_kws:
-                lookup = kw_to_match.get(kw)
+            for kw in plan.keywords:
+                lookup = plan.kw_to_match.get(kw)
                 present[kw] = (
                     o_presence.get(lookup, zeros)
                     if lookup is not None
                     else zeros
                 )
-            tf_norm = (K1 + 1.0) / (
-                1.0
-                + K1 * ((1.0 - B) + B * (o_dls.astype(np.float64) / avgdl))
-            )
             score, isnull, ok = ranged._score_eval_numpy(
-                expr, idfs, present, tf_norm, np
+                plan.expr, idfs, present, tf_norm(o_dls, avgdl), np
             )
             sel = np.nonzero(ok & ~isnull)[0]
             if seen_ids is not None and seen_ids.size and len(sel):
@@ -1116,7 +991,7 @@ class SearchEngine:
                     row = [int(overlay_ids[i]), float(score[i])]
                     if with_metadata:
                         row.append(
-                            [kw for kw in sorted_kws if present[kw][i]]
+                            [kw for kw in plan.keywords if present[kw][i]]
                         )
                     o_rows.append(tuple(row))
                 out = out.unionByName(
@@ -1423,6 +1298,21 @@ class SearchEngine:
         )
 
     # -- search ----------------------------------------------------------------
+    def _check_where(self, where: str) -> None:
+        """Eager analysis of a ``where`` predicate (schema resolution, no
+        job): an invalid predicate must raise ValueError on EVERY dispatch
+        path, not surface as a deferred AnalysisException from whichever
+        plan ran first."""
+        from pyspark.errors import (  # noqa: PLC0415
+            AnalysisException,
+            ParseException,
+        )
+
+        try:
+            _ = self.docs.filter(F.expr(where)).schema
+        except (AnalysisException, ParseException) as e:
+            raise ValueError(f"invalid where predicate {where!r}: {e}") from e
+
     def search(
         self,
         query: str,
@@ -1471,38 +1361,13 @@ class SearchEngine:
         spark = self.spark
         empty = self._empty(with_metadata)
         if where is not None:
-            # eager analysis (schema resolution, no job): an invalid
-            # predicate must raise on EVERY dispatch path, not surface as
-            # a deferred AnalysisException from whichever plan ran first
-            from pyspark.errors import (  # noqa: PLC0415
-                AnalysisException,
-                ParseException,
-            )
-
-            try:
-                _ = self.docs.filter(F.expr(where)).schema
-            except (AnalysisException, ParseException) as e:
-                raise ValueError(
-                    f"invalid where predicate {where!r}: {e}"
-                ) from e
-        try:
-            expr, _special = parse_query(query, exact=exact)
-        except ParseError:
-            return empty
-
-        query_terms = ast.extract_query_terms(expr)
-        if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
+            self._check_where(where)
+        plan = QueryPlan.compile(query, exact)
+        if plan.empty:
             return empty
         if k is not None and k <= 0:
             return empty  # no rows asked for
-
-        # classify: keywords of exact/excluded terms use special resolution
-        special_kws = special_keywords(expr)
-        normal_kws = query_terms - special_kws
-
-        token_terms = sorted(normal_kws)
-        plans = {kw: special_plan(kw) for kw in sorted(special_kws)}
-        special_lookups = [p.lookup for p in plans.values() if p.matchable]
+        expr = plan.expr
 
         # tombstoned docs are masked BEFORE top-k on every path (stats
         # stay as built until vacuum — index/maintenance.py)
@@ -1519,11 +1384,13 @@ class SearchEngine:
             and where is None
             and no_tomb
             and not match_metadata
-            and not special_kws
+            and not plan.specials
             and isinstance(expr, ast.Term)
-            and _single_keyword_or(expr)
+            and plan.single_keyword_or
         ):
-            return self._search_single_term(token_terms[0], k, with_metadata)
+            return self._search_single_term(
+                plan.keywords[0], k, with_metadata
+            )
 
         # conjunctive zero-df kill: a pure conjunction (a simple Term's
         # all-of keywords, or an And-tree of simple Terms — "+a +b +c",
@@ -1549,12 +1416,11 @@ class SearchEngine:
             and where is None
             and no_tomb
             and not match_metadata
-            and not special_kws
-            and _pure_conjunction(expr)
-            and token_terms
+            and not plan.specials
+            and plan.pure_conjunction
         ):
-            dfs = self._term_dfs(token_terms)
-            if any(dfs[t] == 0 for t in token_terms):
+            dfs = self._term_dfs(list(plan.keywords))
+            if any(df == 0 for df in dfs.values()):
                 return empty  # all-of semantics: one absent keyword kills it
 
         # doc-range-partitioned path (search/ranged.py): any top-k boolean
@@ -1602,36 +1468,29 @@ class SearchEngine:
                     if seen_ids is None
                     else np.union1d(seen_ids, tomb)
                 )
-            g_set0, affecting0 = affecting_specials(plans)
-            zero_inc = zero_included(expr)
             if (
-                not zero_inc
+                not plan.zero_included
                 and not exclude_overflow
                 and not tomb_over
                 and (where is None or allow_ids is not None)
             ):
-                ktm = {kw: kw for kw in normal_kws}
-                for kw, p in plans.items():
-                    if p.matchable:
-                        ktm[kw] = p.lookup
-                if not affecting0:
+                if not plan.affecting:
                     return self._search_ranged(
-                        expr, ktm, k, with_metadata, seen_ids=seen_ids,
+                        plan, k, with_metadata, seen_ids=seen_ids,
                         allow_ids=allow_ids,
                     )
                 bundle = self._repair_overlay(
-                    g_set0, affecting0, sorted(set(ktm.values()))
+                    plan.g_set, list(plan.affecting), list(plan.lookups)
                 )
                 if bundle is not None:
                     o_ids, o_presence, o_dls, odf_adj, o_delta, o_bc = bundle
                     adj_avgdl = self.avgdl
                     if o_ids.size and self.n_docs:
-                        adj_avgdl = (
-                            self.avgdl * self.n_docs + o_delta
-                        ) / self.n_docs
+                        adj_avgdl = repaired_avgdl(
+                            self.avgdl, self.n_docs, o_delta
+                        )
                     return self._search_ranged(
-                        expr,
-                        ktm,
+                        plan,
                         k,
                         with_metadata,
                         df_adj=odf_adj,
@@ -1647,33 +1506,19 @@ class SearchEngine:
         # format v7) must be re-tokenized with the per-query special set
         # ("repair join") — this reproduces the reference's global
         # add_special_term effect on TF/dl/DF/avgdl.
-        g_set = frozenset(
-            p.lookup
-            for p in plans.values()
-            if p.lookup and all(c.isalnum() for c in p.lookup)
-        )
-        affecting = sorted(
-            w
-            for w in g_set
-            if tok.tokenize(w) != tok.tokenize(w, g_set)
-        )
+        g_set = plan.g_set
+        affecting = list(plan.affecting)
+        # keyword -> doc-token lookup string
+        kw_to_match = plan.kw_to_match
+        all_lookups = list(plan.lookups)
 
         # token index serves normal terms AND all matchable specials (stem
         # collisions from other words emit the same token string)
-        f1 = self._fetch(
-            self.postings, sorted(set(token_terms) | set(special_lookups)), "tok"
-        )
+        f1 = self._fetch(self.postings, all_lookups, "tok")
         if f1 is not None:
             decoded = f1.mapInArrow(_decode_map_arrow, _DECODED_SCHEMA)
         else:
             decoded = spark.createDataFrame([], _DECODED_SCHEMA)
-
-        # keyword -> doc-token lookup string
-        kw_to_match: dict[str, str] = {kw: kw for kw in normal_kws}
-        for kw, p in plans.items():
-            if p.matchable:
-                kw_to_match[kw] = p.lookup
-        all_lookups = sorted(set(kw_to_match.values()))
 
         # filename-match analog: credit keywords to docs whose tokenized
         # tool metadata shares a token (see the search docstring) by
@@ -1889,11 +1734,7 @@ class SearchEngine:
                 delta = sum(
                     int(r["dl_delta"]) for r in stats_rows if r["term"] == _DL
                 )
-                avgdl = (
-                    (self.avgdl * self.n_docs + delta) / self.n_docs
-                    if self.n_docs
-                    else 0.0
-                )
+                avgdl = repaired_avgdl(self.avgdl, self.n_docs, delta)
                 hits = hits.join(
                     anti_ids if anti_ids is not None
                     else retok.select("doc_id"),
@@ -1907,15 +1748,10 @@ class SearchEngine:
         df_by_term = {
             t: raw_dfs[t] + df_adj.get(t, 0) for t in all_lookups
         }
-        idfs: dict[str, float] = {}
-        for kw in query_terms:
-            match = kw_to_match.get(kw)
-            df = df_by_term.get(match, 0) if match else 0
-            if df > 0:
-                idfs[kw] = bm25_idf(self.n_docs, df)
+        idfs = plan.idfs(df_by_term, self.n_docs)
 
         # does a doc with zero hits satisfy the query?  (only-excluded etc.)
-        if zero_included(expr):
+        if plan.zero_included:
             # hits carries the REPAIRED dl for retokenized docs — prefer it
             # over the stale docs/ dl (scores would otherwise diverge from
             # the oracle for affected docs in only-excluded-style queries)
@@ -1938,7 +1774,7 @@ class SearchEngine:
             cands = hits
 
         present: dict[str, Column] = {}
-        for kw in query_terms:
+        for kw in plan.keywords:
             match = kw_to_match.get(kw)
             if match is None:
                 present[kw] = F.lit(False)
@@ -2015,22 +1851,15 @@ class SearchEngine:
         call (tombstone/scope states are cached) — a serving layer uses
         this to route fallback shapes to parallel individual jobs
         instead of serializing them inside a batch."""
-        try:
-            expr, _special = parse_query(query, exact=exact)
-        except ParseError:
+        plan = QueryPlan.compile(query, exact)
+        if plan.empty:
             return True  # empty contribution either way
-        query_terms = ast.extract_query_terms(expr)
-        if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
-            return True
         _tomb, tomb_over = self._tombstones()
         if tomb_over:
             return False
         if where is not None and self._allowed_ids(where) is None:
             return False  # scope past ALLOW_COLLECT_CAP -> batch falls back
-        special_kws = special_keywords(expr)
-        plans = {kw: special_plan(kw) for kw in sorted(special_kws)}
-        _g0, affecting0 = affecting_specials(plans)
-        return not (zero_included(expr) or affecting0)
+        return plan.batchable_shape
 
     def search_batch(
         self,
@@ -2102,64 +1931,28 @@ class SearchEngine:
         allow_ids = None
         allow_overflow = False
         if where is not None:
-            from pyspark.errors import (  # noqa: PLC0415
-                AnalysisException,
-                ParseException,
-            )
-
-            try:
-                _ = self.docs.filter(F.expr(where)).schema
-            except (AnalysisException, ParseException) as e:
-                raise ValueError(
-                    f"invalid where predicate {where!r}: {e}"
-                ) from e
+            self._check_where(where)
             allow_ids = self._allowed_ids(where)
             allow_overflow = allow_ids is None
 
-        compiled: list = []  # (query_idx, expr, ktm)
+        compiled: list = []  # (query_idx, plan)
         fallback: list[int] = []
         for qi, query in enumerate(queries):
-            try:
-                expr, _special = parse_query(query, exact=exact)
-            except ParseError:
+            plan = QueryPlan.compile(query, exact)
+            if plan.empty:
                 continue  # empty contribution, same as search()
-            query_terms = ast.extract_query_terms(expr)
-            if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
-                continue
-            special_kws = special_keywords(expr)
-            plans = {kw: special_plan(kw) for kw in sorted(special_kws)}
-            _g0, affecting0 = affecting_specials(plans)
-            if (
-                zero_included(expr)
-                or affecting0
-                or tomb_over
-                or allow_overflow
-            ):
+            if not plan.batchable_shape or tomb_over or allow_overflow:
                 fallback.append(qi)
                 continue
             if allow_ids is not None and not allow_ids.size:
                 continue  # scope matches no doc at all -> empty, as search()
-            ktm = {kw: kw for kw in query_terms - special_kws}
-            for kw, p in plans.items():
-                if p.matchable:
-                    ktm[kw] = p.lookup
-            compiled.append((qi, expr, ktm))
+            compiled.append((qi, plan))
 
         out_parts: list[DataFrame] = []
         if compiled:
-            lookups = sorted(
-                {v for _qi, _e, ktm in compiled for v in ktm.values()}
-            )
+            lookups = sorted({v for _qi, p in compiled for v in p.lookups})
             dfs = self._term_dfs(lookups)
-            payload = []
-            for _qi, expr, ktm in compiled:
-                idfs = {}
-                for kw in ast.extract_query_terms(expr):
-                    match = ktm.get(kw)
-                    df = dfs.get(match, 0) if match else 0
-                    if df > 0:
-                        idfs[kw] = bm25_idf(self.n_docs, df)
-                payload.append((expr, idfs, ktm))
+            payload = [(p, p.idfs(dfs, self.n_docs)) for _qi, p in compiled]
             sum_df = sum(dfs.get(t, 0) for t in lookups)
             if sum_df > 0 and self.n_docs:
                 src, width = self._ranged_src(lookups, sum_df, allow_ids)
@@ -2167,11 +1960,11 @@ class SearchEngine:
                     payload,
                     self.avgdl,
                     width,
-                    max(ks[qi] for qi, _e, _m in compiled),
+                    max(ks[qi] for qi, _p in compiled),
                     with_metadata,
                     exclude_ids=tomb,
                     allow_ids=allow_ids,
-                    ks=[ks[qi] for qi, _e, _m in compiled],
+                    ks=[ks[qi] for qi, _p in compiled],
                 )
                 fields = [
                     StructField("query_idx", IntegerType(), False),
@@ -2191,7 +1984,7 @@ class SearchEngine:
                 qidx_map = spark.createDataFrame(
                     [
                         (i, int(qi), int(ks[qi]))
-                        for i, (qi, _e, _m) in enumerate(compiled)
+                        for i, (qi, _p) in enumerate(compiled)
                     ],
                     "query_idx int, orig_idx int, _kq long",
                 )

@@ -23,8 +23,8 @@ Semantics parity map (same references as engine.py):
   - AST eval/scoring incl. required/excluded gates (elastic_query.rs:
     148-292, ranking.rs:226-274) — vectorized numpy mirror of the
     engine's Column compiler
-  - special (exact/excluded) keywords via engine.special_plan, including
-    the raw-word repair retokenization for G-set-affected docs
+  - special (exact/excluded) keywords via query/plan.special_plan,
+    including the raw-word repair retokenization for G-set-affected docs
   - tie-break: score desc, doc_id asc (ranking.rs:406-418)
 """
 
@@ -38,30 +38,12 @@ import numpy as np
 from probe_spark.functions import tokenizer as tok
 from probe_spark.index.codec import PostingsDirectory
 from probe_spark.query import ast
-from probe_spark.query.parser import ParseError, parse_query
-from probe_spark.search.engine import (
-    MAX_QUERY_TERMS,
-    _single_keyword_or,
-    special_plan,
-)
-from probe_spark.search.ranged import B, K1, bm25_idf
+from probe_spark.query.plan import QueryPlan
+from probe_spark.search.ranged import bm25_idf, repaired_avgdl, tf_norm
 
 RESULT_COLUMNS = [
     "doc_id", "score", "conv_id", "turn_idx", "role", "tool", "ts", "text",
 ]
-
-
-def _narrowable(e: ast.Expr) -> bool:
-    """True iff AST-driven candidate narrowing can shrink the candidate
-    set below the all-postings union: an And node, a required term, or a
-    multi-keyword (all-of) term introduces an intersection somewhere.
-    Pure disjunctions of single-keyword optional terms return False —
-    their candidate set IS the union."""
-    if isinstance(e, ast.Term):
-        return e.required or len(e.keywords) > 1
-    if isinstance(e, ast.And):
-        return True
-    return _narrowable(e.left) or _narrowable(e.right)
 
 
 def _listed(col):
@@ -344,7 +326,7 @@ class LocalSearcher:
         "a OR (b OR c)" (generic sum s_a+(s_b+s_c), which can differ in
         the last ulp), returns None (fallback), as do doc ids too sparse
         for a dense array.  Eligibility otherwise mirrors
-        engine._single_keyword_or (single-keyword optional terms only) plus
+        QueryPlan.single_keyword_or (single-keyword optional terms only) plus
         no tombstones/specials; search() answers k <= 0 before any
         route, so k >= 1 here."""
         from probe_spark.query import ast as _ast
@@ -378,12 +360,7 @@ class LocalSearcher:
             if not idf:
                 continue
             ids, dls = per_term[t]
-            tfn = (K1 + 1.0) / (
-                1.0
-                + K1
-                * ((1.0 - B) + B * (dls.astype(np.float64) / self.avgdl))
-            )
-            scores[ids] += idf * tfn
+            scores[ids] += idf * tf_norm(dls, self.avgdl)
         n = scores.size
         kth = np.partition(scores, n - k)[n - k] if n > k else 0.0
         sel = np.flatnonzero(
@@ -424,18 +401,16 @@ class LocalSearcher:
 
     def _const_score_topk(
         self,
-        expr,
+        plan: QueryPlan,
         per_term: dict,
-        kw_to_match: dict,
-        query_terms,
         idfs: dict,
         repair: "tuple | None",
         k: int,
         with_metadata: bool,
     ) -> list[dict]:
-        """Top-k for zero-included queries whose every qualifying doc
-        scores exactly 0.0 (no non-excluded keyword with positive idf):
-        the answer is the first k qualifying doc_ids, found by a chunked
+        """Top-k for zero-included queries, whose terms are all excluded,
+        so every qualifying doc scores exactly 0.0: the answer is the
+        first k qualifying doc_ids, found by a chunked
         doc-id-order walk with the same _score_eval semantics per chunk —
         no corpus-wide arrays.  Rank-identity: all scores tie at 0.0 and
         the engine tie-break is doc_id asc, which is the walk order."""
@@ -443,10 +418,8 @@ class LocalSearcher:
         re_ids = re_presence = None
         if repair is not None:
             re_ids, re_presence = repair
-        out_ids: list[np.ndarray] = []
         out_rows: list[tuple] = []
         step = 1 << 16
-        kws_sorted = None
         for lo in range(0, every.size, step):
             chunk = every[lo : lo + step]
             m = chunk.size
@@ -464,8 +437,8 @@ class LocalSearcher:
                 return pos, f, a, b
 
             presc: dict[str, np.ndarray] = {}
-            for kw in query_terms:
-                match = kw_to_match.get(kw)
+            for kw in plan.keywords:
+                match = plan.kw_to_match.get(kw)
                 mask = np.zeros(m, dtype=bool)
                 if match is not None:
                     pos, f, _a, _b = member(per_term[match][0])
@@ -473,13 +446,13 @@ class LocalSearcher:
                 presc[kw] = mask
             if re_ids is not None and re_ids.size:
                 pos, f, a, b = member(re_ids)
-                for kw in query_terms:
-                    match = kw_to_match.get(kw)
+                for kw in plan.keywords:
+                    match = plan.kw_to_match.get(kw)
                     if match is None:
                         continue
                     presc[kw][pos[f]] = re_presence[match][a:b][f]
             score_c, ok_c = self._score_eval(
-                expr, presc, idfs, np.ones(m), m
+                plan.expr, presc, idfs, np.ones(m), m
             )
             keep_c = ok_c & ~np.isnan(score_c)
             if self._tomb is not None and m:
@@ -488,14 +461,12 @@ class LocalSearcher:
                 keep_c &= self._tomb[p] != chunk
             hit = np.flatnonzero(keep_c)
             if hit.size:
-                if kws_sorted is None:
-                    kws_sorted = sorted(presc)
                 take = hit[: k - len(out_rows)]
                 for j in take:
                     out_rows.append(
                         (
                             int(chunk[j]),
-                            [kw for kw in kws_sorted if presc[kw][j]],
+                            [kw for kw in plan.keywords if presc[kw][j]],
                         )
                     )
                 if len(out_rows) >= k:
@@ -512,36 +483,13 @@ class LocalSearcher:
         self, query: str, k: int | None = 10, exact: bool = False,
         with_metadata: bool = True,
     ) -> list[dict]:
-        try:
-            expr, _special = parse_query(query, exact=exact)
-        except ParseError:
-            return []
-        query_terms = ast.extract_query_terms(expr)
-        if len(query_terms) > MAX_QUERY_TERMS or not query_terms:
+        plan = QueryPlan.compile(query, exact)
+        if plan.empty:
             return []
         if k is not None and k <= 0:
             return []  # no rows asked for, on every route (as the engine)
-
-        special_kws: set[str] = set()
-        for t in ast.walk_terms(expr):
-            if t.exact or t.excluded:
-                special_kws.update(t.keywords)
-        normal_kws = query_terms - special_kws
-        plans = {kw: special_plan(kw) for kw in sorted(special_kws)}
-        kw_to_match: dict[str, str] = {kw: kw for kw in normal_kws}
-        for kw, p in plans.items():
-            if p.matchable:
-                kw_to_match[kw] = p.lookup
-        all_lookups = sorted(set(kw_to_match.values()))
-
-        g_set = frozenset(
-            p.lookup
-            for p in plans.values()
-            if p.lookup and all(c.isalnum() for c in p.lookup)
-        )
-        affecting = sorted(
-            w for w in g_set if tok.tokenize(w) != tok.tokenize(w, g_set)
-        )
+        expr, kw_to_match = plan.expr, plan.kw_to_match
+        all_lookups = plan.lookups
 
         # per-doc hits from the token index
         per_term = {t: self._postings("tok", t) for t in all_lookups}
@@ -549,8 +497,8 @@ class LocalSearcher:
         if (
             k is not None
             and self._tomb is None
-            and not special_kws
-            and _single_keyword_or(expr)
+            and not plan.specials
+            and plan.single_keyword_or
         ):
             # pure disjunction of single-keyword optional terms: dense
             # scatter-add scoring, no candidate union (bit-identical —
@@ -562,13 +510,9 @@ class LocalSearcher:
             if res is not None:
                 return res
         # zero-included shapes ("-onlyexcluded", "a OR -b") qualify docs
-        # containing NO query term, so candidate narrowing cannot apply;
-        # pure-AST check, computed early to pick the construction
-        zero_included = ast.evaluate(expr, lambda kw: False) and (
-            ast.score(expr, lambda kw: 0.0) is not None
-        )
+        # containing NO query term, so candidate narrowing cannot apply
         cand = None
-        if not zero_included and _narrowable(expr):
+        if not plan.zero_included and plan.narrowable:
             # AST-driven narrowing: conjunctions / required / negated /
             # multi-keyword shapes qualify only docs in the intersection
             # of their mandatory terms' postings — score over THAT set,
@@ -595,7 +539,6 @@ class LocalSearcher:
         else:
             cand_ids = cand
         n = len(cand_ids)
-        present: dict[str, np.ndarray] = {}
         dl = np.zeros(n, dtype=np.int64)
         lookup_present: dict[str, np.ndarray] = {}
         pos0 = 0
@@ -630,7 +573,7 @@ class LocalSearcher:
 
         df_by_term = {t: int(len(per_term[t][0])) for t in all_lookups}
 
-        if affecting:
+        if plan.affecting:
             # repair retokenization: docs containing an affecting word as a
             # whole raw word re-tokenize with the per-query special set.
             # Round 5: the bundle is BITMASK arrays over the lookup list
@@ -639,7 +582,7 @@ class LocalSearcher:
             # one computation via the index directory) — the per-query
             # Python membership loops over hundreds of thousands of token
             # sets are gone; presence overwrite is a vectorized shift.
-            lookups_t = tuple(all_lookups)
+            g_set, lookups_t = plan.g_set, plan.lookups
             rkey = (g_set, lookups_t)
             bundle = self._repair_cache.get(rkey)
             if bundle is None:
@@ -658,7 +601,10 @@ class LocalSearcher:
 
                     raw_ids = np.unique(
                         np.concatenate(
-                            [self._postings("raw", w)[0] for w in affecting]
+                            [
+                                self._postings("raw", w)[0]
+                                for w in plan.affecting
+                            ]
                         )
                     )
                     table = self._docs_dataset().to_table(
@@ -729,11 +675,7 @@ class LocalSearcher:
                     self._repair_cache.pop(next(iter(self._repair_cache)))
                 self._repair_cache[rkey] = bundle
             re_ids, re_presence, re_dl, delta = bundle
-            avgdl = (
-                (self.avgdl * self.n_docs + delta) / self.n_docs
-                if self.n_docs
-                else 0.0
-            )
+            avgdl = repaired_avgdl(self.avgdl, self.n_docs, delta)
             cand_ids = np.unique(np.concatenate([cand_ids, re_ids]))
             n = len(cand_ids)
             re_pos = np.searchsorted(cand_ids, re_ids)
@@ -776,68 +718,45 @@ class LocalSearcher:
                     int(ids.size) - had + int(re_presence[t].sum())
                 )
 
-        idfs: dict[str, float] = {}
-        for kw in query_terms:
-            match = kw_to_match.get(kw)
-            df = df_by_term.get(match, 0) if match else 0
-            if df > 0:
-                idfs[kw] = bm25_idf(self.n_docs, df)
+        idfs = plan.idfs(df_by_term, self.n_docs)
 
-        deferred_widen = False
-        if zero_included:
-            # constant-score fast path: when no NON-excluded keyword has
-            # positive idf, every qualifying doc scores exactly 0.0 (the
-            # excluded branches only produce NaN) and the top-k is the
-            # first k qualifying doc_ids — found by walking the corpus in
-            # doc-id order, chunk by chunk, instead of materializing and
-            # scoring a corpus-wide candidate set ("-onlyexcluded" at
-            # 26.4M turns: 7.6s -> ~10ms)
-            const_score = k is not None and not any(
-                idfs.get(kw, 0.0) > 0.0
-                for t in ast.walk_terms(expr)
-                if not t.excluded
-                for kw in t.keywords
-            )
-            if const_score:
+        if plan.zero_included:
+            # only an all-excluded query is zero-included (the any-keyword
+            # gate rejects a doc holding no keyword otherwise), so every
+            # qualifying doc scores exactly 0.0 (the excluded branches only
+            # produce NaN) and the top-k is the first k qualifying doc_ids
+            # — found by walking the corpus in doc-id order, chunk by
+            # chunk, instead of materializing and scoring a corpus-wide
+            # candidate set ("-onlyexcluded" at 26.4M turns: 7.6s -> ~10ms)
+            if k is not None:
                 return self._const_score_topk(
-                    expr, per_term, kw_to_match, query_terms, idfs,
-                    (re_ids, re_presence) if affecting else None,
+                    plan, per_term, idfs,
+                    (re_ids, re_presence) if plan.affecting else None,
                     k, with_metadata,
                 )
-            # zero-included with scored terms ("a OR -b"): every doc is a
-            # candidate, but docs holding NO query term all score exactly
-            # 0.0 — so when the postings union already yields >= k
-            # positive-score qualifying rows, the union top-k IS the
-            # global top-k and the corpus-wide widening is skipped
-            # entirely (the deferred check below re-widens only in the
-            # degenerate under-k case).  k=None (no limit) still widens:
-            # the caller asked for every qualifying doc.
-            if k is None:
-                every, every_dl = self._universe_arrays()
-                idx = np.searchsorted(every, cand_ids)
-                full_dl = every_dl.astype(np.int64)
-                full_dl[idx] = dl
-                widened: dict[str, np.ndarray] = {}
-                for t, mask in lookup_present.items():
-                    m = np.zeros(len(every), dtype=bool)
-                    m[idx] = mask
-                    widened[t] = m
-                cand_ids, dl, lookup_present = every, full_dl, widened
-                n = len(cand_ids)
-            else:
-                deferred_widen = True
+            # k=None (no limit): every doc of the corpus is a candidate
+            every, every_dl = self._universe_arrays()
+            idx = np.searchsorted(every, cand_ids)
+            full_dl = every_dl.astype(np.int64)
+            full_dl[idx] = dl
+            widened: dict[str, np.ndarray] = {}
+            for t, mask in lookup_present.items():
+                m = np.zeros(len(every), dtype=bool)
+                m[idx] = mask
+                widened[t] = m
+            cand_ids, dl, lookup_present = every, full_dl, widened
+            n = len(cand_ids)
 
-        for kw in query_terms:
+        present: dict[str, np.ndarray] = {}
+        for kw in plan.keywords:
             match = kw_to_match.get(kw)
             if match is None:
                 present[kw] = np.zeros(n, dtype=bool)
             else:
                 present[kw] = lookup_present[match]
-
-        tf_norm = (K1 + 1.0) / (
-            1.0 + K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avgdl))
+        score, ok = self._score_eval(
+            expr, present, idfs, tf_norm(dl, avgdl), n
         )
-        score, ok = self._score_eval(expr, present, idfs, tf_norm, n)
         keep = ok & ~np.isnan(score)
         if self._tomb is not None and n:
             # deleted docs never surface (covers the repair-widened and
@@ -847,39 +766,6 @@ class LocalSearcher:
             keep &= self._tomb[pos] != cand_ids
         ids_k = cand_ids[keep]
         sc_k = score[keep]
-        if deferred_widen and int(np.count_nonzero(sc_k > 0.0)) < k:
-            # degenerate zero-included case: fewer than k positive-score
-            # docs in the postings union, so zero-score docs outside it
-            # can reach the top-k — do the corpus-wide widening after all
-            # and re-run the assembly exactly as the eager path would
-            every, every_dl = self._universe_arrays()
-            idx = np.searchsorted(every, cand_ids)
-            full_dl = every_dl.astype(np.int64)
-            full_dl[idx] = dl
-            widened = {}
-            for t, mask in lookup_present.items():
-                m = np.zeros(len(every), dtype=bool)
-                m[idx] = mask
-                widened[t] = m
-            cand_ids, dl, lookup_present = every, full_dl, widened
-            n = len(cand_ids)
-            for kw in query_terms:
-                match = kw_to_match.get(kw)
-                if match is None:
-                    present[kw] = np.zeros(n, dtype=bool)
-                else:
-                    present[kw] = lookup_present[match]
-            tf_norm = (K1 + 1.0) / (
-                1.0 + K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avgdl))
-            )
-            score, ok = self._score_eval(expr, present, idfs, tf_norm, n)
-            keep = ok & ~np.isnan(score)
-            if self._tomb is not None and n:
-                pos = np.searchsorted(self._tomb, cand_ids)
-                pos[pos == self._tomb.size] = self._tomb.size - 1
-                keep &= self._tomb[pos] != cand_ids
-            ids_k = cand_ids[keep]
-            sc_k = score[keep]
         if k is not None and 0 < k < ids_k.size:
             # partition-then-sort top-k: O(n) select of every row scoring
             # >= the kth-largest score (ties at the boundary all included,
@@ -904,9 +790,9 @@ class LocalSearcher:
             # same construction as engine._matched_terms_col
             # (file_processing.rs:1447-1488), from the presence arrays
             sel = np.flatnonzero(keep)[order]
-            kws = sorted(present)
             self._attach_meta(
-                results, [[kw for kw in kws if present[kw][j]] for j in sel]
+                results,
+                [[kw for kw in plan.keywords if present[kw][j]] for j in sel],
             )
         return results
 

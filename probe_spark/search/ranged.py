@@ -42,11 +42,14 @@ elastic_query.rs:148-292 (boolean evaluation).
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterator
+from typing import TYPE_CHECKING, Callable, Iterator
 
 import pyarrow as pa
 
 from probe_spark.query import ast
+
+if TYPE_CHECKING:
+    from probe_spark.query.plan import QueryPlan
 
 # BM25 parameters (ranking.rs:361-362), shared by every lane; oracle.py
 # keeps its own pair as the independent reference
@@ -60,6 +63,22 @@ def bm25_idf(n_docs: int, df: int) -> float:
     lane computes idf through this one float expression, so scores stay
     bit-identical across lanes."""
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def tf_norm(dls, avgdl: float):
+    """BM25 tf normalization with binary tf over a numpy dl array:
+    (k1+1)/(1 + k1*((1 - b) + b*dl/avgdl)) (ranking.rs:186-208), in the
+    float association of engine._tf_norm_col, so every lane's scores are
+    bit-identical."""
+    return (K1 + 1.0) / (
+        1.0 + K1 * ((1.0 - B) + B * (dls.astype("float64") / avgdl))
+    )
+
+
+def repaired_avgdl(avgdl: float, n_docs: int, dl_delta: int) -> float:
+    """avgdl after the special-term repair changed the affected docs'
+    lengths by ``dl_delta`` in total (0.0 on an empty corpus)."""
+    return (avgdl * n_docs + dl_delta) / n_docs if n_docs else 0.0
 
 
 # target decoded postings per range: small enough that a range's numpy
@@ -207,9 +226,8 @@ def _collect_range_postings(
 
 
 def make_range_eval(
-    expr: ast.Expr,
+    plan: "QueryPlan",
     idfs: dict[str, float],
-    kw_to_match: dict[str, str],
     avgdl: float,
     width: int,
     k: int,
@@ -245,9 +263,7 @@ def make_range_eval(
         )
         acc = _collect_range_postings(batches, width, np)
 
-        sorted_kws = sorted(
-            {kw for t in ast.walk_terms(expr) for kw in t.keywords}
-        )
+        expr, kw_to_match = plan.expr, plan.kw_to_match
         out_ids: list = []
         out_scores: list = []
         out_matched: list[list[str]] = []
@@ -266,7 +282,7 @@ def make_range_eval(
             uids, first = np.unique(all_ids, return_index=True)
             udls = all_dls[first]
             present: dict[str, "np.ndarray"] = {}
-            for kw in sorted_kws:
+            for kw in plan.keywords:
                 lookup = kw_to_match.get(kw)
                 tid = term_ids.get(lookup) if lookup is not None else None
                 if tid is None or not len(tid):
@@ -275,12 +291,8 @@ def make_range_eval(
                     pos = np.searchsorted(tid, uids)
                     pos[pos == len(tid)] = len(tid) - 1
                     present[kw] = tid[pos] == uids
-            # identical float shape to engine._tf_norm_col
-            tf_norm = (K1 + 1.0) / (
-                1.0 + K1 * ((1.0 - B) + B * (udls.astype(np.float64) / avgdl))
-            )
             score, isnull, ok = _score_eval_numpy(
-                expr, idfs, present, tf_norm, np
+                expr, idfs, present, tf_norm(udls, avgdl), np
             )
             if ex_ids is not None and len(ex_ids):
                 a = rid * width
@@ -308,7 +320,7 @@ def make_range_eval(
                 out_scores.append(float(score[i]))
                 if with_matched:
                     out_matched.append(
-                        [kw for kw in sorted_kws if present[kw][i]]
+                        [kw for kw in plan.keywords if present[kw][i]]
                     )
 
         arrays = [
@@ -325,7 +337,7 @@ def make_range_eval(
 
 
 def make_batch_range_eval(
-    queries: "list[tuple[ast.Expr, dict[str, float], dict[str, str]]]",
+    queries: "list[tuple[QueryPlan, dict[str, float]]]",
     avgdl: float,
     width: int,
     k: int,
@@ -340,7 +352,7 @@ def make_batch_range_eval(
     backfills) where thousands of queries hit the same index and the
     dominant cost is reading/decoding segments, not scoring.
 
-    ``queries`` is ``[(expr, idfs, kw_to_match), ...]``; the exchange
+    ``queries`` is ``[(plan, idfs), ...]``; the exchange
     carries the UNION of all queries' lookup terms, each range decodes a
     term's blocks ONCE, builds the candidate (uids, dls) arrays and one
     presence mask per lookup term ONCE, and then scores every query over
@@ -374,11 +386,6 @@ def make_batch_range_eval(
         )
         acc = _collect_range_postings(batches, width, np)
 
-        # every lookup term any query needs a presence mask for
-        kws_by_query = [
-            sorted({kw for t in ast.walk_terms(expr) for kw in t.keywords})
-            for expr, _idfs, _ktm in queries
-        ]
         out_qidx: list = []
         out_ids: list = []
         out_scores: list = []
@@ -415,9 +422,7 @@ def make_batch_range_eval(
                 pres_by_lookup[lookup] = got
                 return got
 
-            tf_norm = (K1 + 1.0) / (
-                1.0 + K1 * ((1.0 - B) + B * (udls.astype(np.float64) / avgdl))
-            )
+            tfn = tf_norm(udls, avgdl)
             excl_mask = None
             if ex_ids is not None and len(ex_ids):
                 a = rid * width
@@ -438,17 +443,17 @@ def make_batch_range_eval(
                     else excl_mask & allow_mask
                 )
             zeros_b = np.zeros(n, dtype=bool)
-            for qi, (expr, idfs, ktm) in enumerate(queries):
+            for qi, (plan, idfs) in enumerate(queries):
                 present = {}
-                for kw in kws_by_query[qi]:
-                    lookup = ktm.get(kw)
+                for kw in plan.keywords:
+                    lookup = plan.kw_to_match.get(kw)
                     present[kw] = (
                         lookup_present(lookup)
                         if lookup is not None
                         else zeros_b
                     )
                 score, isnull, ok = _score_eval_numpy(
-                    expr, idfs, present, tf_norm, np
+                    plan.expr, idfs, present, tfn, np
                 )
                 if excl_mask is not None:
                     ok = ok & excl_mask
@@ -465,11 +470,7 @@ def make_batch_range_eval(
                     out_scores.append(float(score[i]))
                     if with_matched:
                         out_matched.append(
-                            [
-                                kw
-                                for kw in kws_by_query[qi]
-                                if present[kw][i]
-                            ]
+                            [kw for kw in plan.keywords if present[kw][i]]
                         )
 
         arrays = [

@@ -32,24 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from probe_spark.query import ast
-from probe_spark.query.parser import parse_query
+from probe_spark.query.plan import QueryPlan
 
 _CE_MODEL = None
 _CE_NAME = None
 
 
-def _wanted_keywords(query: str) -> list[str]:
+def _wanted_keywords(query: str, exact: bool = False) -> list[str]:
     """Distinct keywords of the query's non-excluded terms — the
-    coverage denominator (excluded terms are not 'wanted')."""
-    expr, _special = parse_query(query)
-    kws = {
-        kw
-        for t in ast.walk_terms(expr)
-        if not t.excluded
-        for kw in t.keywords
-    }
-    return sorted(kws)
+    coverage denominator (excluded terms are not 'wanted').  An
+    unparsable query wants nothing; the search lanes return no rows for
+    it either."""
+    return QueryPlan.compile(query, exact).wanted_keywords
 
 
 def _cross_encoder_fn(model_name: str, query: str):
@@ -144,12 +138,15 @@ def boost(
     )
 
 
-def rerank_rows(rows, query: str, k: "int | None" = 10) -> list[dict]:
+def rerank_rows(
+    rows, query: str, k: "int | None" = 10, exact: bool = False
+) -> list[dict]:
     """Overlap-rerank a COLLECTED candidate list (list of dicts or Spark
     Rows holding matched_terms + score) — the row-level twin of
     :func:`rerank` for the CLI / LocalSearcher paths.  Same ordering:
-    rerank_score desc, stage-1 score desc, doc_id asc."""
-    wanted = set(_wanted_keywords(query))
+    rerank_score desc, stage-1 score desc, doc_id asc.  ``exact`` must be
+    the stage-1 search's: it decides which keywords matched_terms holds."""
+    wanted = set(_wanted_keywords(query, exact))
     denom = float(max(len(wanted), 1))
     out = []
     for r in rows:
@@ -172,6 +169,7 @@ def rerank(
     n_candidates: int = 50,
     scorer: str = "overlap",
     project: bool = True,
+    exact: bool = False,
 ) -> DataFrame:
     """Retrieve-then-rerank: BM25 top-``n_candidates`` via
     ``engine.search``, re-scored by ``scorer``, reordered, top-``k``.
@@ -179,11 +177,14 @@ def rerank(
     Returns (doc_id, rerank_score, score) ordered by (rerank_score desc,
     score desc, doc_id asc).  The candidate boundary is the engine's own
     deterministic (score desc, doc_id asc) cut, so the result is
-    reproducible across paths and oracle-checkable.
+    reproducible across paths and oracle-checkable.  ``exact`` is passed
+    to the stage-1 search and decides the wanted keywords too.
     """
-    cands = engine.search(query, k=n_candidates, with_metadata=True)
+    cands = engine.search(
+        query, k=n_candidates, exact=exact, with_metadata=True
+    )
     if scorer == "overlap":
-        wanted = _wanted_keywords(query)
+        wanted = _wanted_keywords(query, exact)
         denom = float(max(len(wanted), 1))
         scored = cands.withColumn(
             "rerank_score",

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from probe_spark.query import ast
-from probe_spark.query.parser import parse_query
+from probe_spark.query.plan import QueryPlan
 
 PERCOLATE_SCHEMA = StructType(
     [
@@ -49,34 +49,16 @@ PERCOLATE_SCHEMA = StructType(
 )
 
 
-def compile_queries(queries: dict[str, str]) -> list[tuple]:
-    """(query_id, expr, kw_to_match, g_set) per query; invalid syntax
+def compile_queries(queries: dict[str, str]) -> "list[tuple[str, QueryPlan]]":
+    """(query_id, plan) per query, in query_id order; invalid syntax
     raises ValueError up front — a standing query that can never fire is
     a registration error, not a silent empty stream."""
-    from probe_spark.search.engine import special_plan
-
     out = []
     for qid, qtext in sorted(queries.items()):
-        try:
-            expr, _ = parse_query(qtext)
-        except Exception as e:
-            raise ValueError(f"invalid standing query {qid!r}: {e}") from e
-        special: set[str] = set()
-        for t in ast.walk_terms(expr):
-            if t.exact or t.excluded:
-                special.update(t.keywords)
-        kw_to_match = {
-            kw: kw for kw in ast.extract_query_terms(expr) - special
-        }
-        plans = {kw: special_plan(kw) for kw in sorted(special)}
-        for kw, p in plans.items():
-            kw_to_match[kw] = p.lookup if p.matchable else None
-        g_set = frozenset(
-            p.lookup
-            for p in plans.values()
-            if p.lookup and all(c.isalnum() for c in p.lookup)
-        )
-        out.append((qid, expr, kw_to_match, g_set))
+        plan = QueryPlan.compile(qtext)
+        if plan.expr is None:
+            raise ValueError(f"invalid standing query {qid!r}: {plan.error}")
+        out.append((qid, plan))
     return out
 
 
@@ -85,11 +67,10 @@ def percolate(turns: DataFrame, queries: dict[str, str]) -> DataFrame:
     sorted matched_terms.  ``turns`` may be batch or streaming; columns
     beyond (conv_id, turn_idx, text) are ignored (column-pruned at the
     source by the select below)."""
-    compiled = compile_queries(queries)
     # group by G set: one tokenizer pass per distinct special vocabulary
     by_g: dict[frozenset, list[tuple]] = {}
-    for q in compiled:
-        by_g.setdefault(q[3], []).append(q)
+    for qid, plan in compile_queries(queries):
+        by_g.setdefault(plan.g_set, []).append((qid, plan))
     groups = sorted(by_g.items(), key=lambda kv: sorted(kv[0]))
 
     def gen(pdfs: Iterator["object"]) -> Iterator["object"]:
@@ -110,12 +91,10 @@ def percolate(turns: DataFrame, queries: dict[str, str]) -> DataFrame:
                     set(tok.tokenize(t, g_set)) if t else set()
                     for t in texts
                 ]
-                for qid, expr, ktm, _g in qs:
-                    kws = sorted(
-                        {kw for t in ast.walk_terms(expr) for kw in t.keywords}
-                    )
+                for qid, plan in qs:
+                    expr = plan.expr
                     for i, ts in enumerate(tok_sets):
-                        def present(kw, _ts=ts, _ktm=ktm):
+                        def present(kw, _ts=ts, _ktm=plan.kw_to_match):
                             m = _ktm.get(kw)
                             return m is not None and m in _ts
 
@@ -133,7 +112,7 @@ def percolate(turns: DataFrame, queries: dict[str, str]) -> DataFrame:
                         out_conv.append(convs.iloc[i])
                         out_turn.append(turns_.iloc[i])
                         out_terms.append(
-                            [kw for kw in kws if present(kw)]
+                            [kw for kw in plan.keywords if present(kw)]
                         )
             yield pd.DataFrame(
                 {

@@ -10,12 +10,14 @@ pin the 23 fixed shapes; this pins hypothesis-generated boolean queries
   1. against `probe_spark.oracle.search` — the faithful single-node
      ranking.rs / elastic_query.rs mirror — on a real multi-segment
      index;
-  2. narrowing ON vs OFF (monkeypatched `_narrowable`) through the real
-     `search()` — byte-identical rows either way.
+  2. narrowing ON vs OFF (the compiled plan's `narrowable` flag forced
+     off; a spy shows the OFF side never builds a narrowed candidate set)
+     through the real `search()` — byte-identical rows either way.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
 
 import pytest
@@ -138,16 +140,41 @@ def test_dense_disjunction_on_off_identical(prop_searcher, query, monkeypatch):
 )
 @given(query=query_strings())
 def test_narrowing_on_off_identical(prop_searcher, query, monkeypatch):
-    from probe_spark.search import local as local_mod
+    from probe_spark.query.plan import QueryPlan
+    from probe_spark.search.local import LocalSearcher
 
-    try:
-        parse_query(query)
-    except ParseError:
+    plan = QueryPlan.compile(query)
+    if plan.expr is None:
         return
+    calls: list[int] = []
+    cand_set = LocalSearcher._cand_set
+
+    def spy(self, *args):
+        calls.append(1)
+        return cand_set(self, *args)
+
+    monkeypatch.setattr(LocalSearcher, "_cand_set", spy)
     on = prop_searcher.search(query, k=10)
-    monkeypatch.setattr(local_mod, "_narrowable", lambda e: False)
+    narrows = not plan.empty and plan.narrowable and not plan.zero_included
+    if plan.zero_included:
+        # the local lane's constant-score route relies on this
+        assert plan.wanted_keywords == [], query
+    assert len(calls) == int(narrows), query
+    # narrowing OFF: every plan the searcher compiles says not narrowable
+    compile_plan = QueryPlan.compile
+    monkeypatch.setattr(
+        QueryPlan,
+        "compile",
+        classmethod(
+            lambda cls, q, exact=False: dataclasses.replace(
+                compile_plan(q, exact), narrowable=False
+            )
+        ),
+    )
+    calls.clear()
     off = prop_searcher.search(query, k=10)
     monkeypatch.undo()
+    assert not calls, query
     assert [
         (r["doc_id"], r["score"], r.get("matched_terms")) for r in on
     ] == [(r["doc_id"], r["score"], r.get("matched_terms")) for r in off], (

@@ -145,3 +145,35 @@ def test_cli_overlap_reranker(rr_engine, capsys):
         (-r["rerank_score"], -r["score"], r["doc_id"]) for r in lines
     ]
     assert keys == sorted(keys)
+
+
+def test_rerank_rows_honors_exact():
+    from probe_spark.search.rerank import rerank_rows
+
+    # an exact query matches the unstemmed keyword, so coverage must be
+    # counted against it, not against the stem
+    rows = [{"doc_id": 1, "score": 1.0, "matched_terms": ["errors"]}]
+    out = rerank_rows(rows, "errors", exact=True)
+    assert out[0]["rerank_score"] == 1.0
+    assert rerank_rows(rows, "errors")[0]["rerank_score"] == 0.0
+
+
+def test_rerank_rows_unparsable_query_returns_no_rows():
+    from probe_spark.search.rerank import _wanted_keywords, rerank_rows
+
+    # every search lane answers an unparsable query with no rows
+    assert rerank_rows([], ")") == []
+    assert _wanted_keywords(")") == []
+
+
+def test_overlap_rerank_exact_matches_manual_recompute(rr_engine):
+    from probe_spark.search.rerank import rerank, rerank_rows
+
+    q = "error"
+    cands = rr_engine.search(q, k=50, exact=True).collect()
+    assert cands, "expected exact-match candidates"
+    manual = rerank_rows(cands, q, k=20, exact=True)
+    assert all(d["rerank_score"] == 1.0 for d in manual)
+    got = rerank(rr_engine, q, k=20, n_candidates=50, exact=True).collect()
+    assert [r["doc_id"] for r in got] == [d["doc_id"] for d in manual]
+    assert all(r["rerank_score"] == 1.0 for r in got)
