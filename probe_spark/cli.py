@@ -333,6 +333,10 @@ def cmd_stats(args) -> int:
         .collect()
     )
     stats["manifest"] = [m.asDict() for m in manifest]
+    if "://" not in args.index or args.index.startswith("file://"):
+        from probe_spark.index.verify import index_bytes
+
+        stats["bytes"] = index_bytes(args.index)
     if args.verify:
         from probe_spark.index.verify import verify_index
 
@@ -720,12 +724,17 @@ def main(argv: list[str] | None = None) -> int:
                     help="parquet sink directory (omit to print JSON lines)")
     bt.set_defaults(fn=cmd_batch)
 
-    st = sub.add_parser("stats", help="print index stats + manifest lineage")
+    st = sub.add_parser(
+        "stats",
+        help="print index stats, manifest lineage and (local indexes) "
+             "where the bytes go",
+    )
     st.add_argument("--index", required=True)
     st.add_argument("--verify", action="store_true",
                     help="distributed integrity check: segment CRCs + "
-                         "structure, manifest lineage totals, doc_id "
-                         "density (exit 1 on any failure)")
+                         "structure, posting dls against docs/, manifest "
+                         "lineage totals, doc_id density (exit 1 on any "
+                         "failure)")
     st.set_defaults(fn=cmd_stats)
 
     d = sub.add_parser(

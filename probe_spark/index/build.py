@@ -78,6 +78,14 @@ full-corpus shuffle is the docID range partition; postings are packed to
 per-merge-task memory is bounded by merge_group_bytes regardless of term
 skew ("the" at 10^12 docs becomes many independent doc-range groups);
 bucket count, partition counts, and group bytes scale via BuildConfig.
+
+PARQUET WRITE POLICY (both layouts, and every maintenance rewrite): each
+postings/ and docs/ file is zstd; in postings only ``term``, the one
+column readers filter on, keeps statistics and a dictionary; docs/ keeps
+every statistic and dictionary.  One definition,
+``parquet_write_options`` (pyarrow) / ``spark_write_options`` (parquet-mr),
+sits next to ``_SEG_FILE_SCHEMA``; tables, schemas and 256-row row groups
+are what the writer defaults produced, so older snappy indexes still open.
 """
 
 from __future__ import annotations
@@ -1000,13 +1008,15 @@ class _ShardWriter:
     file (dot-files are invisible to Spark's parquet reader if leaked) and
     renames on close, so a retried task's last successful attempt wins."""
 
-    def __init__(self, dir_path: str, name: str, schema: pa.Schema):
+    def __init__(
+        self, dir_path: str, name: str, schema: pa.Schema, **write_options
+    ):
         import pyarrow.parquet as pq
 
         os.makedirs(dir_path, exist_ok=True)
         self.final = os.path.join(dir_path, name)
         self.tmp = os.path.join(dir_path, f".{name}.tmp{os.getpid()}")
-        self.writer = pq.ParquetWriter(self.tmp, schema)
+        self.writer = pq.ParquetWriter(self.tmp, schema, **write_options)
 
     def write(self, batch: pa.RecordBatch) -> None:
         self.writer.write_table(pa.Table.from_batches([batch]))
@@ -1200,6 +1210,7 @@ class _FusedCore:
                 _strip_scheme(self.docs_dir),
                 f"part-{self.bucket:05d}.parquet",
                 docs_batch.schema,
+                **parquet_write_options("docs"),
             )
         self.docs_buf.append(docs_batch)
         self.docs_buf_rows += n
@@ -2192,6 +2203,7 @@ def _merge_partials(
         merged.repartition("kind", "bucket")
         .sortWithinPartitions("term", "salt", "min_doc")
         .write.mode("append" if append else "overwrite")
+        .options(**spark_write_options("postings"))
         .partitionBy("kind", "bucket")
         .parquet(out_path)
     )
@@ -2224,6 +2236,59 @@ _SEG_META_ARROW_SCHEMA = pa.schema(
 _SEG_FILE_SCHEMA = pa.schema(
     [f for f in _SEGMENT_ARROW_SCHEMA if f.name not in ("kind", "bucket")]
 )
+
+
+# ---------------------------------------------------------------------------
+# parquet write policy: one for every postings/ and docs/ file, whichever
+# writer (pyarrow in a task or the driver, Spark's parquet-mr) produces it
+# ---------------------------------------------------------------------------
+#
+# * zstd at the writer's default level.  Snappy barely compresses the
+#   varint streams; zstd shrinks a serve-sized index by over a third.
+# * Statistics and dictionaries only where a reader uses them.  The one
+#   postings column any reader filters on is ``term``: codec.
+#   PostingsDirectory prunes row groups on its min/max, and the Spark lane's
+#   ``term IN (...)`` pushes down to parquet-mr, which reads min/max and the
+#   dictionary.  Every other postings column is read whole or not at all,
+#   and its min/max (the varint blobs' whole payload, on short segments) and
+#   dictionary (per-segment-unique values) only cost bytes.  docs/ keeps
+#   every statistic and dictionary: readers prune on ``doc_id`` min/max
+#   (the engine's and the local front-end's footer ranges), and the rest is
+#   a few kilobytes.
+#
+# Tables, schemas and row-group sizes are untouched, and a reader learns the
+# codec from each column chunk, so indexes written under the writer
+# defaults (snappy, statistics and dictionaries everywhere) still open.
+# Intermediate files (partials/, exchange shards) keep the defaults: they
+# are deleted by the build that writes them.
+POSTINGS_FILTER_COLUMN = "term"
+
+
+def parquet_write_options(kind: str) -> dict:
+    """pyarrow ``ParquetWriter``/``write_table`` keyword arguments for a
+    ``kind`` ("postings" or "docs") file."""
+    if kind == "docs":
+        return {"compression": "zstd"}
+    return {
+        "compression": "zstd",
+        "use_dictionary": [POSTINGS_FILTER_COLUMN],
+        "write_statistics": [POSTINGS_FILTER_COLUMN],
+    }
+
+
+def spark_write_options(kind: str) -> dict:
+    """The same policy as ``DataFrameWriter.options`` for parquet-mr: a
+    per-column ``#column`` key overrides the global one."""
+    if kind == "docs":
+        return {"compression": "zstd"}
+    c = POSTINGS_FILTER_COLUMN
+    return {
+        "compression": "zstd",
+        "parquet.enable.dictionary": "false",
+        f"parquet.enable.dictionary#{c}": "true",
+        "parquet.column.statistics.enabled": "false",
+        f"parquet.column.statistics.enabled#{c}": "true",
+    }
 
 
 # a merge group's segment rows before they are split into per-kind files
@@ -2424,6 +2489,7 @@ def _make_file_merger(block_size: int, max_seg: int, out_dir: str):
                         ),
                         f"part-s{salt:05d}.parquet",
                         _SEG_FILE_SCHEMA,
+                        **parquet_write_options("postings"),
                     )
                     w.write_table(
                         segs.slice(at[0], len(at)).select(_SEG_FILE_SCHEMA.names),
@@ -2531,6 +2597,7 @@ def _merge_partials_fused(
         pq.write_table(
             _SEG_FILE_SCHEMA.empty_table(),
             os.path.join(d, "part-00000.parquet"),
+            **parquet_write_options("postings"),
         )
         return []
     # plan rows round-robin over one task per slot: a plan row is tens of
@@ -2975,7 +3042,9 @@ class IndexBuilder:
                 base, n_docs_known = _assign_and_tokenize(
                     transcripts, n_parts, cfg.blank_lines_over
                 )
-                base.write.mode("overwrite").parquet(docs_path)
+                base.write.mode("overwrite").options(
+                    **spark_write_options("docs")
+                ).parquet(docs_path)
             self._simple_manifest(index_path, build_id, "docs")
             phases_run.append("docs")
 
@@ -3128,7 +3197,9 @@ class IndexBuilder:
         )["ts"].dataType
         schema = to_arrow_schema(_docs_schema(ts_type, self.cfg.store_tokens))
         pq.write_table(
-            schema.empty_table(), os.path.join(local, "part-00000.parquet")
+            schema.empty_table(),
+            os.path.join(local, "part-00000.parquet"),
+            **parquet_write_options("docs"),
         )
 
     def _write_stats_frame(self, pdf: "pd.DataFrame", index_path: str) -> None:

@@ -4,6 +4,14 @@ Postings are stored as LEB128-style varints over doc-id deltas (sorted doc
 ids -> first id + gaps) plus a parallel varint stream of per-doc lengths
 (dl).  Runs inside Arrow-batched UDFs — no per-row Python.
 
+On disk the two streams are the postings/ columns ``docs_bin`` and
+``dl_bin``, written zstd without statistics or a dictionary (the write
+policy in build.py, ``parquet_write_options``): varints are byte-aligned
+but repetitive, which zstd compresses and snappy barely does, and no
+reader prunes on a blob.  The only statistics read here are the row-group
+``term`` min/max (``PostingsDirectory``); the codec is read per column
+chunk, so files of any writer policy decode the same.
+
 The reference has no persistent index (its postings are per-query in-memory
 maps, search_runner.rs:1581); the layout here follows the standard
 inverted-index literature (north_rule: "posting-list construction, merge,
@@ -636,6 +644,44 @@ def decode_postings(docs_bin: bytes, dl_bin: bytes):
     doc_ids = np.cumsum(gaps.astype(np.int64))
     dls = varint_decode(dl_bin).astype(np.int64)
     return doc_ids, dls
+
+
+def _row_varints(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every varint of a binary array of blobs in one pass: (values uint64,
+    row of each value, rows whose last byte leaves a varint open).  Each
+    row's last byte is read as the end of its last value, so no value
+    spans two rows, even in a corrupt blob."""
+    offs, raw = _binary_parts(arr)
+    rows = np.flatnonzero(offs[1:] > offs[:-1])
+    last = offs[rows + 1] - 1
+    open_rows = np.zeros(len(arr), bool)
+    open_rows[rows] = raw[last] >= 0x80
+    raw = raw.copy()
+    raw[last] &= 0x7F
+    ends = np.flatnonzero(raw < 0x80)
+    return (
+        varint_decode(raw.tobytes()),
+        np.searchsorted(offs, ends, "right") - 1,
+        open_rows,
+    )
+
+
+def decode_postings_rows(docs_bin, dl_bin):
+    """decode_postings over every row of two binary arrays at once, without
+    a Python loop per row: (row, doc_ids int64, dls int64) per posting, and
+    ``bad``, the rows whose blobs are not a well-formed pair (a varint left
+    open, or fewer ids than dls); bad rows contribute no postings."""
+    gaps, id_rows, id_open = _row_varints(docs_bin)
+    dls, dl_rows, dl_open = _row_varints(dl_bin)
+    n_ids = np.bincount(id_rows, minlength=len(docs_bin))
+    bad = (
+        id_open | dl_open | (n_ids != np.bincount(dl_rows, minlength=len(dl_bin)))
+    )
+    # per-row cumsum as one cumsum less each row's starting prefix
+    at = np.cumsum(gaps.astype(np.int64))
+    ids = at - np.repeat(np.r_[0, at][np.cumsum(n_ids) - n_ids], n_ids)
+    keep = ~bad[id_rows]
+    return id_rows[keep], ids[keep], dls[~bad[dl_rows]].astype(np.int64), bad
 
 
 class IndexChangedError(RuntimeError):

@@ -41,6 +41,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
 
+from probe_spark.index.build import parquet_write_options, spark_write_options
 from probe_spark.runtime import ensure_package_on_executors
 
 # tombstone sets at or below this ride query paths as a driver-resident
@@ -195,6 +196,7 @@ def vacuum(spark: SparkSession, index_path: str) -> dict:
         seg_df.mapInArrow(rewrite, out_schema)
         .write.partitionBy("kind", "bucket")
         .mode("overwrite")
+        .options(**spark_write_options("postings"))
         .parquet(tmp_post)
     )
     # fresh per-bucket lineage totals for the rewritten segments (verify
@@ -220,6 +222,7 @@ def vacuum(spark: SparkSession, index_path: str) -> dict:
     tmp_docs = os.path.join(base, f".vtmp-docs-{stamp}")
     os.makedirs(tmp_docs, exist_ok=True)
     src_dir, dst_dir = docs_dir, tmp_docs
+    docs_write = parquet_write_options("docs")
 
     def rewrite_docs(pdfs):
         import pandas as pd
@@ -237,7 +240,9 @@ def vacuum(spark: SparkSession, index_path: str) -> dict:
                 if t2.num_rows:  # drop fully-deleted shards: an empty
                     # footer has no doc_id stats and would disable the
                     # engine's footer-range pruning wholesale
-                    pqw.write_table(t2, os.path.join(dst_dir, fn))
+                    pqw.write_table(
+                        t2, os.path.join(dst_dir, fn), **docs_write
+                    )
                 kept.append(t2.num_rows)
                 dl_sum.append(
                     int(t2.column("dl").to_numpy().sum()) if t2.num_rows else 0
@@ -530,6 +535,7 @@ def merge_many(
         (
             posts.write.partitionBy("kind", "bucket")
             .mode("overwrite" if i == 0 else "append")
+            .options(**spark_write_options("postings"))
             .parquet(f"{out_path}/postings")
         )
 
@@ -542,6 +548,8 @@ def merge_many(
         for fn in sorted(os.listdir(os.path.join(b, "docs")))
         if fn.endswith(".parquet")
     ]
+
+    docs_write = parquet_write_options("docs")
 
     def move_docs(pdfs):
         import pandas as pd
@@ -564,7 +572,7 @@ def merge_many(
                         t.schema.field(idx),
                         pa.array(ids + int(o), pa.int64()),
                     )
-                    pqw.write_table(t, dst)
+                    pqw.write_table(t, dst, **docs_write)
             yield pd.DataFrame({"n": [len(pdf)]})
 
     (
@@ -775,6 +783,7 @@ def compact_index(
     stamp = str(int(time.time() * 1000))
     tmp_post = os.path.join(base, f".ctmp-postings-{stamp}")
     ensure_package_on_executors(spark)
+    postings_write = parquet_write_options("postings")
 
     def one_bucket(pdfs):
         import pandas as pd
@@ -810,6 +819,7 @@ def compact_index(
                 writer = pqw.ParquetWriter(
                     os.path.join(out_dir, "compact-00000.parquet"),
                     _SEG_FILE_SCHEMA,
+                    **postings_write,
                 )
                 terms = t.column("term")
                 n_out = 0

@@ -10,6 +10,12 @@ so verification must be a first-class distributed job, not a driver loop:
     invariants (seg_bytes == blob lengths, block offset arrays consistent,
     last block covers max_doc, min_doc <= max_doc).  No UDF, no varint
     decode, no shuffle until the per-(kind, bucket) count aggregation.
+  * ``seg_crc`` covers docs_bin only, and a dl_bin byte flip that keeps
+    the varint length keeps seg_bytes, so one Arrow pass decodes every
+    segment and joins each posting's dl with docs/'s dl for its doc id
+    (``bad_dl``: segments with a differing, missing or undecodable dl).
+    Scores read dl from the postings, so such a flip would otherwise
+    change rankings silently.
   * the per-bucket (n_terms, n_postings, bytes, checksum) aggregates are
     compared against the manifest lineage rows the build committed
     (build.py `_manifest_rows`) — this catches LOST or DUPLICATED segment
@@ -20,22 +26,116 @@ so verification must be a first-class distributed job, not a driver loop:
     price of an exactness claim and runs only under --verify.
 
 Returns a plain dict (JSON-able for the CLI) with `ok` plus per-check
-failure detail.  Reference analog: the reference trusts its local mtime
+failure detail.  ``index_bytes`` (the `stats` command's ``bytes`` block)
+says where an index directory's bytes go, from the files and parquet
+footers alone.  Reference analog: the reference trusts its local mtime
 cache (src/search/cache.rs); a distributed persistent index replaces
 trust with verification.
 """
 
 from __future__ import annotations
 
+import os
+from typing import Iterator
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession, functions as F
+
+from probe_spark.runtime import ensure_package_on_executors
+
+
+def _posting_dls(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow over postings (docs_bin, dl_bin): one (seg, doc_id, dl)
+    row per posting, ``seg`` numbering the segment uniquely across tasks.
+    A segment whose blobs do not decode to as many ids as dls yields one
+    (seg, -1, -1) row, which matches no doc."""
+    import numpy as np
+    from pyspark import TaskContext
+
+    from probe_spark.index.codec import decode_postings_rows
+
+    seg0 = TaskContext.get().partitionId() << 32
+    for batch in batches:
+        rows, ids, dls, bad = decode_postings_rows(
+            batch.column("docs_bin"), batch.column("dl_bin")
+        )
+        bad = np.flatnonzero(bad)
+        none = np.full(bad.size, -1, np.int64)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(seg0 + np.concatenate([rows, bad])),
+                pa.array(np.concatenate([ids, none])),
+                pa.array(np.concatenate([dls, none])),
+            ],
+            names=["seg", "doc_id", "dl"],
+        )
+        seg0 += batch.num_rows
+
+
+def index_bytes(path: str) -> dict:
+    """Bytes of a local index directory: ``dirs`` per top-level entry
+    (summing to ``total``) and, for postings/ and docs/, a split that sums
+    to that entry's bytes:
+
+    * ``columns``: compressed bytes per top-level column (its pages with
+      their headers and dictionary pages, over every row group and file);
+    * ``footer``: each parquet file's metadata plus its 8-byte trailer;
+    * ``magic``: each parquet file's 4 leading bytes;
+    * ``column_metadata``: the rest of each parquet file, outside its
+      column chunks and footer: the copy of each chunk's metadata that
+      pyarrow writes after the chunk, or the column and offset indexes
+      that parquet-mr writes before the footer;
+    * ``other_files``: files that are not parquet (``_SUCCESS``,
+      checksum files)."""
+    base = path.removeprefix("file://")
+    out: dict = {"total": 0, "dirs": {}}
+    for name in sorted(os.listdir(base)):
+        top = os.path.join(base, name)
+        files = (
+            [os.path.join(d, f) for d, _dirs, fs in os.walk(top) for f in fs]
+            if os.path.isdir(top)
+            else [top]
+        )
+        sizes = {f: os.path.getsize(f) for f in files}
+        out["dirs"][name] = sum(sizes.values())
+        out["total"] += out["dirs"][name]
+        if name not in ("postings", "docs"):
+            continue
+        part = {
+            "columns": {}, "footer": 0, "magic": 0, "column_metadata": 0,
+            "other_files": 0,
+        }
+        cols = part["columns"]
+        for f, size in sorted(sizes.items()):
+            if not f.endswith(".parquet"):
+                part["other_files"] += size
+                continue
+            md = pq.read_metadata(f)
+            chunks = 0
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for c in range(rg.num_columns):
+                    cc = rg.column(c)
+                    col = cc.path_in_schema.split(".")[0]
+                    cols[col] = cols.get(col, 0) + cc.total_compressed_size
+                    chunks += cc.total_compressed_size
+            tail = md.serialized_size + 8
+            part["footer"] += tail
+            part["magic"] += 4
+            part["column_metadata"] += size - 4 - chunks - tail
+        out[name] = part
+    return out
 
 
 def verify_index(spark: SparkSession, path: str) -> dict:
     """Full integrity check of an index directory; see module doc."""
     stats = spark.read.parquet(f"{path}/stats").collect()[0].asDict()
     n_docs = int(stats["n_docs"])
+    ensure_package_on_executors(spark)
 
     post = spark.read.parquet(f"{path}/postings")
+    docs = spark.read.parquet(f"{path}/docs")
 
     def _bad(cond):
         # null comparison result (e.g. empty block arrays) counts as bad
@@ -87,6 +187,18 @@ def verify_index(spark: SparkSession, path: str) -> dict:
             "bad_range",
         )
     }
+    seg_failures["bad_dl"] = int(
+        post.select("docs_bin", "dl_bin")
+        .mapInArrow(_posting_dls, "seg long, doc_id long, dl long")
+        .join(
+            docs.select("doc_id", F.col("dl").cast("long").alias("doc_dl")),
+            "doc_id",
+            "left",
+        )
+        .filter(~F.col("dl").eqNullSafe(F.col("doc_dl")))
+        .agg(F.countDistinct("seg"))
+        .collect()[0][0]
+    )
 
     # manifest comparison: latest done lineage row per (phase, bucket)
     manifest = spark.read.parquet(f"{path}/manifest").collect()
@@ -135,8 +247,7 @@ def verify_index(spark: SparkSession, path: str) -> dict:
             )
 
     docs_agg = (
-        spark.read.parquet(f"{path}/docs")
-        .agg(
+        docs.agg(
             F.count("*").alias("n"),
             F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),

@@ -39,7 +39,7 @@ from probe_spark.functions import tokenizer as tok
 from probe_spark.index.codec import PostingsDirectory
 from probe_spark.query import ast
 from probe_spark.query.plan import QueryPlan
-from probe_spark.search.ranged import bm25_idf, repaired_avgdl, tf_norm
+from probe_spark.search.ranged import repaired_avgdl, tf_norm
 
 RESULT_COLUMNS = [
     "doc_id", "score", "conv_id", "turn_idx", "role", "tool", "ts", "text",
@@ -312,7 +312,7 @@ class LocalSearcher:
         return rec(expr)
 
     def _search_disjunctive_dense(
-        self, expr, per_term: dict, k: int, with_metadata: bool
+        self, plan: QueryPlan, per_term: dict, k: int, with_metadata: bool
     ) -> "list[dict] | None":
         """Pure-disjunction top-k by dense score accumulation: one
         float64 array over the doc-id space, each term's postings
@@ -331,6 +331,7 @@ class LocalSearcher:
         route, so k >= 1 here."""
         from probe_spark.query import ast as _ast
 
+        expr = plan.expr
         e = expr
         while isinstance(e, _ast.Or):
             if not isinstance(e.right, _ast.Term):
@@ -347,11 +348,9 @@ class LocalSearcher:
         size = max(sizes)
         if size > max(2 * self.n_docs, 1 << 22):
             return None
-        idfs = {
-            t: bm25_idf(self.n_docs, v[0].size)
-            for t, v in per_term.items()
-            if v[0].size
-        }
+        idfs = plan.idfs(
+            {t: v[0].size for t, v in per_term.items()}, self.n_docs
+        )
         if not idfs:
             return []
         scores = np.zeros(size)
@@ -505,7 +504,7 @@ class LocalSearcher:
             # see _search_disjunctive_dense; parity pinned by the
             # on/off property test)
             res = self._search_disjunctive_dense(
-                expr, per_term, k, with_metadata
+                plan, per_term, k, with_metadata
             )
             if res is not None:
                 return res

@@ -132,7 +132,7 @@ def store_sidecar(
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp{os.getpid()}"
         with open(tmp, "wb") as f:
-            np.savez(f, **arrays)
+            np.savez_compressed(f, **arrays)
         os.replace(tmp, path)
     except OSError:
         pass

@@ -41,6 +41,7 @@ from probe_spark.index.build import (
     IndexBuilder,
     _make_partial_builder,
     _merge_partials,
+    spark_write_options,
 )
 
 
@@ -186,7 +187,10 @@ class StreamingIndexer:
             "doc_id", (F.col("doc_id") + F.lit(base_id)).cast("long")
         )
         # ---- stage ----------------------------------------------------
-        docs.write.mode("overwrite").parquet(docs_stage)
+        # staged docs are published as-is into docs/
+        docs.write.mode("overwrite").options(
+            **spark_write_options("docs")
+        ).parquet(docs_stage)
         batch_docs = spark.read.parquet(docs_stage).select(
             "doc_id", "dl", "tokens", "raws"
         )

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 from probe_spark.index.codec import (
     decode_blocks,
     decode_postings,
+    decode_postings_rows,
     encode_postings,
     varint_decode,
     varint_encode,
@@ -61,6 +62,40 @@ def test_encode_decode_postings_roundtrip(p):
     got_ids, got_dls = decode_postings(docs_bin, dl_bin)
     assert got_ids.tolist() == ids.tolist()
     assert got_dls.tolist() == dls.tolist()
+
+
+@given(
+    st.lists(
+        st.tuples(_postings(), st.sampled_from(["ok", "open", "extra_dl"])),
+        min_size=1,
+        max_size=4,
+    )
+)
+@settings(max_examples=50, deadline=None)
+def test_decode_postings_rows_equals_per_row_decode(segs):
+    # the batch decoder of verify's dl check: well-formed rows decode as
+    # decode_postings does; a varint left open at a row's end or a count
+    # mismatch flags that row alone, its neighbours still decode
+    import pyarrow as pa
+
+    docs, dls, want = [], [], []
+    for (ids, dl, block), fault in segs:
+        d, l, *_ = encode_postings(ids, dl, block=block)
+        if fault == "open":
+            d = d[:-1] + bytes([d[-1] | 0x80])
+        elif fault == "extra_dl":
+            l += b"\x05"
+        docs.append(d)
+        dls.append(l)
+        want.append(fault == "ok")
+    rows, ids, got_dls, bad = decode_postings_rows(
+        pa.array(docs, pa.binary()), pa.array(dls, pa.binary())
+    )
+    assert (~bad).tolist() == want
+    for r in range(len(segs)):
+        exp = decode_postings(docs[r], dls[r]) if want[r] else ([], [])
+        assert ids[rows == r].tolist() == list(exp[0])
+        assert got_dls[rows == r].tolist() == list(exp[1])
 
 
 @given(_postings(), st.data())

@@ -56,6 +56,43 @@ class TestFormatVersion:
         with pytest.raises(ValueError, match="format_version"):
             LocalSearcher(idx)
 
+    def test_previous_version_refused_on_every_lane(self, spark, tmp_path):
+        # an index one layout version back: the Spark lane, the local
+        # front-end and a replica's Future each refuse it with the same
+        # instruction instead of mis-decoding it
+        import glob
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from probe_spark.search.engine import SearchEngine
+        from probe_spark.search.local import LocalSearcher
+        from probe_spark.search.replicas import LocalReplicaPool
+
+        idx = str(tmp_path / "v6idx")
+        IndexBuilder(spark, BuildConfig(n_buckets=4)).build(
+            transcripts_df(spark, 10, seed=3), idx
+        )
+        assert LocalSearcher(idx).search("error", k=3)
+        f = glob.glob(f"{idx}/stats/*.parquet")[0]
+        t = pq.read_table(f)
+        i = t.schema.get_field_index("format_version")
+        t = t.set_column(
+            i, t.schema.field(i), pa.array([6], t.schema.field(i).type)
+        )
+        pq.write_table(t, f)
+        refusal = "format_version 6, .* rebuild the index"
+        with pytest.raises(ValueError, match=refusal):
+            SearchEngine(spark, idx)
+        with pytest.raises(ValueError, match=refusal):
+            LocalSearcher(idx)
+        pool = LocalReplicaPool(idx, 1)
+        try:
+            with pytest.raises(ValueError, match=refusal):
+                pool.submit("error", 3).result(timeout=60)
+        finally:
+            pool.close()
+
 
 class TestKillResume:
     def test_kill_after_docs_then_resume_identical(

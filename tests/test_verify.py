@@ -1,6 +1,7 @@
 """Index integrity verification (`index/verify.py`, CLI `stats --verify`):
 a clean build verifies green; a flipped blob byte, a doctored manifest
-total, and a deleted docs row are each detected."""
+total, a deleted docs row and a dl byte flip that keeps every length are
+each detected."""
 
 from __future__ import annotations
 
@@ -127,3 +128,38 @@ class TestVerifyIndex:
         rep = verify_index(spark, bad)
         assert not rep["ok"]
         assert not rep["docs_ok"]
+
+    def test_dl_bit_flip_detected(self, spark, idx, tmp_path):
+        # seg_crc covers docs_bin only and flipping bit 0 keeps every
+        # varint's length, so seg_bytes, the CRC and the lineage totals all
+        # still agree: only comparing decoded dls with docs/ sees the flip
+        import shutil
+
+        bad = str(tmp_path / "dl_idx")
+        shutil.copytree(idx, bad)
+        f = sorted(
+            glob.glob(os.path.join(bad, "postings", "kind=tok", "**",
+                                   "*.parquet"), recursive=True)
+        )[0]
+        t = pq.read_table(f)
+        dls = t.column("dl_bin").to_pylist()
+        b = bytearray(dls[0])
+        b[0] ^= 0x01
+        dls[0] = bytes(b)
+        t = t.set_column(
+            t.schema.get_field_index("dl_bin"),
+            pa.field("dl_bin", pa.binary(), False),
+            pa.array(dls, pa.binary()),
+        )
+        pq.write_table(t, f)
+        rep = verify_index(spark, bad)
+        assert not rep["ok"]
+        assert rep["segment_failures"]["bad_dl"] == 1
+        assert {
+            k: v for k, v in rep["segment_failures"].items() if k != "bad_dl"
+        } == {
+            "bad_crc": 0, "bad_bytes": 0, "bad_last_block": 0,
+            "bad_offsets": 0, "bad_range": 0,
+        }
+        assert rep["manifest_mismatches"] == []
+        assert rep["docs_ok"]
